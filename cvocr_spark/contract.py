@@ -39,6 +39,20 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def _shipped(
+    query: Callable[[SparkSession, str], DataFrame],
+) -> Callable[[SparkSession, str], DataFrame]:
+    """``query`` with the package shipped to the Python workers first —
+    for queries that reach connected components, whose small-graph
+    solve runs as a mapInArrow stage."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        ensure_shipped(spark)
+        return query(spark, sf_dir)
+
+    return run
+
+
 # --------------------------------------------------------------------------
 # flagship extraction queries (kernel end-to-end, oracle = identity)
 # --------------------------------------------------------------------------
@@ -356,21 +370,21 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
         # union-find graft, ergroup.cpp:47-64,163-171); two injected dup
         # generations give >2-member components the propagation must
         # collapse transitively
-        lambda s, d: dedup.dedup_clusters(
+        _shipped(lambda s, d: dedup.dedup_clusters(
             dedup.with_injected_dups(_t(s, d, "documents"), generations=2),
             dedup.minhash_lsh_pairs(
                 dedup.with_injected_dups(_t(s, d, "documents"), generations=2)
             ),
-        ),
+        )),
         dedup.dedup_clusters_sql(corpus=dedup.injected_dups_sql(generations=2)),
     )
     c["dedup_clusters_verified"] = (
         # the production default: LSH -> exact-Jaccard verify -> CC ->
         # keepers (clustering raw candidates chains unrelated docs —
         # measured on the 200k soak)
-        lambda s, d: dedup.dedup_clusters_verified(
+        _shipped(lambda s, d: dedup.dedup_clusters_verified(
             dedup.with_injected_dups(_t(s, d, "documents"), generations=2)
-        ),
+        )),
         dedup.dedup_clusters_verified_sql(
             corpus=dedup.injected_dups_sql(generations=2)
         ),
@@ -403,6 +417,7 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
         # curate_corpus docstring).
         from .plans.curate import curate_corpus
 
+        ensure_shipped(s)
         docs = dedup.with_injected_dups(
             _t(s, d, "documents").select("doc_id", "text")
         )
@@ -496,7 +511,7 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
     c["embedding_dedup_clusters"] = (
         # vector-modality dedup to keepers (LSH pairs -> CC), same
         # resolution story as the token-space dedup_clusters
-        lambda s, d: similarity.embedding_dedup_clusters(_t(s, d, "embeddings")),
+        _shipped(lambda s, d: similarity.embedding_dedup_clusters(_t(s, d, "embeddings"))),
         similarity.embedding_dedup_clusters_sql(),
     )
 

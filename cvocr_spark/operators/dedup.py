@@ -22,10 +22,13 @@ an exact DuckDB oracle.  Scale design:
     exact token-set Jaccard, linear in candidates, never a token
     self-join.  ``minhash_verified_dups`` wires LSH -> verify.
   * clusters         — ``dedup_clusters`` resolves candidate pairs into
-    duplicate CLUSTERS by iterative min-label propagation (distributed
-    connected components) and marks one keeper per cluster: the graft
-    of the reference's union-find region grouping
+    duplicate CLUSTERS (connected components) and marks one keeper per
+    cluster: the graft of the reference's union-find region grouping
     (ergroup.cpp:47-64 merge loop, ergroup.cpp:163-171 find/compress).
+    The edge count picks the engine: up to ``SMALL_GRAPH_EDGES``
+    directed edges the whole graph is solved by ONE vectorized numpy
+    union-find task (one Arrow stage, no per-round Spark actions);
+    above it, distributed min-label propagation runs in rounds.
     Pairs alone don't dedup a corpus; keepers do.
   * simhash          — per-row 16-bit signature for the oracle-exact
     demo; the production-width 64-bit variant with Hamming bucketing
@@ -45,6 +48,7 @@ import re
 import shutil
 import tempfile
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -408,10 +412,102 @@ def minhash_verified_dups_sql(corpus: str = "documents", threshold: float = 0.8)
 def connected_components(
     pairs: DataFrame, max_iter: int = 25, checkpoint_dir: str | None = None
 ) -> DataFrame:
-    """Distributed connected components over an undirected pair list.
-    Returns (node, label) with label = min node id in the component.
-    See ``_connected_components_rounds`` for the algorithm."""
-    return _connected_components_rounds(pairs, max_iter, checkpoint_dir)[0]
+    """Connected components over an undirected pair list.  Returns
+    (node, label) with label = min node id in the component, one row
+    per node that appears in a pair (pairs with a NULL end are dropped).
+
+    Size rule: the directed edge set is materialized and counted ONCE.
+    Up to ``_SMALL_GRAPH_EDGES`` directed edges the whole graph is one
+    vectorized numpy union-find task (``_union_find_labels``): at that
+    size a distributed round is a single task plus Spark's fixed
+    scheduling cost, so per-round actions cost more than the graph
+    computes.  Larger graphs run the distributed rounds
+    (``_connected_components_rounds``).  ``max_iter`` and
+    ``checkpoint_dir`` (durable round resume points) apply to the
+    rounds path only; the one-task solve has no rounds to resume."""
+    both, m, fp = _directed_edges(pairs)
+    if m <= _SMALL_GRAPH_EDGES:
+        # coalesce, not repartition: the edges are already materialized,
+        # so one task can read every partition without a shuffle
+        return both.coalesce(1).mapInArrow(_union_find_batches, "node bigint, label bigint")
+    return _label_rounds(both, m, fp, max_iter, checkpoint_dir)[0]
+
+
+# directed-edge count up to which connected components runs as one task
+_SMALL_GRAPH_EDGES = 500_000
+
+
+def _directed_edges(pairs: DataFrame) -> tuple[DataFrame, int, str]:
+    """Both directions of every pair, distinct, NULL ends dropped,
+    behind a lazy checkpoint — plus the edge count and an edge-set
+    fingerprint (count + decimal sum of ``xxhash64(src, dst)``) from
+    ONE aggregate, the action that also materializes the checkpoint.
+    Both directions come from ONE scan of the (possibly expensive)
+    upstream pair pipeline — a two-branch union would evaluate it
+    twice."""
+    both = (
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
+                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
+        .dropna()
+        .distinct()
+        # lazy checkpoint: every consumer (count, one-task solve, or
+        # the rounds path's self-loop branch) reads the materialized
+        # edges instead of re-running the upstream pair pipeline
+        .localCheckpoint(eager=False)
+    )
+    r = both.agg(
+        F.count("*").alias("m"),
+        F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    return both, r["m"], f"{r['m']}:{r['h']}"
+
+
+def _union_find_labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Vectorized union-find over int64 edge arrays: returns (nodes,
+    labels) with label = min node id of the node's component.  Nodes
+    are indexed by ``np.unique`` (sorted, so the min index of a
+    component is its min id).  Each pass hooks both endpoint roots of
+    every still-split edge to the smaller root (``np.minimum.at``) and
+    then pointer-jumps every node to its tree root; it stops when every
+    edge has the same root on both ends.  Hooks only ever point to a
+    smaller index, so the forest stays acyclic, and each pass removes
+    at least one root per unfinished component."""
+    nodes, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    u, v = idx[: len(src)], idx[len(src):]
+    root = np.arange(len(nodes))
+    while True:
+        ru, rv = root[u], root[v]
+        split = ru != rv
+        if not split.any():
+            return nodes, nodes[root]
+        ru, rv = ru[split], rv[split]
+        lo = np.minimum(ru, rv)
+        np.minimum.at(root, ru, lo)
+        np.minimum.at(root, rv, lo)
+        jumped = root[root]
+        while not np.array_equal(jumped, root):
+            root, jumped = jumped, jumped[jumped]
+
+
+def _union_find_batches(batches):
+    """mapInArrow body of the one-task solve: every (src, dst) batch of
+    the single partition -> one (node, label) batch."""
+    import pyarrow as pa
+
+    cols = [(b.column("src").to_numpy(), b.column("dst").to_numpy()) for b in batches]
+    if not cols:
+        return
+    nodes, labels = _union_find_labels(
+        np.concatenate([s for s, _ in cols]), np.concatenate([d for _, d in cols])
+    )
+    yield pa.RecordBatch.from_arrays([pa.array(nodes), pa.array(labels)], ["node", "label"])
 
 
 # stats clamp cadence: inherited sizeInBytes digits double per round
@@ -438,10 +534,30 @@ def _completed_clamp_rounds(path: str) -> list[int]:
     return out
 
 
+def _clear_clamp_rounds(path: str) -> None:
+    """Delete every ``round_<k>`` frame under ``path``, torn or not."""
+    for n in os.listdir(path):
+        if re.fullmatch(r"round_\d+", n):
+            shutil.rmtree(os.path.join(path, n), ignore_errors=True)
+
+
 def _connected_components_rounds(
     pairs: DataFrame, max_iter: int = 25, checkpoint_dir: str | None = None
 ) -> tuple[DataFrame, int]:
-    """Min-label propagation WITH POINTER DOUBLING — each round fuses
+    """The distributed rounds engine over a pair list of ANY size —
+    ``connected_components`` routes only graphs above
+    ``_SMALL_GRAPH_EDGES`` directed edges here; tests and the soak's
+    kill/resume demo call it directly.  ``checkpoint_dir`` holds the
+    durable round frames (see ``_label_rounds``)."""
+    return _label_rounds(*_directed_edges(pairs), max_iter, checkpoint_dir)
+
+
+def _label_rounds(
+    both: DataFrame, m: int, fp: str, max_iter: int, checkpoint_dir: str | None
+) -> tuple[DataFrame, int]:
+    """Min-label propagation WITH POINTER DOUBLING over the directed
+    edge set ``both`` (``m`` edges, fingerprint ``fp``, from
+    ``_directed_edges``) — each round fuses
 
       * propagate: label <- min of neighbors' labels
         (the union-find merge loop of the reference, ergroup.cpp:47-64,
@@ -480,17 +596,19 @@ def _connected_components_rounds(
     round 0 — the same crash-recovery contract as the extraction
     path's per-bucket manifests (tableio.py), applied to the one
     multi-round iterative operator: a crawl-scale CC run that dies at
-    round 12 of 15 must not redo 12 full-edge joins.
+    round 12 of 15 must not redo 12 full-edge joins.  Each frame
+    carries the edge-set fingerprint ``fp`` in a ``_FINGERPRINT`` file
+    written after the frame commits; frames whose fingerprint is
+    missing or differs are cleared and the run starts from round 0.
 
     Returns (labels, rounds_run) — the round count is asserted
     O(log depth) on an injected chain in tests/test_dedup.py; resume
     is asserted to converge from the restored round, with labels
     identical to the from-scratch run.
     """
+    spark = both.sparkSession
     own_dir = checkpoint_dir is None
     clamp_dir = checkpoint_dir or tempfile.mkdtemp(prefix="cvocr_cc_")
-    # both edge directions from ONE scan of the (possibly expensive)
-    # upstream pair pipeline — a two-branch union would evaluate it twice.
     # SELF-LOOPS are appended so the per-round propagation is ONE join +
     # ONE aggregate: min over {self, neighbors} of the shortcut labels
     # equals the old least(label, coalesce(nbr_min, label)) without the
@@ -500,40 +618,15 @@ def _connected_components_rounds(
     # requirements and the per-round plan re-shuffles and re-sorts only
     # the (much narrower) label side, never the edge set (guide §2.4:
     # establish the partitioning once, reuse it every round).
-    both = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("src"), F.col("b").alias("dst")),
-                    F.struct(F.col("b").alias("src"), F.col("a").alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        # lazy checkpoint: the self-loop branch below references this
-        # frame a second time, and without the checkpoint each branch
-        # would re-run the (possibly expensive) upstream pair pipeline
-        .localCheckpoint(eager=False)
-    )
     loops = both.select("src").distinct().withColumn("dst", F.col("src"))
     # SCALE-ADAPTIVE partitioning (guide §2.2): size the persisted edge
-    # table from the edge count, not from the core count.  A small
-    # graph (fixed-overhead regime — per-round wall is action latency,
-    # not compute) iterates in single-task rounds (A/B: ~10% off the
-    # warm wall, more cold); past the small-graph threshold the width
-    # floors at the cluster parallelism and grows with the data
-    # (~2M directed edges per partition), so a crawl-scale graph uses
-    # every core AND gets as many partitions as its bytes demand.  The
-    # count also materializes the checkpointed edge set once, before
-    # the loop.
-    m = both.count()
-    sc = pairs.sparkSession.sparkContext
-    n_part = (
-        1
-        if m <= 500_000
-        else max(sc.defaultParallelism, -(-m // 2_000_000))
-    )
+    # table from the edge count, not from the core count — the width
+    # floors at the cluster parallelism and grows with the data (~2M
+    # directed edges per partition), so a crawl-scale graph uses every
+    # core AND gets as many partitions as its bytes demand.  (Graphs
+    # small enough for one task take the one-task solve in
+    # ``connected_components`` instead.)
+    n_part = max(spark.sparkContext.defaultParallelism, -(-m // 2_000_000))
     edges = (
         both.unionByName(loops)
         .repartition(n_part, "dst")
@@ -549,14 +642,20 @@ def _connected_components_rounds(
     rounds = 0
     if not own_dir:
         done = _completed_clamp_rounds(clamp_dir)
+        if any(read_fingerprint(spark, f"{clamp_dir}/round_{r}") != fp for r in done):
+            # frames from a DIFFERENT edge set (or a kill between a
+            # frame's commit and its fingerprint write): min propagation
+            # never raises a label, so a foreign low label would survive
+            # to the output — start over from round 0 instead
+            _clear_clamp_rounds(clamp_dir)
+            done = []
         if done:
             # resume: restore the newest completed round's labels onto
             # the CURRENT node set (left join + coalesce keeps any node
-            # the restored frame lacks at its own id — correct only
-            # when the pair list is unchanged, which a deterministic
-            # upstream pipeline guarantees)
+            # the restored frame lacks at its own id); the fingerprint
+            # check above guarantees the frame came from this edge set
             rounds = max(done)
-            restored = labels.sparkSession.read.parquet(
+            restored = spark.read.parquet(
                 f"{clamp_dir}/round_{rounds}"
             ).withColumnRenamed("label", "r_label")
             labels = (
@@ -625,7 +724,8 @@ def _connected_components_rounds(
         # on a cluster, point checkpoint_dir at the shared FS.
         path = f"{clamp_dir}/round_{r}"
         lbl.write.mode("overwrite").parquet(path)
-        return lbl.sparkSession.read.parquet(path)
+        write_fingerprint(spark, path, fp)
+        return spark.read.parquet(path)
 
     prev_sum = labels.agg(_label_sum).collect()[0][0]
     # TWO rounds per driver action (r6 optimization): at bench scale the
@@ -684,7 +784,8 @@ def dedup_clusters(
     region grouping (ergroup.cpp:47-64,163-171) — there merging
     overlapping boxes, here merging near-duplicate documents.
     ``checkpoint_dir`` makes the label iteration resumable after a
-    kill (see _connected_components_rounds)."""
+    kill when the graph is large enough for the rounds path (see
+    ``connected_components``)."""
     labels = connected_components(pairs, checkpoint_dir=checkpoint_dir).withColumnRenamed(
         "node", "doc_id"
     )
@@ -791,6 +892,10 @@ def connected_components_incremental(
     Equivalence to the from-scratch run is asserted in
     tests/test_dedup.py.
 
+    The merged edge set takes the same size rule as
+    ``connected_components`` (one-task solve or rounds;
+    ``checkpoint_dir`` applies to the rounds path only).
+
     Returns the updated full label frame (same shape as
     ``connected_components``) — feed it back as ``prev_labels`` for
     the next batch."""
@@ -798,7 +903,7 @@ def connected_components_incremental(
         F.col("node").alias("a"), F.col("label").alias("b")
     )
     merged = new_pairs.select("a", "b").unionByName(label_edges)
-    labels, _ = _connected_components_rounds(merged, checkpoint_dir=checkpoint_dir)
+    labels = connected_components(merged, checkpoint_dir=checkpoint_dir)
     # nodes that were singletons before AND untouched by new pairs do
     # not appear in any edge — restore them (label = own id)
     singletons = prev_labels.select("node").join(
@@ -960,22 +1065,25 @@ def _fingerprint_path(spark, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def dedup_index_fingerprint(spark, path: str) -> str | None:
-    """The fingerprint recorded at build time, or None (pre-r6 index
-    or torn build) — None never matches, forcing a rebuild."""
+def read_fingerprint(spark, path: str) -> str | None:
+    """The fingerprint recorded under ``path`` (a dedup index or a CC
+    round frame), or None (never written, or a torn write) — None
+    never matches, forcing a rebuild."""
     fs, p = _fingerprint_path(spark, path)
     if not fs.exists(p):
         return None
     stream = fs.open(p)
     try:
-        out = bytearray()
-        b = stream.read()
-        while b != -1:
-            out.append(b)
-            b = stream.read()
-        return out.decode("utf-8").strip()
+        return bytes(stream.readAllBytes()).decode("utf-8").strip()
     finally:
         stream.close()
+
+
+def write_fingerprint(spark, path: str, fp: str) -> None:
+    fs, p = _fingerprint_path(spark, path)
+    out = fs.create(p, True)
+    out.write(bytearray(fp.encode("utf-8")))
+    out.close()
 
 
 def build_dedup_index(
@@ -1017,10 +1125,7 @@ def build_dedup_index(
     _safe_banded(_banded(existing), max_bucket).write.mode("overwrite").partitionBy(
         "band_id"
     ).parquet(f"{path}/bands")
-    ffs, fp_path = _fingerprint_path(spark, path)
-    out = ffs.create(fp_path, True)
-    out.write(bytearray(corpus_fingerprint(existing).encode("utf-8")))
-    out.close()
+    write_fingerprint(spark, path, corpus_fingerprint(existing))
     fs.create(marker, True).close()
 
 

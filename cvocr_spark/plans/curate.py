@@ -124,7 +124,7 @@ def curate_corpus(
         fp = _dd.corpus_fingerprint(survivors)
         if (
             not _dd.dedup_index_ready(spark, dedup_index_path)
-            or _dd.dedup_index_fingerprint(spark, dedup_index_path) != fp
+            or _dd.read_fingerprint(spark, dedup_index_path) != fp
         ):
             _dd.build_dedup_index(survivors, dedup_index_path)
         pairs = _dd.minhash_verified_dups_indexed(

@@ -187,12 +187,13 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from cvocr_spark.operators import dedup
-    from cvocr_spark.session import build_session
+    from cvocr_spark.session import build_session, ensure_shipped
 
     spark = build_session(
         app="cvocr-dedup-soak", master=f"local[{CPUS}]", shuffle_partitions=CPUS * 2
     )
     spark.sparkContext.setLogLevel("ERROR")
+    ensure_shipped(spark)  # connected components may run Python on executors
 
     base = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     n_families = base.count()
@@ -226,9 +227,12 @@ def main() -> None:
     # CC kill/resume at soak scale (VERDICT r3 #9): reproduce the
     # on-disk state of a run SIGKILLED after its round-KILL_AT clamp
     # completed (max_iter cap leaves exactly the clamp frames a kill
-    # leaves — parquet + _SUCCESS per 4th round), then resume from the
-    # same checkpoint_dir with the same deterministic pair list and
-    # demand keepers IDENTICAL to the uninterrupted run above.
+    # leaves — parquet + _SUCCESS + _FINGERPRINT per 4th round), then
+    # resume from the same checkpoint_dir with the same deterministic
+    # pair list and demand keepers IDENTICAL to the uninterrupted run
+    # above.  Both halves call the rounds engine directly: a graph this
+    # size may take the one-task solve in dedup_clusters, which has no
+    # rounds to resume.
     resume_demo = None
     if os.environ.get("CVOCR_SOAK_RESUME_DEMO", "1") != "0":
         import shutil
@@ -243,17 +247,22 @@ def main() -> None:
         )
         t_killed = time.perf_counter() - t3
         t3 = time.perf_counter()
-        resumed = dedup.dedup_clusters(corpus, pairs, checkpoint_dir=ckpt).persist()
-        t_resumed = time.perf_counter() - t3
-        diff = (
-            clusters.filter("is_keeper").select("doc_id")
-            .exceptAll(resumed.filter("is_keeper").select("doc_id")).count()
-            + resumed.filter("is_keeper").select("doc_id")
-            .exceptAll(clusters.filter("is_keeper").select("doc_id")).count()
+        resumed_labels, rounds_resumed = dedup._connected_components_rounds(
+            pairs, checkpoint_dir=ckpt
         )
+        # keepers: every doc that is not a non-root node of a component
+        resumed = corpus.select("doc_id").join(
+            resumed_labels.filter("node != label").select(F.col("node").alias("doc_id")),
+            "doc_id",
+            "left_anti",
+        ).persist()
+        t_resumed = time.perf_counter() - t3
+        keepers = clusters.filter("is_keeper").select("doc_id")
+        diff = keepers.exceptAll(resumed).count() + resumed.exceptAll(keepers).count()
         resume_demo = {
             "kill_at_round": kill_at,
             "rounds_before_kill": rounds_killed,
+            "rounds_after_resume": rounds_resumed,
             "killed_wall_sec": round(t_killed, 1),
             "resumed_wall_sec": round(t_resumed, 1),
             "keepers_match_scratch": diff == 0,

@@ -11,6 +11,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import numpy as np  # noqa: E402
+from hypothesis import example, given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from cvocr_spark.operators import dedup  # noqa: E402
@@ -148,6 +151,115 @@ def test_connected_components_huge_ids_no_ansi_overflow(spark):
         base + 7: base + 7,
         base + 8: base + 7,
     }
+
+
+def test_connected_components_resume_ignores_frames_of_other_edge_set(spark, tmp_path):
+    """Round frames in checkpoint_dir written for a DIFFERENT pair list
+    must not be restored (ROADMAP open item 4): a 64-edge chain leaves
+    round_4 behind, and a later run over the pairs (i, i+1000) with the
+    same dir used to return all 128 labels wrong — the chain's label 0
+    survived min propagation.  The stale frames are cleared instead."""
+    ckpt = str(tmp_path / "cc_shared")
+    chain = spark.createDataFrame([(i, i + 1) for i in range(64)], "a bigint, b bigint")
+    dedup._connected_components_rounds(chain, checkpoint_dir=ckpt)
+    assert dedup._STATS_CLAMP_EVERY in dedup._completed_clamp_rounds(ckpt)
+    # the frame records its own edge set, so a rerun over `chain` resumes
+    assert dedup.read_fingerprint(
+        spark, f"{ckpt}/round_{dedup._STATS_CLAMP_EVERY}"
+    ) == dedup._directed_edges(chain)[2]
+
+    other = spark.createDataFrame(
+        [(i, i + 1000) for i in range(1, 65)], "a bigint, b bigint"
+    )
+    labels_df, _ = dedup._connected_components_rounds(other, checkpoint_dir=ckpt)
+    labels = {r["node"]: r["label"] for r in labels_df.collect()}
+    want = {n: i for i in range(1, 65) for n in (i, i + 1000)}
+    assert labels == want
+    assert dedup._completed_clamp_rounds(ckpt) == []
+
+
+_HUGE = 1 << 62
+
+
+def _cc_rows(df) -> list[tuple[int, int]]:
+    return sorted((r["node"], r["label"]) for r in df.collect())
+
+
+def _pairs_df(spark, pairs):
+    return spark.createDataFrame(pairs, "a bigint, b bigint")
+
+
+@st.composite
+def _pair_lists(draw):
+    """Small pair lists over ids near 0 or near 2^62: repeats, reversed
+    pairs and a == b pairs arise from the narrow id range."""
+    base = draw(st.sampled_from([0, _HUGE - 16]))
+    ident = st.integers(0, 30).map(lambda i: base + i)
+    return draw(st.lists(st.tuples(ident, ident), min_size=1, max_size=40))
+
+
+@settings(max_examples=200, deadline=None)
+@given(st.lists(st.tuples(st.integers(-5, 60), st.integers(-5, 60)), min_size=1, max_size=80))
+def test_union_find_labels_matches_sequential_union_find(edges):
+    """The vectorized hook/pointer-jump passes against the plain
+    one-edge-at-a-time union-find loop (no Spark)."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    nodes, labels = dedup._union_find_labels(
+        np.array([a for a, _ in edges], dtype=np.int64),
+        np.array([b for _, b in edges], dtype=np.int64),
+    )
+    assert dict(zip(nodes.tolist(), labels.tolist())) == {x: find(x) for x in parent}
+
+
+@settings(max_examples=6, deadline=None)
+@given(_pair_lists(), st.integers(0, 40))
+@example([(i, i + 1) for i in range(33)], 16)  # chain: several rounds
+@example([(_HUGE, _HUGE + i) for i in range(1, 25)], 12)  # star at 2^62
+@example([(1, 2), (2, 1), (1, 2), (3, 3), (4, 3), (3, 4), (5, 5)], 3)
+@example([(1, None), (None, None), (None, 2), (2, 3)], 2)  # NULL ends dropped
+def test_one_task_solve_equals_rounds(spark, pairs, cut):
+    """The one-task union-find (``connected_components`` on a small
+    graph) returns exactly the rows of the distributed rounds engine,
+    and ``connected_components_incremental`` fed labels from EITHER
+    path reaches the from-scratch answer."""
+    df = _pairs_df(spark, pairs)
+    one_task = dedup.connected_components(df)
+    assert "MapInArrow" in one_task._jdf.queryExecution().executedPlan().toString()
+    want = _cc_rows(dedup._connected_components_rounds(df)[0])
+    assert _cc_rows(one_task) == want
+
+    old, new = _pairs_df(spark, pairs[:cut]), _pairs_df(spark, pairs[cut:])
+    for prev in (dedup.connected_components(old), dedup._connected_components_rounds(old)[0]):
+        assert _cc_rows(dedup.connected_components_incremental(prev, new)) == want
+
+
+def test_dedup_clusters_small_graph_job_count(spark):
+    """A small pair list resolves with a constant handful of Spark
+    jobs — the edge count/fingerprint aggregate, not one action per
+    propagation round (the rounds engine launched 59 jobs for this
+    depth-64 chain).  Counted via statusTracker in a job group."""
+    sc = spark.sparkContext
+    docs = _docs(spark, [(i, "x") for i in range(100)])
+    pairs = _pairs_df(spark, [(i, i + 1) for i in range(64)])
+    group = "cc-small-graph-job-count"
+    sc.setJobGroup(group, "dedup_clusters over a small pair list")
+    try:
+        clusters = dedup.dedup_clusters(docs, pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 5, n_jobs
+    rows = {r["doc_id"]: r["cluster_id"] for r in clusters.collect()}
+    assert rows == {i: 0 if i <= 64 else i for i in range(100)}
 
 
 def test_dedup_incremental_rerun_yields_zero_new_keepers(spark):
