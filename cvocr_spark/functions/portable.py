@@ -276,7 +276,8 @@ def qcosine_expr(dot: str, na: str, nb: str) -> str:
 
 # -- seeded LSH hyperplanes (similarity-search scale path) -------------------
 # Plane coefficients derive from md5 in PYTHON once (hashlib == SQL md5),
-# then are embedded as exact float literals in both dialects.
+# then are embedded as exact x1000 integer literals in both dialects
+# (similarity._planes_int).
 
 def lsh_planes(n_planes: int, dim: int, seed: str = "lshplane") -> list[list[float]]:
     import hashlib
@@ -291,10 +292,3 @@ def lsh_planes(n_planes: int, dim: int, seed: str = "lshplane") -> list[list[flo
         planes.append(row)
     return planes
 
-
-def plane_literal_spark(row: list[float]) -> str:
-    return "array(" + ", ".join(f"cast({v!r} as double)" for v in row) + ")"
-
-
-def plane_literal_duck(row: list[float]) -> str:
-    return "[" + ", ".join(f"cast({v!r} as double)" for v in row) + "]"

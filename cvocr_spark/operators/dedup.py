@@ -25,14 +25,13 @@ an exact DuckDB oracle.  Scale design:
     duplicate CLUSTERS (connected components) and marks one keeper per
     cluster: the graft of the reference's union-find region grouping
     (ergroup.cpp:47-64 merge loop, ergroup.cpp:163-171 find/compress).
-    The edge count picks the engine: up to ``SMALL_GRAPH_EDGES``
+    The edge count picks the engine: up to ``_SMALL_GRAPH_EDGES``
     directed edges the whole graph is solved by ONE vectorized numpy
     union-find task (one Arrow stage, no per-round Spark actions);
     above it, distributed min-label propagation runs in rounds.
     Pairs alone don't dedup a corpus; keepers do.
-  * simhash          — per-row 16-bit signature for the oracle-exact
-    demo; the production-width 64-bit variant with Hamming bucketing
-    lives in simhash64.py.
+  * simhash          — the production-width 64-bit signature with
+    Hamming bucketing lives in simhash64.py.
 
 For a non-trivial fixture on synthetic data (which has no natural
 dups), `with_injected_dups` unions in exact copies with doc_id+offset —
@@ -43,8 +42,6 @@ resolution has >2-member components to collapse.
 
 from __future__ import annotations
 
-import os
-import re
 import shutil
 import tempfile
 
@@ -52,6 +49,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import durable
 from ..functions import portable as P
 
 DUP_OFFSET = 100000
@@ -145,19 +143,25 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     return _minhash_sigs_flat(docs, MINHASH_K, off2=15, width=14)
 
 
-def _banded(docs: DataFrame) -> DataFrame:
-    sigs = minhash_signatures(docs)
-    band_cols = []
-    for b in range(BANDS):
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.concat_ws("_", f"mh{2 * b}", f"mh{2 * b + 1}").alias("band_val"),
-            )
+def _band(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
+    """(doc_id, band_id, band_val) from (doc_id, mh0..): band ``b`` is
+    minhashes ``b*rows .. b*rows+rows-1`` joined with '_'.  This is
+    the raw (unguarded) band relation that every probe below and every
+    stored band table holds."""
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.concat_ws("_", *[f"mh{b * rows + r}" for r in range(rows)]).alias("band_val"),
         )
+        for b in range(bands)
+    ]
     return sigs.select(
         "doc_id", F.explode(F.array(*band_cols)).alias("band")
     ).select("doc_id", "band.band_id", "band.band_val")
+
+
+def _banded(docs: DataFrame) -> DataFrame:
+    return _band(minhash_signatures(docs), BANDS, MINHASH_K // BANDS)
 
 
 def _bucket_sizes(banded: DataFrame) -> DataFrame:
@@ -191,8 +195,13 @@ def minhash_lsh_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFram
     guard): a degenerate band value (10k identical boilerplate docs)
     would otherwise produce a single O(n^2) task at crawl scale.
     Skipped buckets are observable via ``lsh_skipped_buckets``."""
-    safe = _safe_banded(_banded(docs), max_bucket)
-    a, b = safe.alias("a"), safe.alias("b")
+    return _self_candidates(_safe_banded(_banded(docs), max_bucket))
+
+
+def _self_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (a, b), a < b, of docs sharing a band bucket — the LSH
+    self-join over an already hot-bucket-guarded band frame."""
+    a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
             b,
@@ -202,6 +211,31 @@ def minhash_lsh_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFram
         )
         .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
         .distinct()
+    )
+
+
+def _cross_candidates(nb: DataFrame, eb: DataFrame) -> DataFrame:
+    """Distinct (a = new doc, b = existing doc) sharing a band bucket —
+    the new-vs-existing probe over two guarded band frames."""
+    return (
+        nb.alias("n")
+        .join(
+            eb.alias("e"),
+            (F.col("n.band_id") == F.col("e.band_id"))
+            & (F.col("n.band_val") == F.col("e.band_val")),
+        )
+        .select(F.col("n.doc_id").alias("a"), F.col("e.doc_id").alias("b"))
+        .distinct()
+    )
+
+
+def _stored_bands(spark, path: str) -> DataFrame:
+    """The guarded band table ``build_dedup_index`` wrote under
+    ``path``.  Explicit schema: an EMPTY index (a fresh crawl's first
+    batch) has no data files to infer from, and probing one must find
+    no candidates, not fail."""
+    return spark.read.schema("doc_id bigint, band_val string, band_id int").parquet(
+        f"{path}/bands"
     )
 
 
@@ -242,10 +276,6 @@ def _lsh_pairs_ctes(corpus: str, max_bucket: int = MAX_BUCKET) -> str:
     )"""
 
 
-def minhash_lsh_pairs_sql(corpus: str = "documents", max_bucket: int = MAX_BUCKET) -> str:
-    return f"WITH {_lsh_pairs_ctes(corpus, max_bucket)}\n    SELECT a, b FROM lsh_pairs"
-
-
 # -- production-width banding: k=128, 16 bands x 8 rows ----------------------
 # The k=8/4x2 config above is the oracle-friendly demo; its per-band
 # collision prob s^2 admits ~30% false candidates at s=0.3 and, on
@@ -265,22 +295,7 @@ def minhash_signatures_wide(docs: DataFrame) -> DataFrame:
 
 
 def _banded_wide(docs: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_val) at production width (k=128, 16x8) —
-    shared by the self-join pair pipeline and the cross-batch probe
-    (dedup_incremental_pairs)."""
-    sigs = minhash_signatures_wide(docs)
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            F.concat_ws(
-                "_", *[f"mh{b * WIDE_ROWS + r}" for r in range(WIDE_ROWS)]
-            ).alias("band_val"),
-        )
-        for b in range(WIDE_BANDS)
-    ]
-    return sigs.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_val")
+    return _band(minhash_signatures_wide(docs), WIDE_BANDS, WIDE_ROWS)
 
 
 def minhash_lsh_pairs_wide(
@@ -288,18 +303,7 @@ def minhash_lsh_pairs_wide(
 ) -> DataFrame:
     """Candidate pairs from k=128 minhash, 16 bands x 8 rows (52-bit
     double-hash halves; see functions/portable.py wide scheme)."""
-    safe = _safe_banded(_banded_wide(docs), max_bucket)
-    a, b = safe.alias("a"), safe.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .distinct()
-    )
+    return _self_candidates(_safe_banded(_banded_wide(docs), max_bucket))
 
 
 def minhash_lsh_pairs_wide_sql(
@@ -516,31 +520,6 @@ def _union_find_batches(batches):
 _STATS_CLAMP_EVERY = 4
 
 
-def _completed_clamp_rounds(path: str) -> list[int]:
-    """Round numbers with a complete ``round_<k>`` parquet frame
-    (``_SUCCESS`` marker present — a kill mid-write leaves none, so a
-    torn frame is never resumed from).  Driver-visible paths only
-    (local FS / NFS); an object-store checkpoint_dir would need the
-    Hadoop FS listing instead."""
-    try:
-        names = os.listdir(path)
-    except OSError:
-        return []
-    out = []
-    for n in names:
-        m = re.fullmatch(r"round_(\d+)", n)
-        if m and os.path.exists(os.path.join(path, n, "_SUCCESS")):
-            out.append(int(m.group(1)))
-    return out
-
-
-def _clear_clamp_rounds(path: str) -> None:
-    """Delete every ``round_<k>`` frame under ``path``, torn or not."""
-    for n in os.listdir(path):
-        if re.fullmatch(r"round_\d+", n):
-            shutil.rmtree(os.path.join(path, n), ignore_errors=True)
-
-
 def _connected_components_rounds(
     pairs: DataFrame, max_iter: int = 25, checkpoint_dir: str | None = None
 ) -> tuple[DataFrame, int]:
@@ -600,6 +579,8 @@ def _label_rounds(
     carries the edge-set fingerprint ``fp`` in a ``_FINGERPRINT`` file
     written after the frame commits; frames whose fingerprint is
     missing or differs are cleared and the run starts from round 0.
+    Frames are listed through ``durable.generations`` (committed =
+    ``_SUCCESS`` present), so any Hadoop filesystem or URI works.
 
     Returns (labels, rounds_run) — the round count is asserted
     O(log depth) on an injected chain in tests/test_dedup.py; resume
@@ -641,13 +622,13 @@ def _label_rounds(
     )
     rounds = 0
     if not own_dir:
-        done = _completed_clamp_rounds(clamp_dir)
-        if any(read_fingerprint(spark, f"{clamp_dir}/round_{r}") != fp for r in done):
+        done = durable.generations(spark, clamp_dir, "round_")
+        if any(durable.read_fingerprint(spark, f"{clamp_dir}/round_{r}") != fp for r in done):
             # frames from a DIFFERENT edge set (or a kill between a
             # frame's commit and its fingerprint write): min propagation
             # never raises a label, so a foreign low label would survive
             # to the output — start over from round 0 instead
-            _clear_clamp_rounds(clamp_dir)
+            durable.clear(spark, clamp_dir, "round_")
             done = []
         if done:
             # resume: restore the newest completed round's labels onto
@@ -724,7 +705,7 @@ def _label_rounds(
         # on a cluster, point checkpoint_dir at the shared FS.
         path = f"{clamp_dir}/round_{r}"
         lbl.write.mode("overwrite").parquet(path)
-        write_fingerprint(spark, path, fp)
+        durable.write_fingerprint(spark, path, fp)
         return spark.read.parquet(path)
 
     prev_sum = labels.agg(_label_sum).collect()[0][0]
@@ -1010,37 +991,11 @@ def dedup_incremental_pairs(
     output (banding is per-row, so a union of per-batch band frames IS
     the banding of the union)."""
     band = _banded_wide if wide else _banded
-    eb = _safe_banded(
-        existing_bands if existing_bands is not None else band(existing),
-        max_bucket,
-    )
-    nb = _safe_banded(
-        new_bands if new_bands is not None else band(new_docs), max_bucket
-    )
-    cand = (
-        nb.alias("n")
-        .join(
-            eb.alias("e"),
-            (F.col("n.band_id") == F.col("e.band_id"))
-            & (F.col("n.band_val") == F.col("e.band_val")),
-        )
-        .select(F.col("n.doc_id").alias("a"), F.col("e.doc_id").alias("b"))
-        .distinct()
-    )
-    corpus = new_docs.select("doc_id", "text").unionByName(
-        existing.select("doc_id", "text")
-    )
+    eb = existing_bands if existing_bands is not None else band(existing)
+    nb = new_bands if new_bands is not None else band(new_docs)
+    cand = _cross_candidates(_safe_banded(nb, max_bucket), _safe_banded(eb, max_bucket))
+    corpus = new_docs.select("doc_id", "text").unionByName(existing.select("doc_id", "text"))
     return verify_pairs_jaccard(cand, corpus, threshold).select("a", "b")
-
-
-def dedup_index_ready(spark, path: str) -> bool:
-    """True iff the terminal _BUILT marker exists — the same torn-build
-    rule as the IVF index (a build killed between the two artifact
-    writes must read as not-built)."""
-    from .ivf import _built_marker
-
-    fs, marker = _built_marker(spark, path)
-    return bool(fs.exists(marker))
 
 
 def corpus_fingerprint(docs: DataFrame) -> str:
@@ -1057,33 +1012,6 @@ def corpus_fingerprint(docs: DataFrame) -> str:
         .collect()[0]
     )
     return f"{r['n']}:{r['x']}"
-
-
-def _fingerprint_path(spark, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_FINGERPRINT")
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
-
-def read_fingerprint(spark, path: str) -> str | None:
-    """The fingerprint recorded under ``path`` (a dedup index or a CC
-    round frame), or None (never written, or a torn write) — None
-    never matches, forcing a rebuild."""
-    fs, p = _fingerprint_path(spark, path)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        return bytes(stream.readAllBytes()).decode("utf-8").strip()
-    finally:
-        stream.close()
-
-
-def write_fingerprint(spark, path: str, fp: str) -> None:
-    fs, p = _fingerprint_path(spark, path)
-    out = fs.create(p, True)
-    out.write(bytearray(fp.encode("utf-8")))
-    out.close()
 
 
 def build_dedup_index(
@@ -1107,26 +1035,22 @@ def build_dedup_index(
     index would double corpus storage for nothing.
 
     Terminal ``_BUILT`` marker (r5): cleared first, written only after
-    BOTH artifacts land — the ivf.py torn-build rule, so
-    ``dedup_index_ready`` can gate build-once/serve-many callers
-    (curate_corpus's dedup_index_path switch).  A ``_FINGERPRINT`` of
-    the source corpus (count + xor-hash, ``corpus_fingerprint``) lands
-    just before the marker (r6, ADVICE r5): serve-many callers compare
-    it against the corpus they are about to serve and rebuild on
-    mismatch instead of silently probing stale bands."""
-    from .ivf import _built_marker
-
+    BOTH artifacts land — the durable.py torn-build rule.  A
+    ``_FINGERPRINT`` of the source corpus (count + xor-hash,
+    ``corpus_fingerprint``) lands just before the marker (r6, ADVICE
+    r5): serve-many callers (curate_corpus's dedup_index_path switch)
+    gate on ``durable.built(path, fp)`` with the corpus they are about
+    to serve and rebuild on mismatch instead of silently probing stale
+    bands."""
     spark = existing.sparkSession
-    fs, marker = _built_marker(spark, path)
-    fs.delete(marker, False)
+    durable.begin(spark, path)
     _exact_hash_table(existing).write.mode("overwrite").parquet(
         f"{path}/exact_hash"
     )
     _safe_banded(_banded(existing), max_bucket).write.mode("overwrite").partitionBy(
         "band_id"
     ).parquet(f"{path}/bands")
-    write_fingerprint(spark, path, corpus_fingerprint(existing))
-    fs.create(marker, True).close()
+    durable.commit(spark, path, corpus_fingerprint(existing))
 
 
 def minhash_verified_dups_banded(
@@ -1142,18 +1066,7 @@ def minhash_verified_dups_banded(
     tail as the in-plan form, so pairs are identical whenever ``bands``
     equals ``_banded(docs)`` (r6 — the streaming cluster maintenance
     serve path)."""
-    safe = _safe_banded(bands, max_bucket)
-    a, b = safe.alias("a"), safe.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .distinct()
-    )
+    cand = _self_candidates(_safe_banded(bands, max_bucket))
     return verify_pairs_jaccard(cand, docs, threshold)
 
 
@@ -1169,21 +1082,7 @@ def minhash_verified_dups_indexed(
     PAIR-IDENTICAL to the in-plan form by construction (the stored
     bands ARE _safe_banded(_banded(docs))); asserted in
     tests/test_curate.py via byte-identical manifests."""
-    spark = docs.sparkSession
-    eb = spark.read.schema("doc_id bigint, band_val string, band_id int").parquet(
-        f"{index_path}/bands"
-    )
-    a, b = eb.alias("a"), eb.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
-        .distinct()
-    )
+    cand = _self_candidates(_stored_bands(docs.sparkSession, index_path))
     return verify_pairs_jaccard(cand, docs, threshold)
 
 
@@ -1201,15 +1100,12 @@ def dedup_incremental_indexed(
     Asserted equal to the in-plan variant on the contract fixture in
     tests/test_dedup.py."""
     spark = new_docs.sparkSession
-    # explicit schemas: an EMPTY index (fresh crawl's first batch) has
-    # no data files to infer from, and probing one must degrade to
-    # all-new_keeper, not fail
+    # explicit schema, as in _stored_bands: an EMPTY index degrades to
+    # all-new_keeper, not a failure
     ex_hash = spark.read.schema("h string, matched_keeper bigint").parquet(
         f"{index_path}/exact_hash"
     )
-    eb = spark.read.schema("doc_id bigint, band_val string, band_id int").parquet(
-        f"{index_path}/bands"
-    )
+    eb = _stored_bands(spark, index_path)
     return _incremental_decide(new_docs, existing, ex_hash, eb, threshold, max_bucket)
 
 
@@ -1238,17 +1134,7 @@ def _incremental_decide(
         .select("doc_id", "text")
         .localCheckpoint(eager=False)
     )
-    nb = _safe_banded(_banded(rest), max_bucket)
-    cand = (
-        nb.alias("n")
-        .join(
-            eb.alias("e"),
-            (F.col("n.band_id") == F.col("e.band_id"))
-            & (F.col("n.band_val") == F.col("e.band_val")),
-        )
-        .select(F.col("n.doc_id").alias("a"), F.col("e.doc_id").alias("b"))
-        .distinct()
-    )
+    cand = _cross_candidates(_safe_banded(_banded(rest), max_bucket), eb)
     corpus = rest.unionByName(existing.select("doc_id", "text"))
     near = (
         verify_pairs_jaccard(cand, corpus, threshold)
@@ -1390,21 +1276,3 @@ def dedup_incremental_sql(
     UNION ALL SELECT doc_id, status, matched_keeper FROM near
     UNION ALL SELECT doc_id, status, matched_keeper FROM newk
     """
-
-
-# --------------------------------------------------------------------------
-# simhash (oracle-exact 16-bit demo; 64-bit production width in simhash64.py)
-# --------------------------------------------------------------------------
-
-
-def simhash_signatures(docs: DataFrame) -> DataFrame:
-    """16-bit SimHash per doc (bit-majority over salted word hashes)."""
-    words = P.words_spark("text")
-    return docs.select(
-        "doc_id", F.expr(P.simhash_spark(words)).alias("simhash")
-    )
-
-
-def simhash_signatures_sql(corpus: str = "documents") -> str:
-    words = P.words_duck("text")
-    return f"SELECT doc_id, {P.simhash_duck(words)} AS simhash FROM ({corpus})"

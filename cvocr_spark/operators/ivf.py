@@ -52,6 +52,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import durable
 from ..functions import portable as P
 
 IVF_K = 8
@@ -330,8 +331,7 @@ def build_ivf_index(
     # clear the terminal marker FIRST: a rebuild killed between the
     # three artifact writes must read as not-built, never as the stale
     # previous build (the torn-write window ADVICE r3 flagged)
-    fs, marker = _built_marker(spark, path)
-    fs.delete(marker, False)
+    durable.begin(spark, path)
     centroids = _train(emb, k, iters)
     spark.createDataFrame(
         [(j, c) for j, c in enumerate(centroids)], "cid int, cm array<bigint>"
@@ -345,16 +345,7 @@ def build_ivf_index(
         1
     ).write.mode("overwrite").parquet(f"{path}/stats")
     # terminal marker: written only after ALL three artifacts landed
-    fs.create(marker, True).close()
-
-
-def _built_marker(spark: SparkSession, path: str):
-    """(FileSystem, Path) for the index's terminal _BUILT marker —
-    Hadoop FS API so the probe works on any cluster filesystem, not
-    just the local one."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_BUILT")
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+    durable.commit(spark, path)
 
 
 def ivf_search_index(
@@ -428,8 +419,7 @@ def ivf_build_and_search(
     _BUILT marker written AFTER all three artifacts (ADVICE r3: probing
     centroids — the FIRST write — made a build killed mid-lists look
     complete forever)."""
-    fs, marker = _built_marker(spark, path)
-    if not fs.exists(marker):
+    if not durable.built(spark, path):
         build_ivf_index(emb, path, k, iters)
     return ivf_search_index(spark, path, n_probe, n_queries, topk)
 

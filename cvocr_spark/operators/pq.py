@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import durable
 from ..functions import portable as P
 from . import ivf
 
@@ -494,7 +495,7 @@ def pq_adc_topk_sql(
 # --------------------------------------------------------------------------
 # materialized IVF-PQ index: train ONCE (coarse quantizer + codebooks +
 # codes + coarse assignment), serve MANY — VERDICT r4 next #3, mirroring
-# the ivf.py build/serve split and its _BUILT torn-build rule
+# the ivf.py build/serve split and the durable.py torn-build rule
 # --------------------------------------------------------------------------
 
 
@@ -517,10 +518,9 @@ def build_ivfpq_index(
     code lists stay ~M bytes/row.  The terminal ``_BUILT`` marker is
     cleared FIRST and written only after ALL four artifacts land — a
     build killed mid-write reads as not-built, never as the stale
-    previous index (the ivf.py torn-build rule)."""
+    previous index (the durable.py torn-build rule)."""
     spark = emb.sparkSession
-    fs, marker = ivf._built_marker(spark, path)
-    fs.delete(marker, False)
+    durable.begin(spark, path)
     centroids = ivf._train(emb, k, iters)
     spark.createDataFrame(
         [(j, c) for j, c in enumerate(centroids)], "cid int, cm array<bigint>"
@@ -541,7 +541,7 @@ def build_ivfpq_index(
     lists.groupBy("cid").agg(F.count("*").alias("n_vectors")).coalesce(
         1
     ).write.mode("overwrite").parquet(f"{path}/stats")
-    fs.create(marker, True).close()
+    durable.commit(spark, path)
 
 
 def ivfpq_search_index(
@@ -637,8 +637,7 @@ def ivfpq_build_and_search(
     contract): training is deterministic, so the index is a pure
     function of input + params and repeated calls measure SERVING.
     Built-ness = the terminal _BUILT marker; a torn build rebuilds."""
-    fs, marker = ivf._built_marker(spark, path)
-    if not fs.exists(marker):
+    if not durable.built(spark, path):
         build_ivfpq_index(emb, path, k, iters)
     return ivfpq_search_index(spark, path, n_probe, n_queries, topk, rerank)
 

@@ -79,18 +79,6 @@ def simhash64_signatures(docs: DataFrame) -> DataFrame:
     )
 
 
-def simhash64_signatures_sql(corpus: str = "documents") -> str:
-    words = P.words_duck("text")
-    return f"""
-    WITH corpus AS ({corpus}),
-    paired AS (SELECT doc_id, {P.simhash64_pairs_duck(words)} AS hp FROM corpus)
-    SELECT doc_id,
-           {P.simhash64_half_duck('hp', 'lo')} AS sim_lo,
-           {P.simhash64_half_duck('hp', 'hi')} AS sim_hi
-    FROM paired
-    """
-
-
 def _chunked(sigs: DataFrame) -> DataFrame:
     chunk_cols = []
     for c in range(CHUNKS):
@@ -206,18 +194,3 @@ def minhash_k128_digest(docs: DataFrame) -> DataFrame:
     )
     return sigs.select("doc_id", F.md5(joined).alias("sig_digest"))
 
-
-def minhash_k128_digest_sql(corpus: str = "documents") -> str:
-    words = P.words_duck("text")
-    shingles = f"list_distinct({P.shingles_duck(words)})"
-    return f"""
-    WITH corpus AS ({corpus}),
-    paired AS (SELECT doc_id, {P.minhash_pairs_wide_duck(shingles)} AS mhp FROM corpus),
-    mins AS (
-      SELECT doc_id,
-             list_transform(range(0, {P.MINHASH_WIDE_K}), j ->
-               list_min(list_transform(mhp, p -> p.h1 + j * p.h2))) AS m
-      FROM paired
-    )
-    SELECT doc_id, md5(array_to_string(m, ',')) AS sig_digest FROM mins
-    """

@@ -382,26 +382,3 @@ def lsh_ann_multiprobe_topk_sql(
     SELECT query_id, neighbor_id, sim, rn FROM ranked WHERE rn <= {k}
     """
 
-
-def lsh_ann_topk_sql(n_queries: int = 5, k: int = 3) -> str:
-    cos = P.cosine_duck("q.qe", "c.ce")
-    return f"""
-    WITH bucketed AS (
-      SELECT vec_id, embedding, {_bucket_expr_duck('embeddings')} AS bkt
-      FROM embeddings
-    ),
-    q AS (SELECT vec_id AS query_id, embedding AS qe, bkt FROM bucketed
-          WHERE vec_id < {n_queries}),
-    c AS (SELECT vec_id AS neighbor_id, embedding AS ce, bkt FROM bucketed),
-    scored AS (
-      SELECT query_id, neighbor_id, round({cos}, 6) AS sim
-      FROM c JOIN q USING (bkt)
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, sim,
-             cast(row_number() OVER (PARTITION BY query_id
-                                     ORDER BY sim DESC, neighbor_id) as int) AS rn
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, sim, rn FROM ranked WHERE rn <= {k}
-    """

@@ -32,6 +32,7 @@ from pyspark.errors import AnalysisException, SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import durable
 from ..kernel import DEFAULT_CONFIG, KernelConfig
 from ..plans.job import extract_pages
 
@@ -260,9 +261,7 @@ def write_bucketed_table(
             loc_uri = f"{warehouse}/{parts[0]}.db/{parts[1]}"
         else:
             loc_uri = f"{warehouse}/{parts[-1]}"
-    jvm = spark._jvm
-    loc = jvm.org.apache.hadoop.fs.Path(loc_uri)
-    loc.getFileSystem(spark._jsc.hadoopConfiguration()).delete(loc, True)
+    durable.delete(spark, loc_uri)
     (
         df.write.mode("overwrite")
         .format("parquet")

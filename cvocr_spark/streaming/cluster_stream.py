@@ -10,8 +10,8 @@ A crawl ingest keeps exactly this state: the corpus so far and the
 current duplicate clustering, updated per batch at O(batch + new
 pairs) cost instead of re-clustering the world.
 
-State layout under ``state_dir`` (driver-visible paths, like the CC
-resume frames):
+State layout under ``state_dir`` (any Hadoop filesystem path or URI;
+generations are listed, retained and committed through durable.py):
 
     corpus/           (doc_id, text) PARTITIONED BY batch_id —
                       dynamic-partition-overwrite, so a replayed batch
@@ -42,38 +42,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import durable
 from ..operators import dedup
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
-
-
-def _complete_label_gens(spark: SparkSession, labels_dir: str) -> list[int]:
-    """Batch ids with a complete label generation (_SUCCESS present).
-    Listed through the Hadoop FS API (ADVICE r5: a driver-local
-    os.listdir against an hdfs://-style state_dir silently returned []
-    and every batch would have reclustered from only its own pairs,
-    discarding prior generations).  Non-numeric ``gen_*`` suffixes (a
-    stray gen_*.tmp left by tooling) are SKIPPED, not raised on — one
-    junk directory must not take down every subsequent batch."""
-    fs, p, jvm = _hadoop_fs(spark, labels_dir)
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        n = st.getPath().getName()
-        if not n.startswith("gen_"):
-            continue
-        try:
-            g = int(n.split("_", 1)[1])
-        except ValueError:
-            continue
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{labels_dir}/gen_{g}/_SUCCESS")):
-            out.append(g)
-    return sorted(out)
 
 
 def cluster_batch_writer(
@@ -118,7 +88,7 @@ def cluster_batch_writer(
     bands_dir = os.path.join(state_dir, "bands")
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
-        gens = _complete_label_gens(spark, labels_dir)
+        gens = durable.generations(spark, labels_dir, "gen_")
         if batch_id in gens:
             return  # fully committed: replayed microbatch is a no-op
         batch = df.select("doc_id", "text").persist()
@@ -180,17 +150,7 @@ def cluster_batch_writer(
                 os.path.join(labels_dir, f"gen_{batch_id}")
             )
             if keep_gens is not None:
-                # delete through the Hadoop FS too — retention must
-                # work on whatever filesystem the state lives on
-                fs, _p, jvm = _hadoop_fs(spark, labels_dir)
-                done = _complete_label_gens(spark, labels_dir)
-                for g in done[:-keep_gens]:
-                    fs.delete(
-                        jvm.org.apache.hadoop.fs.Path(
-                            f"{labels_dir}/gen_{g}"
-                        ),
-                        True,
-                    )
+                durable.retain(spark, labels_dir, "gen_", keep_gens)
         finally:
             batch.unpersist()
 
@@ -203,7 +163,7 @@ def current_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     generation, so a torn later batch (corpus partition written,
     labels commit missing) is invisible until its replay commits."""
     labels_dir = os.path.join(state_dir, "labels")
-    gens = _complete_label_gens(spark, labels_dir)
+    gens = durable.generations(spark, labels_dir, "gen_")
     if not gens:
         raise FileNotFoundError(f"no committed label generation under {state_dir}")
     gmax = gens[-1]

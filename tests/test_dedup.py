@@ -12,10 +12,12 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
+import pytest  # noqa: E402
 from hypothesis import example, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from cvocr_spark import durable  # noqa: E402
 from cvocr_spark.operators import dedup  # noqa: E402
 
 
@@ -85,7 +87,14 @@ def test_connected_components_pointer_doubling_round_bound(spark):
     assert rounds <= bound, f"{rounds} rounds for depth {depth} (bound {bound})"
 
 
-def test_connected_components_stats_clamp_writes_resume_points(spark, tmp_path):
+# checkpoint_dir given as a plain path and as a file:// URI: resume
+# state is listed through the Hadoop FS API, so both must resume (a
+# local-only listing found no frames under the URI form)
+_CKPT_FORMS = pytest.mark.parametrize("as_uri", [False, True], ids=["path", "uri"])
+
+
+@_CKPT_FORMS
+def test_connected_components_stats_clamp_writes_resume_points(spark, tmp_path, as_uri):
     """An explicit checkpoint_dir keeps the every-4th-round parquet
     clamp files in place (durable resume points for the iteration;
     they also reset Catalyst's inherited size estimates, whose digit
@@ -97,14 +106,15 @@ def test_connected_components_stats_clamp_writes_resume_points(spark, tmp_path):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(depth)], "a bigint, b bigint"
     )
-    ckpt = str(tmp_path / "cc_resume")
+    local = tmp_path / "cc_resume"
+    ckpt = local.as_uri() if as_uri else str(local)
     labels_df, rounds = dedup._connected_components_rounds(
         pairs, checkpoint_dir=ckpt
     )
     labels = {r["node"]: r["label"] for r in labels_df.collect()}
     assert labels == {i: 0 for i in range(depth + 1)}
     assert rounds >= dedup._STATS_CLAMP_EVERY
-    clamp_rounds = [d for d in os.listdir(ckpt) if d.startswith("round_")]
+    clamp_rounds = [d for d in os.listdir(local) if d.startswith("round_")]
     assert f"round_{dedup._STATS_CLAMP_EVERY}" in clamp_rounds
 
     # resume: a second run over the same pairs + dir must restore the
@@ -124,7 +134,7 @@ def test_connected_components_stats_clamp_writes_resume_points(spark, tmp_path):
     torn = tmp_path / "cc_resume" / "round_8"
     torn.mkdir()
     (torn / "part-00000.parquet").write_bytes(b"torn")
-    assert dedup._completed_clamp_rounds(ckpt) == [dedup._STATS_CLAMP_EVERY]
+    assert durable.generations(spark, ckpt, "round_") == [dedup._STATS_CLAMP_EVERY]
     labels_df3, _ = dedup._connected_components_rounds(pairs, checkpoint_dir=ckpt)
     assert {r["node"]: r["label"] for r in labels_df3.collect()} == labels
 
@@ -153,18 +163,20 @@ def test_connected_components_huge_ids_no_ansi_overflow(spark):
     }
 
 
-def test_connected_components_resume_ignores_frames_of_other_edge_set(spark, tmp_path):
+@_CKPT_FORMS
+def test_connected_components_resume_ignores_frames_of_other_edge_set(spark, tmp_path, as_uri):
     """Round frames in checkpoint_dir written for a DIFFERENT pair list
     must not be restored (ROADMAP open item 4): a 64-edge chain leaves
     round_4 behind, and a later run over the pairs (i, i+1000) with the
     same dir used to return all 128 labels wrong — the chain's label 0
     survived min propagation.  The stale frames are cleared instead."""
-    ckpt = str(tmp_path / "cc_shared")
+    local = tmp_path / "cc_shared"
+    ckpt = local.as_uri() if as_uri else str(local)
     chain = spark.createDataFrame([(i, i + 1) for i in range(64)], "a bigint, b bigint")
     dedup._connected_components_rounds(chain, checkpoint_dir=ckpt)
-    assert dedup._STATS_CLAMP_EVERY in dedup._completed_clamp_rounds(ckpt)
+    assert dedup._STATS_CLAMP_EVERY in durable.generations(spark, ckpt, "round_")
     # the frame records its own edge set, so a rerun over `chain` resumes
-    assert dedup.read_fingerprint(
+    assert durable.read_fingerprint(
         spark, f"{ckpt}/round_{dedup._STATS_CLAMP_EVERY}"
     ) == dedup._directed_edges(chain)[2]
 
@@ -175,7 +187,7 @@ def test_connected_components_resume_ignores_frames_of_other_edge_set(spark, tmp
     labels = {r["node"]: r["label"] for r in labels_df.collect()}
     want = {n: i for i in range(1, 65) for n in (i, i + 1000)}
     assert labels == want
-    assert dedup._completed_clamp_rounds(ckpt) == []
+    assert durable.generations(spark, ckpt, "round_") == []
 
 
 _HUGE = 1 << 62

@@ -372,9 +372,9 @@ def test_streaming_cluster_maintenance_matches_batch(spark, tmp_path):
 
     import pyspark.sql.functions as F  # noqa: F401
 
+    from cvocr_spark import durable
     from cvocr_spark.operators import dedup as dd
     from cvocr_spark.streaming import cluster_batch_writer, current_clusters
-    from cvocr_spark.streaming.cluster_stream import _complete_label_gens
 
     base_a = "the quick brown fox jumps over the lazy dog near the river bank today"
     base_b = ("metric spaces admit open covers whose nerve complexes capture "
@@ -436,7 +436,7 @@ def test_streaming_cluster_maintenance_matches_batch(spark, tmp_path):
     # torn-commit replay: the engine re-delivers a batch whose labels
     # commit vanished; recomputing from the previous generation must
     # reach the same clustering (value-idempotent at-least-once)
-    gens = _complete_label_gens(spark, f"{state}/labels")
+    gens = durable.generations(spark, f"{state}/labels", "gen_")
     last = gens[-1]
     os.remove(f"{state}/labels/gen_{last}/_SUCCESS")
     writer(
@@ -510,8 +510,8 @@ def test_cluster_maintenance_gen_retention(spark, tmp_path):
     of the retained window stays value-idempotent."""
     import os as _os
 
+    from cvocr_spark import durable
     from cvocr_spark.streaming import cluster_batch_writer, current_clusters
-    from cvocr_spark.streaming.cluster_stream import _complete_label_gens
 
     state = str(tmp_path / "state")
     base = "the quick brown fox jumps over the lazy dog near the river"
@@ -525,7 +525,7 @@ def test_cluster_maintenance_gen_retention(spark, tmp_path):
         writer(
             spark.createDataFrame(rows, "doc_id bigint, text string"), i
         )
-    assert _complete_label_gens(spark, f"{state}/labels") == [2]
+    assert durable.generations(spark, f"{state}/labels", "gen_") == [2]
     assert not _os.path.exists(f"{state}/labels/gen_0")
     got = {
         r["doc_id"]: (r["cluster_id"], r["is_keeper"])
