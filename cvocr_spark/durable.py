@@ -8,7 +8,8 @@ non-local path).
                       ``begin`` clears it first, ``commit`` writes it
                       last, so a build killed mid-write reads as
                       not-built, never as the stale previous build.
-  * ``_FINGERPRINT``  the input the state was built from, written just
+  * ``_FINGERPRINT``  the input the state was built from (``fingerprint``
+                      of its files or content, and build params), written just
                       before the marker; ``built(path, fp)`` fails on a
                       missing or different one, so changed input
                       rebuilds instead of serving stale state.
@@ -19,7 +20,10 @@ non-local path).
 
 from __future__ import annotations
 
+import hashlib
 import re
+
+from pyspark.sql import functions as F
 
 
 def _fs(spark, path: str):
@@ -58,6 +62,39 @@ def write_fingerprint(spark, path: str, fp: str) -> None:
         out.write(bytearray(fp.encode("utf-8")))
     finally:
         out.close()
+
+
+def fingerprint(df, cols: list[str], *params) -> str:
+    """What state built from ``df`` is a function of, then the build
+    ``params`` — the ``fp`` to pass to ``commit``/``built`` so changed
+    input rebuilds.
+
+    A bare file scan (``spark.read`` with nothing on top) is keyed on
+    its schema and every input file's (path, size, mtime): O(files) on
+    the driver and no Spark job, so serve-many callers pay no scan per
+    serve.  A rewrite lands new part files or a new size/mtime.  Any
+    other frame is keyed on its content: row count + order-insensitive
+    bit-XOR of a per-row xxhash64 of ``cols`` (one aggregate; never
+    crosses the oracle boundary, so the JVM-native hash is fine)."""
+    plan = df._jdf.queryExecution().analyzed()
+    if (
+        plan.getClass().getSimpleName() == "LogicalRelation"
+        and plan.relation().getClass().getSimpleName() == "HadoopFsRelation"
+    ):
+        parts = [df.schema.simpleString()]
+        for f in sorted(df.inputFiles()):
+            fs, p = _fs(df.sparkSession, f)
+            st = fs.getFileStatus(p)
+            parts.append(f"{f}:{st.getLen()}:{st.getModificationTime()}")
+        key = ["files", hashlib.sha256("|".join(parts).encode()).hexdigest()]
+    else:
+        r = (
+            df.select(F.xxhash64(*cols).alias("h"))
+            .agg(F.count("*").alias("n"), F.expr("bit_xor(h)").alias("x"))
+            .collect()[0]
+        )
+        key = [r["n"], r["x"]]
+    return ":".join(str(v) for v in (*key, *params))
 
 
 def begin(spark, path: str) -> None:

@@ -998,22 +998,6 @@ def dedup_incremental_pairs(
     return verify_pairs_jaccard(cand, corpus, threshold).select("a", "b")
 
 
-def corpus_fingerprint(docs: DataFrame) -> str:
-    """Order-insensitive content fingerprint of a (doc_id, text) frame:
-    row count + bit-XOR of a per-row 64-bit hash.  Index metadata only
-    (never crosses the oracle boundary), so the JVM-native xxhash64 is
-    fine.  Used to detect that a stored dedup index was built over a
-    DIFFERENT corpus than the one now being served (ADVICE r5: the
-    _BUILT marker alone let a changed corpus silently serve stale
-    bands)."""
-    r = (
-        docs.select(F.xxhash64(F.col("doc_id"), F.col("text")).alias("h"))
-        .agg(F.count("*").alias("n"), F.expr("bit_xor(h)").alias("x"))
-        .collect()[0]
-    )
-    return f"{r['n']}:{r['x']}"
-
-
 def build_dedup_index(
     existing: DataFrame, path: str, max_bucket: int = MAX_BUCKET
 ) -> None:
@@ -1036,12 +1020,11 @@ def build_dedup_index(
 
     Terminal ``_BUILT`` marker (r5): cleared first, written only after
     BOTH artifacts land — the durable.py torn-build rule.  A
-    ``_FINGERPRINT`` of the source corpus (count + xor-hash,
-    ``corpus_fingerprint``) lands just before the marker (r6, ADVICE
-    r5): serve-many callers (curate_corpus's dedup_index_path switch)
-    gate on ``durable.built(path, fp)`` with the corpus they are about
-    to serve and rebuild on mismatch instead of silently probing stale
-    bands."""
+    ``_FINGERPRINT`` of the source corpus (``durable.fingerprint`` of
+    doc_id, text) lands just before the marker: serve-many callers
+    (curate_corpus's dedup_index_path switch) gate on
+    ``durable.built(path, fp)`` with the corpus they are about to serve
+    and rebuild on mismatch instead of silently probing stale bands."""
     spark = existing.sparkSession
     durable.begin(spark, path)
     _exact_hash_table(existing).write.mode("overwrite").parquet(
@@ -1050,7 +1033,7 @@ def build_dedup_index(
     _safe_banded(_banded(existing), max_bucket).write.mode("overwrite").partitionBy(
         "band_id"
     ).parquet(f"{path}/bands")
-    durable.commit(spark, path, corpus_fingerprint(existing))
+    durable.commit(spark, path, durable.fingerprint(existing, ["doc_id", "text"]))
 
 
 def minhash_verified_dups_banded(

@@ -30,9 +30,15 @@ serves):
     10^12 rows a query touches n_probe/k of the corpus and training
     cost is paid once, not per query.
   * ``ivf_ann_topk`` keeps the self-contained train+search form (the
-    oracle-gated demo); both share the same assignment code, so the
+    oracle-gated demo); both share the same assignment, probe pick
+    (``_probe``) and cosine tail (``_probed_cosine_topk``), so the
     materialized path is hash-checked against the same chained-CTE
     DuckDB oracle.
+
+ONE NUMPY CORE: training (``_lloyd``, whose M=1 case is the IVF
+quantizer and M=PQ_M case the PQ codebooks) and pq.encode_numpy call
+the one nearest-centroid kernel ``_nearest``; the build/serve paths
+key the index on ``index_fingerprint`` of the input and params.
 
 ASSIGNMENT IS FLAT CODEGEN, NEVER INTERPRETED HOFs (VERDICT r2 item 2:
 the old ``aggregate(zip_with(...))`` per row per centroid was the
@@ -47,18 +53,27 @@ assignment plan.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import durable
 from ..functions import portable as P
+from ..session import ensure_shipped
+from .similarity import _top_k
 
 IVF_K = 8
 IVF_ITERS = 2
 N_PROBE = 2
 DIM = 64
+
+
+def _quantized(emb: DataFrame, dim: int = DIM) -> DataFrame:
+    """(vec_id, q): well-formed vectors quantized to milli-units in Spark
+    (HALF_UP round, the same as every other path)."""
+    return emb.filter(F.size("embedding") == dim).select(
+        "vec_id", F.expr(P.quantize_spark("embedding")).alias("q")
+    )
 
 
 def _quantized_exploded(emb: DataFrame, dim: int = DIM) -> DataFrame:
@@ -79,6 +94,23 @@ def _centroid_lit(centroid: list[int]):
     return F.expr("array(" + ", ".join(f"{v}L" for v in centroid) + ")")
 
 
+def _nearest(v, books):
+    """The one nearest-centroid kernel: for int64 quantized vectors
+    ``v`` (n, M, sub) and books (M, K, sub), returns ``ds`` (n, M, K),
+    the exact integer squared-L2 via the expanded ``|v|^2 - 2 v.c +
+    |c|^2`` form, and ``idx`` (n, M), its FIRST minimum == the smallest
+    centroid id — the tie-break of ``array_position(ds, array_min(ds))``
+    in assign_with_dists."""
+    import numpy as np
+
+    ds = (
+        (v * v).sum(axis=2)[:, :, None]
+        - 2 * np.einsum("nms,mks->nmk", v, books)
+        + (books * books).sum(axis=2)[None, :, :]
+    )
+    return ds, ds.argmin(axis=2)
+
+
 def assign_with_dists(
     emb: DataFrame, centroids: list[list[int]], dim: int = DIM
 ) -> DataFrame:
@@ -93,12 +125,10 @@ def assign_with_dists(
     k=8 and comfortably to ~tens of lists, but a production quantizer
     with THOUSANDS of lists exceeds janino's 64KB method limit and
     falls back to interpreted evaluation (the same ceiling as the
-    12-plane LSH config, similarity.py with_bucket docstring).  Past
-    that width use ``assign_with_dists_numpy`` — bit-identical output
-    (same Spark-side quantizer, exact int64 matmul via the expanded
-    |v|^2 - 2v.c + |c|^2 form), asserted equal in tests/test_ann.py,
-    with cost O(n*k*dim/batch) in vectorized C instead of k generated
-    expressions."""
+    12-plane LSH config, similarity.py with_bucket docstring).  The
+    numpy kernel ``_nearest`` that training and pq.encode_numpy run
+    has no such ceiling and yields the identical integers and argmin
+    (asserted row-for-row, ties included, in tests/test_ann.py)."""
     ex = _quantized_exploded(emb, dim)
     aggs = []
     for j, c in enumerate(centroids):
@@ -114,155 +144,95 @@ def assign_with_dists(
     )
 
 
-def assign_with_dists_numpy(emb: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    """``assign_with_dists`` for PRODUCTION list counts: past ~64 lists
-    the k-flat-aggregate form exceeds the codegen method limit (see the
-    disclosure there), so this form broadcasts the (k, dim) centroid
-    matrix and computes all k integer squared-L2 distances per Arrow
-    batch as ``|v|^2 - 2 v.c + |c|^2`` with an exact int64 matmul — the
-    identical integers as the flat aggregates (same Spark-side
-    quantizer, order-independent integer sums), asserted row-for-row
-    equal in tests/test_ann.py.  Ragged/NULL embeddings are dropped by
-    the same well-formed guard."""
+def _lloyd(emb: DataFrame, k: int, iters: int, m: int, dim: int = DIM) -> list:
+    """Fixed-iteration Lloyd over ``m`` subspaces of the quantized
+    vectors at once; returns ``(m, k_eff, dim/m)`` integer books.  The
+    IVF quantizer is the m=1 case, the PQ codebooks the m=PQ_M case.
+
+      * seeds: the k well-formed vectors with smallest hash60(vec_id)
+        (ties by vec_id), the same id set for every subspace; a corpus
+        smaller than k trains with the effective k_eff it has;
+      * each step is ONE Arrow stage (mapInPandas): ``_nearest`` codes
+        per subspace, then exact int64 partial sums per (sub, cid, d)
+        via np.add.at/bincount, reduced by one bounded groupBy collect
+        (k*dim rows) — integer partials are order-independent, so
+        the books are bit-identical however the rows are split;
+      * each centroid becomes floor(s/n + 0.5) (exact in doubles at
+        this magnitude, no banker's rounding); an empty cluster keeps
+        its previous centroid."""
     import numpy as np
     import pandas as pd
 
-    cm = np.array(centroids, dtype=np.int64)  # (k, dim)
-    nc = (cm * cm).sum(axis=1)  # (k,) exact
-    vq = emb.filter(F.size("embedding") == DIM).select(
-        "vec_id", F.expr(P.quantize_spark("embedding")).alias("q")
-    )
-    bc = emb.sparkSession.sparkContext.broadcast((cm, nc))
-
-    def _assign(batches):
-        cmat, cn = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            v = np.array(list(pdf["q"]), dtype=np.int64)  # (n, dim)
-            nv = (v * v).sum(axis=1)
-            ds = nv[:, None] - 2 * (v @ cmat.T) + cn[None, :]  # exact int64
-            # argmin returns the FIRST minimum == smallest centroid id,
-            # the same tie-break as array_position(ds, array_min(ds))
-            cid = ds.argmin(axis=1).astype(np.int32)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "ds": list(ds),
-                    "cid": cid,
-                }
-            )
-
-    return vq.mapInPandas(_assign, schema="vec_id bigint, ds array<bigint>, cid int")
-
-
-def _train(emb: DataFrame, k: int, iters: int, dim: int = DIM) -> list[list[int]]:
-    """Fixed-iteration Lloyd on the quantized vectors; returns the k
-    trained centroids.  Every driver collect here is O(k) rows (seed
-    rows, k x dim centroid stats) — bounded like the LSH plane literals.
-
-    r6: each Lloyd iteration is ONE Arrow stage (mapInPandas) emitting
-    exact int64 partial sums per (cid, d) — assignment via the expanded
-    ``|v|^2 - 2 v.c + |c|^2`` int64 matmul (the assign_with_dists_numpy
-    arithmetic, asserted row-identical to the flat-aggregate form in
-    tests/test_ann.py; np.argmin's first-minimum IS the smallest-cid
-    tie-break) and per-batch centroid sums via np.add.at/bincount.
-    Integer partials are order-independent, so the reduced (cid, d)
-    stats — and therefore the centroids — are bit-identical to the
-    former assign-join-groupBy plan (gated end-to-end by the
-    cross-engine ivf/pq oracles at sf0.01), at O(n*k*dim/batch)
-    vectorized cost, one job per iteration instead of two joins over
-    the exploded frame, and no persisted exploded intermediate."""
-    import numpy as np
-    import pandas as pd
-
-    # seed from WELL-FORMED vectors only: a ragged/NULL embedding
-    # picked as a seed has no quantized form, and the centroid build
-    # would KeyError (found by the r4 PQ degenerate sweep)
-    well = emb.filter(F.size("embedding") == dim)
-    vq = well.select("vec_id", F.expr(P.quantize_spark("embedding")).alias("q"))
+    sub = dim // m
+    vq = _quantized(emb, dim)
     h = P.hash60_spark("cast(vec_id as string)", "ivf")
-    seed_rows = (
-        well.select(
-            "vec_id",
-            F.expr(h).alias("h"),
-            F.expr(P.quantize_spark("embedding")).alias("q"),
-        )
+    seeds = (
+        vq.select("vec_id", F.expr(h).alias("h"), "q")
         .orderBy("h", "vec_id")
         .limit(k)
         .collect()
     )
-    # a corpus smaller than k yields fewer seeds — train with the
-    # effective k, exactly as before (the r4 tiny-shard rule)
-    centroids = [list(r["q"]) for r in seed_rows]
-    if not centroids:
-        return []
+    books = np.array([r["q"] for r in seeds], dtype=np.int64).reshape(-1, m, sub)
+    books = books.transpose(1, 0, 2)  # (m, k_eff, sub)
+    if not seeds:
+        return books.tolist()
+    ensure_shipped(emb.sparkSession)  # the Arrow stage calls _nearest
     sc = emb.sparkSession.sparkContext
     for _ in range(iters):
-        bc = sc.broadcast(np.array(centroids, dtype=np.int64))
+        bc = sc.broadcast(books)
 
         def _stats(batches, _bc=bc):
-            cm = _bc.value  # (k_eff, dim)
-            cn = (cm * cm).sum(axis=1)
-            acc_s = np.zeros_like(cm)
-            acc_n = np.zeros(cm.shape[0], dtype=np.int64)
+            bt = _bc.value
+            acc_s = np.zeros_like(bt)
+            acc_n = np.zeros(bt.shape[:2], dtype=np.int64)
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                v = np.array(list(pdf["q"]), dtype=np.int64)  # (n, dim)
-                ds = (v * v).sum(axis=1)[:, None] - 2 * (v @ cm.T) + cn[None, :]
-                cid = ds.argmin(axis=1)  # first min == smallest cid
-                np.add.at(acc_s, cid, v)
-                acc_n += np.bincount(cid, minlength=cm.shape[0])
-            nz = np.nonzero(acc_n)[0]
+                v = np.array(list(pdf["q"]), dtype=np.int64).reshape(len(pdf), m, sub)
+                _, idx = _nearest(v, bt)
+                for j in range(m):
+                    np.add.at(acc_s[j], idx[:, j], v[:, j, :])
+                    acc_n[j] += np.bincount(idx[:, j], minlength=bt.shape[1])
+            ms, ks = np.nonzero(acc_n)
             yield pd.DataFrame(
                 {
-                    "cid": np.repeat(nz, cm.shape[1]).astype("int32"),
-                    "d": np.tile(
-                        np.arange(cm.shape[1], dtype="int32"), len(nz)
-                    ),
-                    "s": acc_s[nz].reshape(-1),
-                    "n": np.repeat(acc_n[nz], cm.shape[1]),
+                    "sub": np.repeat(ms, sub).astype("int32"),
+                    "cid": np.repeat(ks, sub).astype("int32"),
+                    "d": np.tile(np.arange(sub, dtype="int32"), len(ms)),
+                    "s": acc_s[ms, ks].reshape(-1),
+                    "n": np.repeat(acc_n[ms, ks], sub),
                 }
             )
 
         stats = (
-            vq.mapInPandas(_stats, schema="cid int, d int, s long, n long")
-            .groupBy("cid", "d")
+            vq.mapInPandas(_stats, schema="sub int, cid int, d int, s long, n long")
+            .groupBy("sub", "cid", "d")
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
             .collect()
         )
         bc.unpersist()
-        by_cid: dict[int, dict[int, tuple[int, int]]] = {}
+        s = np.zeros_like(books)
+        n = np.zeros((m, books.shape[1], 1), dtype=np.int64)
         for r in stats:
-            by_cid.setdefault(r["cid"], {})[r["d"]] = (r["s"], r["n"])
-        new_centroids = []
-        for cid in range(len(centroids)):
-            if cid in by_cid:
-                dims = by_cid[cid]
-                new_centroids.append(
-                    [
-                        math.floor(dims[d][0] / dims[d][1] + 0.5)
-                        for d in range(len(centroids[cid]))
-                    ]
-                )
-            else:  # empty cluster keeps its previous centroid
-                new_centroids.append(centroids[cid])
-        centroids = new_centroids
-    return centroids
+            s[r["sub"], r["cid"], r["d"]] = r["s"]
+            n[r["sub"], r["cid"], 0] = r["n"]
+        mean = np.floor(s / np.maximum(n, 1) + 0.5).astype(np.int64)
+        books = np.where(n > 0, mean, books)
+    return books.tolist()
 
 
-def _probe_topk(
-    assigned: DataFrame, n_queries: int, n_probe: int, topk: int
-) -> DataFrame:
-    """Shared search tail: probe list from the query rows' own distance
-    arrays (explodes on the tiny broadcast query side only), score
-    probed lists with exact cosine, window top-k."""
-    qd = assigned.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("qe"), F.col("ds")
-    )
-    probe = (
-        qd.select("query_id", "qe", F.posexplode("ds").alias("cid", "dist"))
+def _train(emb: DataFrame, k: int, iters: int, dim: int = DIM) -> list[list[int]]:
+    """The k trained IVF centroids: ``_lloyd`` with one subspace."""
+    return _lloyd(emb, k, iters, 1, dim)[0]
+
+
+def _probe(qd: DataFrame, n_probe: int) -> DataFrame:
+    """The probe pick: each query's ``n_probe`` nearest lists from its
+    own distance array ``ds`` (ties -> smallest cid).  Explodes the
+    tiny query side only; every other column of ``qd`` rides along."""
+    cols = [c for c in qd.columns if c != "ds"]
+    return (
+        qd.select(*cols, F.posexplode("ds").alias("cid", "dist"))
         .withColumn(
             "pr",
             F.row_number().over(
@@ -270,23 +240,21 @@ def _probe_topk(
             ),
         )
         .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qe", "cid")
+        .select(*cols, "cid")
     )
-    corpus = assigned.select(
-        "cid", F.col("vec_id").alias("neighbor_id"), "embedding"
-    )
+
+
+def _probed_cosine_topk(corpus: DataFrame, probe: DataFrame, topk: int) -> DataFrame:
+    """Shared search tail: the broadcast probe (query_id, qe, cid) joins
+    the probed lists of ``corpus`` (cid, neighbor_id, embedding); exact
+    cosine, distinct pairs, top-k."""
     scored = (
         corpus.join(F.broadcast(probe), "cid")
         .withColumn("sim", F.round(F.expr(P.cosine_spark("qe", "embedding")), 6))
         .select("query_id", "neighbor_id", "sim")
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "neighbor_id", "sim", "rn")
-    )
+    return _top_k(scored, topk, F.desc("sim"))
 
 
 def ivf_ann_topk(
@@ -303,9 +271,11 @@ def ivf_ann_topk(
     assigned = assign_with_dists(emb, centroids).join(
         emb.select("vec_id", "embedding"), "vec_id"
     )
-    # qe == embedding here (queries are corpus rows); alias for the tail
-    assigned = assigned.withColumn("qe", F.col("embedding"))
-    return _probe_topk(assigned, n_queries, n_probe, topk)
+    qd = assigned.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), "ds"
+    )
+    corpus = assigned.select("cid", F.col("vec_id").alias("neighbor_id"), "embedding")
+    return _probed_cosine_topk(corpus, _probe(qd, n_probe), topk)
 
 
 # --------------------------------------------------------------------------
@@ -345,7 +315,36 @@ def build_ivf_index(
         1
     ).write.mode("overwrite").parquet(f"{path}/stats")
     # terminal marker: written only after ALL three artifacts landed
-    durable.commit(spark, path)
+    durable.commit(spark, path, index_fingerprint(emb, k, iters))
+
+
+def index_fingerprint(emb: DataFrame, k: int, iters: int) -> str:
+    """What a materialized IVF / IVF-PQ index is a function of: the
+    (vec_id, embedding) input and the training params.  A bare file
+    scan is keyed on its files, so a serve costs no pass over the
+    rows; any other frame on its content (``durable.fingerprint``)."""
+    return durable.fingerprint(emb, ["vec_id", "embedding"], k, iters)
+
+
+def _served_probe(
+    lists: DataFrame, n_probe: int, n_queries: int, *qcols
+) -> tuple[list, DataFrame, DataFrame]:
+    """Serve-side probe over stored lists (vec_id, ds, cid, ...): the
+    probe pick of the stored query rows, collected to the driver
+    (<= n_queries * n_probe rows of (query_id, *qcols, cid)), returned
+    both as those rows and as a broadcastable frame, with ``lists``
+    filtered to the probed cids — an IN filter that prunes every
+    unprobed list directory (pinned in tests/test_plans.py)."""
+    qd = lists.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), *qcols, "ds"
+    )
+    probe = _probe(qd, n_probe)
+    rows = probe.collect()
+    probed = lists.filter(F.col("cid").isin(sorted({r["cid"] for r in rows})))
+    # every field nullable, like the stored columns: a non-null cid
+    # would drop the isnotnull(cid) filter from the pruned scan's plan
+    schema = T.StructType([T.StructField(f.name, f.dataType) for f in probe.schema])
+    return rows, lists.sparkSession.createDataFrame(rows, schema), probed
 
 
 def ivf_search_index(
@@ -355,47 +354,14 @@ def ivf_search_index(
     n_queries: int = 5,
     topk: int = 3,
 ) -> DataFrame:
-    """Serve from the materialized index: the probe cids are collected
-    to the driver (<= n_queries * n_probe ints, bounded like the
-    centroid literals) and pushed into the lists scan as an IN filter,
-    so PartitionFilters prune every unprobed list directory — pinned in
-    tests/test_plans.py."""
+    """Serve from the materialized index: only the probed list
+    partitions are scanned (``_served_probe``)."""
     lists = spark.read.parquet(f"{path}/lists")
-    qd = lists.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), "ds"
+    _, probe, probed = _served_probe(
+        lists, n_probe, n_queries, F.col("embedding").alias("qe")
     )
-    probe = (
-        qd.select("query_id", "qe", F.posexplode("ds").alias("cid", "dist"))
-        .withColumn(
-            "pr",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy("dist", "cid")
-            ),
-        )
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qe", "cid")
-    )
-    probe_rows = probe.collect()
-    probed_cids = sorted({r["cid"] for r in probe_rows})
-    probe_df = spark.createDataFrame(
-        [(r["query_id"], r["qe"], r["cid"]) for r in probe_rows],
-        "query_id bigint, qe array<float>, cid int",
-    )
-    candidates = lists.filter(F.col("cid").isin(probed_cids)).select(
-        F.col("vec_id").alias("neighbor_id"), "embedding", "cid"
-    )
-    scored = (
-        candidates.join(F.broadcast(probe_df), "cid")
-        .withColumn("sim", F.round(F.expr(P.cosine_spark("qe", "embedding")), 6))
-        .select("query_id", "neighbor_id", "sim")
-        .distinct()
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= topk)
-        .select("query_id", "neighbor_id", "sim", "rn")
-    )
+    corpus = probed.select(F.col("vec_id").alias("neighbor_id"), "embedding", "cid")
+    return _probed_cosine_topk(corpus, probe, topk)
 
 
 def ivf_build_and_search(
@@ -410,16 +376,17 @@ def ivf_build_and_search(
 ) -> DataFrame:
     """Contract wrapper: build (train once, materialize) then serve —
     the full deployment round-trip in one checked query.  The build is
-    SKIPPED when the index already exists at ``path`` (training is
-    deterministic, so the materialized index is a pure function of the
-    input + params — callers embed both in the path): train-once,
+    SKIPPED when the index at ``path`` was built over the same input
+    and params (training is deterministic, so the materialized index is
+    a pure function of both — ``index_fingerprint``): train-once,
     serve-many is the operator's whole point, and repeated calls (bench
     warm+timed passes, re-run drivers) measure SERVING, with the build
     cost paid exactly once.  Built-ness is decided by the terminal
     _BUILT marker written AFTER all three artifacts (ADVICE r3: probing
     centroids — the FIRST write — made a build killed mid-lists look
-    complete forever)."""
-    if not durable.built(spark, path):
+    complete forever); a different frame or k/iters at the same path
+    rebuilds instead of serving the stale index."""
+    if not durable.built(spark, path, index_fingerprint(emb, k, iters)):
         build_ivf_index(emb, path, k, iters)
     return ivf_search_index(spark, path, n_probe, n_queries, topk)
 

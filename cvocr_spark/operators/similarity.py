@@ -28,6 +28,17 @@ N_PLANES = 4
 DIM = 64
 
 
+def _top_k(scored: DataFrame, k: int, order) -> DataFrame:
+    """The one top-k-per-query tail: ``scored`` (query_id, neighbor_id,
+    ...) plus rn = row_number by ``order`` then neighbor_id (int),
+    keeping rn <= k.  ``F.desc`` sorts nulls last, so a NULL score
+    (zero-norm vector) never outranks a real one."""
+    w = Window.partitionBy("query_id").orderBy(order, "neighbor_id")
+    return scored.withColumn("rn", F.row_number().over(w).cast("int")).filter(
+        F.col("rn") <= k
+    )
+
+
 def cosine_topk(emb: DataFrame, n_queries: int = 5, k: int = 5) -> DataFrame:
     """Brute-force cosine top-k: queries = vec_id < n_queries."""
     q = emb.filter(F.col("vec_id") < n_queries).select(
@@ -39,12 +50,7 @@ def cosine_topk(emb: DataFrame, n_queries: int = 5, k: int = 5) -> DataFrame:
         .withColumn("sim", F.round(F.expr(P.cosine_spark("qe", "ce")), 6))
         .select("query_id", "neighbor_id", "sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "sim", "rn")
-    )
+    return _top_k(scored, k, F.desc("sim"))
 
 
 def cosine_topk_sql(n_queries: int = 5, k: int = 5) -> str:
@@ -282,12 +288,7 @@ def lsh_ann_topk(emb: DataFrame, n_queries: int = 5, k: int = 3) -> DataFrame:
         .withColumn("sim", F.round(F.expr(P.cosine_spark("qe", "ce")), 6))
         .select("query_id", "neighbor_id", "sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "sim", "rn")
-    )
+    return _top_k(scored, k, F.desc("sim"))
 
 
 def _probe_flips(n_planes: int, radius: int) -> list[int]:
@@ -343,12 +344,7 @@ def lsh_ann_multiprobe_topk(
         .select("query_id", "neighbor_id", "sim")
         .distinct()  # a neighbor can match several probes of one query
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "sim", "rn")
-    )
+    return _top_k(scored, k, F.desc("sim"))
 
 
 def lsh_ann_multiprobe_topk_sql(

@@ -123,7 +123,8 @@ def curate_corpus(
         # fingerprint of the corpus it was built over; a mismatch
         # rebuilds.  Cost: one count+xor aggregate over survivors per
         # serve call — a scan the gates pipeline performs anyway.
-        if not durable.built(spark, dedup_index_path, _dd.corpus_fingerprint(survivors)):
+        fp = durable.fingerprint(survivors, ["doc_id", "text"])
+        if not durable.built(spark, dedup_index_path, fp):
             _dd.build_dedup_index(survivors, dedup_index_path)
         pairs = _dd.minhash_verified_dups_indexed(
             survivors, dedup_index_path, threshold=threshold

@@ -1,7 +1,6 @@
 from .extract_stream import (  # noqa: F401
     extract_pages_stream,
     read_merged_stats,
-    run_stream_to_parquet,
     run_stream_with_lineage,
     run_stream_with_stats,
 )

@@ -41,25 +41,6 @@ def extract_pages_stream(
     return slim.mapInArrow(extraction_kernel_arrow(cfg), schema=EXTRACTED_DDL)
 
 
-def run_stream_to_parquet(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    cfg: KernelConfig = DEFAULT_CONFIG,
-):
-    """Start the continuous extraction job; returns the StreamingQuery.
-    Exactly-once into the sink via the checkpoint dir."""
-    ext = extract_pages_stream(spark, input_dir, cfg)
-    return (
-        ext.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .start()
-    )
-
-
 def run_stream_with_lineage(
     spark: SparkSession,
     input_dir: str,

@@ -8,6 +8,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cvocr_spark.operators.ann_numpy import cosine_topk_numpy  # noqa: E402
@@ -213,21 +215,83 @@ def test_ivf_torn_build_rebuilds(spark, tmp_path):
     rebuilt = ivf.ivf_build_and_search(spark, emb, path, n_queries=3).collect()
     assert sorted(map(tuple, rebuilt)) == sorted(map(tuple, first))
 
-def test_ivf_numpy_assignment_equals_flat_aggregates(spark):
-    """The production-k assignment (numpy int64 matmul, used past the
-    codegen width ceiling) must be ROW-IDENTICAL to the k-flat-aggregate
-    form: same Spark-side quantizer, same exact integers, same
-    first-min tie-break (VERDICT r3 #8)."""
+def _kernel_vs_flat(emb, centroids):
+    """(flat, kernel): vec_id -> (ds, cid) from the k-flat-aggregate
+    assign_with_dists and from the shared numpy kernel ivf._nearest
+    run on the same Spark-side quantized vectors."""
+    import numpy as np
+
     from cvocr_spark.operators import ivf
 
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    centroids = ivf._train(emb, ivf.IVF_K, ivf.IVF_ITERS)
     flat = {
         r["vec_id"]: (list(r["ds"]), r["cid"])
         for r in ivf.assign_with_dists(emb, centroids).collect()
     }
-    fast = {
-        r["vec_id"]: (list(r["ds"]), r["cid"])
-        for r in ivf.assign_with_dists_numpy(emb, centroids).collect()
+    rows = ivf._quantized(emb).collect()
+    v = np.array([r["q"] for r in rows], dtype=np.int64)[:, None, :]
+    ds, idx = ivf._nearest(v, np.array(centroids, dtype=np.int64)[None])
+    kernel = {
+        r["vec_id"]: (ds[i, 0].tolist(), int(idx[i, 0])) for i, r in enumerate(rows)
     }
+    return flat, kernel
+
+
+def test_ivf_numpy_assignment_equals_flat_aggregates(spark):
+    """The numpy nearest-centroid kernel (training's and encode_numpy's
+    assignment, with no codegen width ceiling) must be ROW-IDENTICAL to
+    the k-flat-aggregate form: same Spark-side quantizer, same exact
+    integers, same first-min tie-break."""
+    from cvocr_spark.operators import ivf
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    centroids = ivf._train(emb, ivf.IVF_K, ivf.IVF_ITERS)
+    flat, fast = _kernel_vs_flat(emb, centroids)
     assert flat == fast
+
+
+def test_ivf_kernel_tie_break_on_duplicated_centroids(spark):
+    """Every centroid twice (2j and 2j+1 equal): each vector's two
+    nearest distances tie exactly, and both the flat form and the
+    kernel must pick the smaller id — all cids even."""
+    from cvocr_spark.operators import ivf
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    centroids = ivf._train(emb, 4, 1)
+    dup = [c for c in centroids for _ in range(2)]
+    flat, fast = _kernel_vs_flat(emb, dup)
+    assert flat == fast and flat
+    assert all(cid % 2 == 0 for _ds, cid in flat.values())
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivfpq"])
+def test_index_built_over_other_frame_or_params_rebuilds(spark, tmp_path, kind):
+    """build-and-search at a path already holding an index built over
+    ANOTHER frame (or other k/iters, or rewritten input files) must
+    rebuild, not serve the stale index: the result equals a fresh run
+    over the new input."""
+    from cvocr_spark.operators import ivf, pq
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    frame_a = emb.filter("vec_id < 300")
+    frame_b = emb.filter("vec_id < 5 OR vec_id >= 300")
+
+    def run(frame, path, k=ivf.IVF_K):
+        if kind == "ivf":
+            out = ivf.ivf_build_and_search(spark, frame, path, k=k, n_queries=5)
+        else:
+            out = pq.ivfpq_build_and_search(spark, frame, path, k=k, n_queries=5)
+        return sorted(map(tuple, out.collect()))
+
+    path = str(tmp_path / "idx")
+    stale = run(frame_a, path)
+    fresh_b = run(frame_b, str(tmp_path / "fresh_b"))
+    assert fresh_b != stale
+    assert run(frame_b, path) == fresh_b
+    fresh_k = run(frame_b, str(tmp_path / "fresh_k4"), k=4)
+    assert run(frame_b, path, k=4) == fresh_k
+    # a bare file scan is keyed on its files: rewriting them rebuilds
+    src, fpath = str(tmp_path / "src"), str(tmp_path / "file_idx")
+    frame_a.write.parquet(src)
+    assert run(spark.read.parquet(src), fpath) == stale
+    frame_b.write.mode("overwrite").parquet(src)
+    assert run(spark.read.parquet(src), fpath) == fresh_b

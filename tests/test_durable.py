@@ -55,3 +55,29 @@ def test_generations_commit_and_retention_over_uri(spark, tmp_path):
     durable.begin(spark, idx)
     assert not durable.built(spark, idx, "7:42")
     assert durable.read_fingerprint(spark, idx) == "7:42"
+
+
+def test_fingerprint_of_file_scan_runs_no_job(spark, tmp_path):
+    """A bare file scan is fingerprinted from its file listing on the
+    driver (no Spark job, so serving a stored index costs no pass over
+    its input); a rewrite changes it.  A derived frame is fingerprinted
+    from its content by one aggregate job."""
+    src = str(tmp_path / "src")
+    spark.range(50).selectExpr("id AS vec_id").write.parquet(src)
+    sc = spark.sparkContext
+
+    def jobs(group, frame):
+        sc.setJobGroup(group, group)
+        try:
+            fp = durable.fingerprint(frame, ["vec_id"], 8)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return fp, sc.statusTracker().getJobIdsForGroup(group)
+
+    fp, ran = jobs("fp_files", spark.read.parquet(src))
+    assert ran == [] and fp.startswith("files:") and fp.endswith(":8")
+    assert durable.fingerprint(spark.read.parquet(src), ["vec_id"], 8) == fp
+    spark.range(60).selectExpr("id AS vec_id").write.mode("overwrite").parquet(src)
+    assert durable.fingerprint(spark.read.parquet(src), ["vec_id"], 8) != fp
+    fp_rows, ran = jobs("fp_rows", spark.read.parquet(src).filter("vec_id < 10"))
+    assert ran != [] and fp_rows.startswith("10:")
