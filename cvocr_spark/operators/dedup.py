@@ -17,6 +17,14 @@ an exact DuckDB oracle.  Scale design:
     skew-killer where one band value would otherwise self-join
     quadratically; skipped buckets are surfaced by
     ``lsh_skipped_buckets``.
+  * band tables      — every band frame that is stored or passed
+    between functions holds RAW (doc_id, band_id, band_val) rows, and
+    every probe runs the hot-bucket guard itself over the whole side it
+    probes (a bucket can be hot only in aggregate, so guarding per
+    stored batch would miss it; guarding guarded rows changes nothing).
+    ``_write_bands`` is the one writer (one ``batch_id`` partition per
+    arrival, dynamic overwrite, so a replayed batch rewrites its own),
+    ``_stored_bands`` the one reader.
   * jaccard verify   — ``verify_pairs_jaccard`` takes the CANDIDATE
     pair list (LSH output) and joins each pair to its two token sets:
     exact token-set Jaccard, linear in candidates, never a token
@@ -75,12 +83,17 @@ def injected_dups_sql(every: int = 10, where: str = "TRUE", generations: int = 1
     return "\n    UNION ALL\n    ".join(parts)
 
 
+def _text_key():
+    """The full-text key '<length>:<md5>' of ``text``.  Length is
+    prepended so even an md5 collision would additionally need equal
+    lengths."""
+    return F.concat(F.length("text").cast("string"), F.lit(":"), F.md5("text"))
+
+
 def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup by FULL-content hash: keep min doc_id per
-    (length, md5) of the whole text.  Length is prepended to the key so
-    even an md5 collision would additionally need equal lengths."""
-    h = F.concat(F.length("text").cast("string"), F.lit(":"), F.md5("text"))
-    return docs.groupBy(h.alias("h")).agg(
+    ``_text_key`` of the whole text."""
+    return docs.groupBy(_text_key().alias("h")).agg(
         F.min("doc_id").alias("keeper"), F.count("*").alias("n_copies")
     )
 
@@ -229,14 +242,27 @@ def _cross_candidates(nb: DataFrame, eb: DataFrame) -> DataFrame:
     )
 
 
-def _stored_bands(spark, path: str) -> DataFrame:
-    """The guarded band table ``build_dedup_index`` wrote under
-    ``path``.  Explicit schema: an EMPTY index (a fresh crawl's first
-    batch) has no data files to infer from, and probing one must find
-    no candidates, not fail."""
-    return spark.read.schema("doc_id bigint, band_val string, band_id int").parquet(
-        f"{path}/bands"
+def _write_bands(bands: DataFrame, dir: str, batch_id: int) -> None:
+    """Store raw band rows as the ``batch_id`` partition of the band
+    table at ``dir``; a rewrite of the same batch replaces only that
+    partition."""
+    (
+        bands.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(dir)
     )
+
+
+def _stored_bands(spark, dir: str) -> DataFrame:
+    """The band table at ``dir``: (doc_id, band_id, band_val, batch_id).
+    Explicit schema: an EMPTY table (a fresh crawl's first batch) has
+    no data files to infer from, and probing one must find no
+    candidates, not fail."""
+    return spark.read.schema(
+        "doc_id bigint, band_id int, band_val string, batch_id bigint"
+    ).parquet(dir)
 
 
 def lsh_skipped_buckets(docs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
@@ -767,12 +793,16 @@ def dedup_clusters(
     ``checkpoint_dir`` makes the label iteration resumable after a
     kill when the graph is large enough for the rounds path (see
     ``connected_components``)."""
-    labels = connected_components(pairs, checkpoint_dir=checkpoint_dir).withColumnRenamed(
-        "node", "doc_id"
-    )
+    return anchor_clusters(docs, connected_components(pairs, checkpoint_dir=checkpoint_dir))
+
+
+def anchor_clusters(docs: DataFrame, labels: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, is_keeper) for every doc of ``docs`` from a
+    (node, label) frame: a doc no label covers is its own singleton
+    cluster, and the keeper is the doc whose id is its cluster's."""
     return (
         docs.select("doc_id")
-        .join(labels, "doc_id", "left")
+        .join(labels.withColumnRenamed("node", "doc_id"), "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("label", F.col("doc_id")).alias("cluster_id"),
@@ -928,16 +958,15 @@ def dedup_incremental(
 
     Returns (doc_id, status, matched_keeper) for every new doc.
     """
-    ex_hash = _exact_hash_table(existing)
-    eb = _safe_banded(_banded(existing), max_bucket)
-    return _incremental_decide(new_docs, existing, ex_hash, eb, threshold, max_bucket)
+    return _incremental_decide(
+        new_docs, existing, _exact_hash_table(existing), _banded(existing), threshold, max_bucket
+    )
 
 
 def _exact_hash_table(existing: DataFrame) -> DataFrame:
-    """(h, matched_keeper): full-text (length, md5) key -> min doc_id."""
-    h = F.concat(F.length("text").cast("string"), F.lit(":"), F.md5("text"))
+    """(h, matched_keeper): full-text key -> min doc_id."""
     return (
-        existing.select(h.alias("h"), "doc_id")
+        existing.select(_text_key().alias("h"), "doc_id")
         .groupBy("h")
         .agg(F.min("doc_id").alias("matched_keeper"))
     )
@@ -948,7 +977,6 @@ def dedup_incremental_pairs(
     existing: DataFrame,
     threshold: float = 0.8,
     max_bucket: int = MAX_BUCKET,
-    wide: bool = False,
     new_bands: DataFrame | None = None,
     existing_bands: DataFrame | None = None,
 ) -> DataFrame:
@@ -962,8 +990,7 @@ def dedup_incremental_pairs(
     ``connected_components_incremental`` — the composed growing-crawl
     dedup (soak_dedup.py incremental section).  Exact cross-batch
     copies surface here too: identical texts share every band and
-    verify at J = 1.0.  ``wide=True`` probes at production banding
-    (k=128, 16x8) to match the soak's pipeline config.
+    verify at J = 1.0.
 
     CONTRACT: doc_ids must be globally unique across ``new_docs`` and
     ``existing`` (ADVICE r5) — the verify corpus is their plain union,
@@ -976,39 +1003,76 @@ def dedup_incremental_pairs(
     on every batch to defend against a caller bug — documented
     instead.
 
-    ``existing_bands`` / ``new_bands`` (r6): RAW band frames
-    (doc_id, band_id, band_val — the ``_banded``/``_banded_wide``
-    output, UNguarded) substituted for the in-plan banding of that
-    side.  This is the stored-band-table serve path for a growing
-    corpus: the existing side's signature recompute — minhashing every
-    shingle of every doc ever ingested, the per-batch cost that grows
-    with corpus size — is replaced by a columnar scan of the stored
-    rows.  The hot-bucket guard still runs HERE, over the supplied
-    frame, because it must count buckets across the whole accumulated
-    side (guarding per batch at write time would miss buckets that are
-    hot only in aggregate) — so pairs are identical to the in-plan
-    form whenever the supplied bands equal that side's ``_banded``
-    output (banding is per-row, so a union of per-batch band frames IS
-    the banding of the union)."""
-    band = _banded_wide if wide else _banded
-    eb = existing_bands if existing_bands is not None else band(existing)
-    nb = new_bands if new_bands is not None else band(new_docs)
+    ``new_bands`` / ``existing_bands``: raw band frames (e.g. rows of a
+    stored band table) used instead of banding that side in-plan with
+    ``_banded``, so a growing corpus is not re-minhashed every batch; a
+    ``_banded_wide`` probe supplies both.  Pairs equal the in-plan
+    form's whenever the supplied bands equal that side's banding
+    (banding is per-row, so a union of per-batch band frames IS the
+    banding of the union)."""
+    # new_docs feeds the verify corpus and, unless its bands are given,
+    # the banding: lazy localCheckpoint so it is evaluated once
+    new = new_docs.select("doc_id", "text").localCheckpoint(eager=False)
+    eb = _banded(existing) if existing_bands is None else existing_bands
+    return _cross_verified(new, existing, eb, threshold, max_bucket, new_bands).select("a", "b")
+
+
+def _cross_verified(
+    new: DataFrame,
+    existing: DataFrame,
+    eb: DataFrame,
+    threshold: float,
+    max_bucket: int,
+    nb: DataFrame | None = None,
+) -> DataFrame:
+    """The one new-vs-existing probe: band ``new`` (doc_id, text)
+    unless its raw bands ``nb`` are given, guard both raw band sides,
+    ``_cross_candidates``, then exact-Jaccard-verify over new ∪
+    existing.  ``new`` has two consumers, so callers pass it behind a
+    lazy localCheckpoint."""
+    nb = _banded(new) if nb is None else nb
     cand = _cross_candidates(_safe_banded(nb, max_bucket), _safe_banded(eb, max_bucket))
-    corpus = new_docs.select("doc_id", "text").unionByName(existing.select("doc_id", "text"))
-    return verify_pairs_jaccard(cand, corpus, threshold).select("a", "b")
+    corpus = new.unionByName(existing.select("doc_id", "text"))
+    return verify_pairs_jaccard(cand, corpus, threshold)
 
 
-def build_dedup_index(
-    existing: DataFrame, path: str, max_bucket: int = MAX_BUCKET
-) -> None:
+def batch_pairs(
+    batch: DataFrame,
+    existing: DataFrame | None,
+    bands: DataFrame,
+    dir: str,
+    batch_id: int,
+    threshold: float = 0.8,
+    max_bucket: int = MAX_BUCKET,
+) -> DataFrame:
+    """Verified pairs (a, b) that an arriving ``batch`` (doc_id, text)
+    adds to a growing corpus: its raw ``bands`` (``_banded`` or
+    ``_banded_wide`` of it) are stored as batch ``batch_id`` of the band
+    table at ``dir``, then the batch-local pairs and, given ``existing``
+    (every earlier batch's docs), the cross-batch ones are probed over
+    the stored rows — no batch is ever minhashed twice."""
+    _write_bands(bands, dir, batch_id)
+    stored = _stored_bands(batch.sparkSession, dir)
+    nb = stored.filter(F.col("batch_id") == batch_id)
+    pairs = minhash_verified_dups_banded(batch, nb, threshold, max_bucket).select("a", "b")
+    if existing is None:
+        return pairs
+    eb = stored.filter(F.col("batch_id") < batch_id)
+    cross = dedup_incremental_pairs(
+        batch, existing, threshold, max_bucket, new_bands=nb, existing_bands=eb
+    )
+    return pairs.unionByName(cross)
+
+
+def build_dedup_index(existing: DataFrame, path: str) -> None:
     """Materialize the incremental-dedup index ONCE per corpus
     generation — the train/serve split for dedup (cf. the IVF index,
     ivf.py: build writes centroids + lists, search only probes).  Two
     parquet artifacts under ``path``:
 
-      exact_hash/  (h, matched_keeper)            — phase-1 probe table
-      bands/       (doc_id, band_id, band_val)    — the stored LSH
-                   index, hot-bucket-guarded, partitioned by band_id
+      exact_hash/  (h, matched_keeper)  — phase-1 probe table
+      bands/       the corpus's raw band table (``_write_bands``, one
+                   batch: 0) — the stored LSH index
 
     Per-batch probing then skips the expensive corpus-side recompute
     (md5 + k minhashes over every shingle of the WHOLE corpus per
@@ -1019,21 +1083,28 @@ def build_dedup_index(
     index would double corpus storage for nothing.
 
     Terminal ``_BUILT`` marker (r5): cleared first, written only after
-    BOTH artifacts land — the durable.py torn-build rule.  A
-    ``_FINGERPRINT`` of the source corpus (``durable.fingerprint`` of
-    doc_id, text) lands just before the marker: serve-many callers
-    (curate_corpus's dedup_index_path switch) gate on
-    ``durable.built(path, fp)`` with the corpus they are about to serve
-    and rebuild on mismatch instead of silently probing stale bands."""
+    BOTH artifacts land — the durable.py torn-build rule.  The
+    ``index_fingerprint`` of the source corpus lands just before the
+    marker: serve-many callers (curate_corpus's dedup_index_path
+    switch) gate on ``durable.built(path, fp)`` with the corpus they
+    are about to serve and rebuild on mismatch instead of silently
+    probing stale bands."""
     spark = existing.sparkSession
     durable.begin(spark, path)
     _exact_hash_table(existing).write.mode("overwrite").parquet(
         f"{path}/exact_hash"
     )
-    _safe_banded(_banded(existing), max_bucket).write.mode("overwrite").partitionBy(
-        "band_id"
-    ).parquet(f"{path}/bands")
-    durable.commit(spark, path, durable.fingerprint(existing, ["doc_id", "text"]))
+    # dynamic overwrite keeps partitions it does not write (e.g. the
+    # band_id=<k> dirs of an index in the older layout): start clean
+    durable.delete(spark, f"{path}/bands")
+    _write_bands(_banded(existing), f"{path}/bands", 0)
+    durable.commit(spark, path, index_fingerprint(existing))
+
+
+def index_fingerprint(existing: DataFrame) -> str:
+    """What a dedup index is a function of: the (doc_id, text) corpus
+    it was built over (``durable.fingerprint``)."""
+    return durable.fingerprint(existing, ["doc_id", "text"])
 
 
 def minhash_verified_dups_banded(
@@ -1047,8 +1118,7 @@ def minhash_verified_dups_banded(
     table): the signature pipeline is not re-derived; the hot-bucket
     guard, candidate self-join and exact-Jaccard verify are the same
     tail as the in-plan form, so pairs are identical whenever ``bands``
-    equals ``_banded(docs)`` (r6 — the streaming cluster maintenance
-    serve path)."""
+    equals ``_banded(docs)``."""
     cand = _self_candidates(_safe_banded(bands, max_bucket))
     return verify_pairs_jaccard(cand, docs, threshold)
 
@@ -1056,17 +1126,13 @@ def minhash_verified_dups_banded(
 def minhash_verified_dups_indexed(
     docs: DataFrame, index_path: str, threshold: float = 0.8
 ) -> DataFrame:
-    """``minhash_verified_dups`` SERVED from a stored band table
-    (written by ``build_dedup_index`` over the SAME doc set): the
-    signature + banding recompute — the part that grows with corpus
-    size — is skipped entirely; the candidate self-join runs over the
-    stored (already hot-bucket-guarded) bands, and the Jaccard verify
-    reads ``docs`` for texts exactly as the in-plan form does.
-    PAIR-IDENTICAL to the in-plan form by construction (the stored
-    bands ARE _safe_banded(_banded(docs))); asserted in
-    tests/test_curate.py via byte-identical manifests."""
-    cand = _self_candidates(_stored_bands(docs.sparkSession, index_path))
-    return verify_pairs_jaccard(cand, docs, threshold)
+    """``minhash_verified_dups_banded`` over the band table that
+    ``build_dedup_index`` stored for the SAME doc set: the signature +
+    banding recompute — the part that grows with corpus size — is
+    skipped entirely.  Manifest identity with the in-plan form is
+    asserted in tests/test_curate.py."""
+    bands = _stored_bands(docs.sparkSession, f"{index_path}/bands")
+    return minhash_verified_dups_banded(docs, bands, threshold)
 
 
 def dedup_incremental_indexed(
@@ -1088,7 +1154,7 @@ def dedup_incremental_indexed(
     ex_hash = spark.read.schema("h string, matched_keeper bigint").parquet(
         f"{index_path}/exact_hash"
     )
-    eb = _stored_bands(spark, index_path)
+    eb = _stored_bands(spark, f"{index_path}/bands")
     return _incremental_decide(new_docs, existing, ex_hash, eb, threshold, max_bucket)
 
 
@@ -1101,10 +1167,9 @@ def _incremental_decide(
     max_bucket: int,
 ) -> DataFrame:
     """Shared decision core: phase-1 exact anti-join against ``ex_hash``,
-    phase-2 LSH probe of the new batch's bands against ``eb`` +
-    exact-Jaccard verify, else new_keeper."""
-    h = F.concat(F.length("text").cast("string"), F.lit(":"), F.md5("text"))
-    nh = new_docs.select("doc_id", "text", h.alias("h"))
+    phase-2 ``_cross_verified`` of the rest against the raw existing
+    bands ``eb``, else new_keeper."""
+    nh = new_docs.select("doc_id", "text", _text_key().alias("h"))
     exact = nh.join(ex_hash, "h").select(
         "doc_id", F.lit("dup_exact").alias("status"), "matched_keeper"
     )
@@ -1117,10 +1182,8 @@ def _incremental_decide(
         .select("doc_id", "text")
         .localCheckpoint(eager=False)
     )
-    cand = _cross_candidates(_safe_banded(_banded(rest), max_bucket), eb)
-    corpus = rest.unionByName(existing.select("doc_id", "text"))
     near = (
-        verify_pairs_jaccard(cand, corpus, threshold)
+        _cross_verified(rest, existing, eb, threshold, max_bucket)
         .groupBy("a")
         .agg(F.min("b").alias("matched_keeper"))
         .select(

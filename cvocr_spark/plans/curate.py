@@ -66,8 +66,7 @@ def curate_corpus(
     downstream knobs (split pct, eval set, scrub policy) skip the
     signature recompute, the part that grows with corpus size.
     Manifests are byte-identical to the in-plan form (asserted in
-    tests/test_curate.py): the stored bands ARE the in-plan band
-    table, guard included.
+    tests/test_curate.py).
 
     CACHING CONTRACT (ADVICE r4): the returned frame references a
     persisted intermediate (the quality survivors — three consumers).
@@ -123,7 +122,7 @@ def curate_corpus(
         # fingerprint of the corpus it was built over; a mismatch
         # rebuilds.  Cost: one count+xor aggregate over survivors per
         # serve call — a scan the gates pipeline performs anyway.
-        fp = durable.fingerprint(survivors, ["doc_id", "text"])
+        fp = _dd.index_fingerprint(survivors)
         if not durable.built(spark, dedup_index_path, fp):
             _dd.build_dedup_index(survivors, dedup_index_path)
         pairs = _dd.minhash_verified_dups_indexed(

@@ -19,6 +19,10 @@ generations are listed, retained and committed through durable.py):
                       probe's ``batch_id < b`` filter partition-prunes
                       so a half-written partition for b never feeds its
                       own existing side
+    bands/            (doc_id, band_id, band_val) raw band rows
+                      PARTITIONED BY batch_id (``dedup._write_bands``):
+                      each batch is banded once, on arrival, and its
+                      rows are probed by every later batch
     labels/gen_<b>/   the full label frame AFTER folding batch b;
                       the parquet ``_SUCCESS`` is the batch's COMMIT
                       MARKER (written last — the torn-build rule)
@@ -57,23 +61,13 @@ def cluster_batch_writer(
     Exposed as a plain function (like lineage_batch_writer) so the
     replay path is unit-testable without a harness kill.
 
-    r6 — SERVED FROM A DURABLE BAND TABLE (VERDICT r5 next #1): the
-    writer maintains ``bands/`` (doc_id, band_id, band_val)
-    PARTITIONED BY batch_id alongside the corpus.  Each batch (a) bands
-    its OWN text exactly once and APPENDS those rows (same
-    dynamic-partition-overwrite idempotence as the corpus dir), then
-    (b) probes the stored prior-batch bands for cross-batch candidates
-    — so per-batch signature cost is O(batch), never O(accumulated
-    corpus): batch N no longer re-minhashes N-1 batches of text, which
-    made the module's own O(batch + new pairs) claim false for the
-    pair stage.  The hot-bucket guard still counts buckets across the
-    whole stored side at probe time (bands are stored RAW), so the
-    discovered pairs — and therefore the labels — are IDENTICAL to the
-    former in-plan re-banding path (asserted in tests/test_streaming).
-    Verify-phase text lookups still read the corpus table: bounded by
-    the candidate list, linear either way.  Reference analogue: the
-    ingest server never re-processes its archive per upload
-    (upload.py:34-76).
+    Pairs come from ``dedup.batch_pairs`` over the ``bands/`` table:
+    each batch is banded exactly once, on arrival, and probes the
+    stored rows of earlier batches, so per-batch signature cost is
+    O(batch), never O(accumulated corpus).  Pairs — and therefore
+    labels — equal the in-plan re-banding form's (asserted in
+    tests/test_streaming).  Reference analogue: the ingest server never
+    re-processes its archive per upload (upload.py:34-76).
 
     ``keep_gens`` (VERDICT r5 next #2, opt-in): retain only the newest
     ``keep_gens`` COMMITTED label generations, deleting older gen_*
@@ -100,40 +94,15 @@ def cluster_batch_writer(
                 .partitionBy("batch_id")
                 .parquet(corpus_dir)
             )
-            # band the batch ONCE, durably; a replayed batch rewrites
-            # its own partition (idempotent)
-            (
-                dedup._banded(batch)
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(bands_dir)
-            )
-            all_bands = spark.read.parquet(bands_dir)
-            nb = all_bands.filter(F.col("batch_id") == batch_id).select(
-                "doc_id", "band_id", "band_val"
-            )
-            sb = all_bands.filter(F.col("batch_id") < batch_id).select(
-                "doc_id", "band_id", "band_val"
-            )
             existing = (
                 spark.read.parquet(corpus_dir)
                 .filter(F.col("batch_id") < batch_id)
                 .select("doc_id", "text")
             )
-            intra = dedup.minhash_verified_dups_banded(
-                batch, nb, threshold=threshold, max_bucket=max_bucket
-            ).select("a", "b")
-            cross = dedup.dedup_incremental_pairs(
-                batch,
-                existing,
-                threshold=threshold,
-                max_bucket=max_bucket,
-                new_bands=nb,
-                existing_bands=sb,
+            new_pairs = dedup.batch_pairs(
+                batch, existing, dedup._banded(batch), bands_dir, batch_id,
+                threshold=threshold, max_bucket=max_bucket,
             )
-            new_pairs = intra.unionByName(cross)
             prev = [g for g in gens if g < batch_id]
             if prev:
                 prev_labels = spark.read.parquet(
@@ -166,20 +135,6 @@ def current_clusters(spark: SparkSession, state_dir: str) -> DataFrame:
     gens = durable.generations(spark, labels_dir, "gen_")
     if not gens:
         raise FileNotFoundError(f"no committed label generation under {state_dir}")
-    gmax = gens[-1]
-    corpus = (
-        spark.read.parquet(os.path.join(state_dir, "corpus"))
-        .filter(F.col("batch_id") <= gmax)
-        .select("doc_id")
-    )
-    labels = spark.read.parquet(
-        os.path.join(labels_dir, f"gen_{gmax}")
-    ).withColumnRenamed("node", "doc_id")
-    return (
-        corpus.join(labels, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("label", F.col("doc_id")).alias("cluster_id"),
-        )
-        .withColumn("is_keeper", F.col("doc_id") == F.col("cluster_id"))
-    )
+    corpus = spark.read.parquet(os.path.join(state_dir, "corpus"))
+    labels = spark.read.parquet(os.path.join(labels_dir, f"gen_{gens[-1]}"))
+    return dedup.anchor_clusters(corpus.filter(F.col("batch_id") <= gens[-1]), labels)

@@ -57,9 +57,9 @@ def incremental_section(spark, corpus, n_docs: int, oneshot_verified=None) -> di
     next #6): the corpus arrives in N_BATCHES batches (batch b =
     variant slice [b*V/N, (b+1)*V/N) of every family — so families
     SPAN batches and only connect through later arrivals); each batch
-    contributes its batch-local verified pairs (wide pipeline) plus
-    ALL cross-batch verified pairs (dedup_incremental_pairs, wide
-    probe), folded by connected_components_incremental with the label
+    contributes its batch-local verified pairs plus ALL cross-batch
+    verified pairs (dedup.batch_pairs over the stored wide band
+    table), folded by connected_components_incremental with the label
     frame round-tripped through parquet per batch (the stored
     per-generation labels a crawl keeps anyway — doubling as the
     Catalyst stats clamp for the cross-batch iteration chain).
@@ -82,7 +82,6 @@ def incremental_section(spark, corpus, n_docs: int, oneshot_verified=None) -> di
     labels_path = None
     existing = None
     all_pairs_paths = []
-    band_paths = []
     batch_walls = []
     t_all = time.perf_counter()
     for b in range(N_BATCHES):
@@ -92,29 +91,12 @@ def incremental_section(spark, corpus, n_docs: int, oneshot_verified=None) -> di
             & (F.col("doc_id") < hi * FAMILY)
         ).persist()
         t0 = time.perf_counter()
-        # r6 (VERDICT r5 next #1, batch face): band the batch ONCE into
-        # a durable per-batch band table and probe STORED bands for the
-        # cross-batch stage — per-batch signature cost is O(batch), so
-        # the per-batch walls below stay flat as the corpus grows
-        # (previously dedup_incremental_pairs re-minhashed the whole
-        # accumulated corpus every batch: wall grew linearly in b).
-        band_path = f"{workdir}/bands_{b}"
-        dedup._banded_wide(batch).write.mode("overwrite").parquet(band_path)
-        nb_raw = spark.read.parquet(band_path)
-        intra = dedup.minhash_verified_dups_banded(
-            batch, nb_raw, threshold=THRESHOLD, max_bucket=MAX_BUCKET
-        ).select("a", "b")
-        if existing is None:
-            new_pairs = intra
-        else:
-            cross = dedup.dedup_incremental_pairs(
-                batch, existing, threshold=THRESHOLD,
-                max_bucket=MAX_BUCKET, wide=True,
-                new_bands=nb_raw,
-                existing_bands=spark.read.parquet(*band_paths),
-            )
-            new_pairs = intra.unionByName(cross)
-        band_paths.append(band_path)
+        # stored bands: per-batch signature cost is O(batch), so the
+        # per-batch walls below stay flat as the corpus grows
+        new_pairs = dedup.batch_pairs(
+            batch, existing, dedup._banded_wide(batch), f"{workdir}/bands", b,
+            threshold=THRESHOLD, max_bucket=MAX_BUCKET,
+        )
         pairs_path = f"{workdir}/pairs_{b}"
         new_pairs.write.mode("overwrite").parquet(pairs_path)
         all_pairs_paths.append(pairs_path)
@@ -135,19 +117,7 @@ def incremental_section(spark, corpus, n_docs: int, oneshot_verified=None) -> di
     all_pairs = spark.read.parquet(*all_pairs_paths)
     t0 = time.perf_counter()
     scratch = dedup.dedup_clusters(corpus, all_pairs)
-    final = (
-        corpus.select("doc_id")
-        .join(
-            spark.read.parquet(labels_path).withColumnRenamed("node", "doc_id"),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            F.coalesce("label", F.col("doc_id")).alias("cluster_id"),
-        )
-        .withColumn("is_keeper", F.col("doc_id") == F.col("cluster_id"))
-    )
+    final = dedup.anchor_clusters(corpus, spark.read.parquet(labels_path))
     diff = (
         final.filter("is_keeper").select("doc_id")
         .exceptAll(scratch.filter("is_keeper").select("doc_id")).count()
