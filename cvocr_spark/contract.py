@@ -127,9 +127,6 @@ def q_extract_blocks_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the contract table
 # --------------------------------------------------------------------------
 
-_DOCS = "SELECT * FROM documents"
-
-
 def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]:
     c: dict[str, tuple[Callable, str | None]] = {}
 
@@ -332,10 +329,10 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
         lambda s, d: dedup.exact_dedup(dedup.with_injected_dups(_t(s, d, "documents"))),
         dedup.exact_dedup_sql(corpus=dedup.injected_dups_sql()),
     )
-    # (the 16-bit simhash demo and the k=8 LSH demo left the contract in
-    # r3 to fit the driver's 50-query window — simhash64_neardup and
-    # minhash_lsh_pairs_k128 gate the same capabilities at production
-    # width; the demos stay pytest-covered: test_dedup.py, test_ann.py)
+    # (the k=8 LSH demo left the contract in r3 to fit its 50-query
+    # window — minhash_lsh_pairs_k128 gates the same capability
+    # at production width, simhash64_neardup the simhash one; the demo
+    # stays pytest-covered: test_dedup.py, test_ann.py)
 
     # production-width signatures (VERDICT r1 item 7)
     from .operators import simhash64

@@ -16,6 +16,9 @@ non-local path).
   * ``<prefix><n>/``  numbered generations (CC ``round_<k>``, streaming
                       ``gen_<b>``) whose parquet ``_SUCCESS`` is the
                       commit; ``generations`` lists only committed ones.
+  * ``<col>=<v>/``    partitions of a table that grows by batch or
+                      bucket, written by ``overwrite_partitions``: a
+                      replayed write replaces only its own partitions.
 """
 
 from __future__ import annotations
@@ -40,6 +43,19 @@ def delete(spark, path: str) -> None:
     """Recursive delete; a missing path is a no-op."""
     fs, p = _fs(spark, path)
     fs.delete(p, True)
+
+
+def overwrite_partitions(df, path: str, col: str) -> None:
+    """Write ``df`` as parquet partitioned by ``col``, replacing only
+    the ``col`` values it holds (dynamic partition overwrite): a batch
+    replayed after a kill rewrites its own partitions instead of
+    duplicating rows, and leaves every other partition alone."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(path)
+    )
 
 
 def read_fingerprint(spark, path: str) -> str | None:

@@ -192,6 +192,7 @@ def build_page(
 # --------------------------------------------------------------------------
 
 import pyarrow as pa  # noqa: E402
+from pyspark.sql.pandas.types import from_arrow_schema  # noqa: E402
 
 PAGES_ARROW_SCHEMA = pa.schema(
     [
@@ -202,6 +203,7 @@ PAGES_ARROW_SCHEMA = pa.schema(
         pa.field("lang", pa.string()),
     ]
 )
+PAGES_DDL = from_arrow_schema(PAGES_ARROW_SCHEMA)
 
 
 def pages_batch(
@@ -216,14 +218,8 @@ def pages_batch(
             htmls.append(raw)
             otexts.append(t)
             olangs.append(l)
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(urls, pa.string()),
-            pa.array(tss, pa.timestamp("us")),
-            pa.array(htmls, pa.binary()),
-            pa.array(otexts, pa.string()),
-            pa.array(olangs, pa.string()),
-        ],
+    return pa.RecordBatch.from_pydict(
+        {"url": urls, "warc_ts": tss, "html": htmls, "text": otexts, "lang": olangs},
         schema=PAGES_ARROW_SCHEMA,
     )
 
@@ -246,9 +242,6 @@ def gen_pages_table(documents_path: str, seed: int = SEED, variants: int = 1) ->
             )
         )
     return pa.Table.from_batches(batches, schema=PAGES_ARROW_SCHEMA)
-
-
-PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 
 
 def gen_pages_df(spark, documents_df, seed: int = SEED, variants: int = 1):

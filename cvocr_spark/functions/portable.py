@@ -69,35 +69,6 @@ def shingles_duck(words: str) -> str:
     )
 
 
-# -- simhash (SURVEY §2 dedup extension; 16-bit for oracle tractability) ----
-
-SIMHASH_BITS = 16
-
-
-def simhash_spark(words: str) -> str:
-    h = hash60_spark("w")
-    terms = []
-    for b in range(SIMHASH_BITS):
-        vote = (
-            f"aggregate({words}, 0L, (acc, w) -> acc + "
-            f"(case when (shiftright({h}, {b}) & 1) = 1 then 1 else -1 end))"
-        )
-        terms.append(f"(case when {vote} > 0 then {1 << b}L else 0L end)")
-    return "(" + " + ".join(terms) + ")"
-
-
-def simhash_duck(words: str) -> str:
-    h = hash60_duck("w")
-    terms = []
-    for b in range(SIMHASH_BITS):
-        vote = (
-            f"list_sum(list_transform({words}, w -> "
-            f"case when (({h} >> {b}) & 1) = 1 then 1 else -1 end))"
-        )
-        terms.append(f"(case when {vote} > 0 then {1 << b}::bigint else 0::bigint end)")
-    return "(" + " + ".join(terms) + ")"
-
-
 # -- minhash signature component (k hash functions via double hashing) ------
 # ONE md5 per shingle: split the 32-hex digest into two 56-bit halves
 # (h1 = hex[0:14], h2 = hex[14:28]) and derive hash_j = h1 + j*h2.

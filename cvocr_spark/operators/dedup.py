@@ -246,13 +246,7 @@ def _write_bands(bands: DataFrame, dir: str, batch_id: int) -> None:
     """Store raw band rows as the ``batch_id`` partition of the band
     table at ``dir``; a rewrite of the same batch replaces only that
     partition."""
-    (
-        bands.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(dir)
-    )
+    durable.overwrite_partitions(bands.withColumn("batch_id", F.lit(batch_id)), dir, "batch_id")
 
 
 def _stored_bands(spark, dir: str) -> DataFrame:

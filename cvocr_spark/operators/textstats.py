@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ..functions import portable as P
 
-_STOP_SPARK = "array(" + ", ".join(f"'{w}'" for w in P.STOPWORDS) + ")"
 _STOP_DUCK = "[" + ", ".join(f"'{w}'" for w in P.STOPWORDS) + "]"
 
 # stopword-token count as ONE codegen regexp_count instead of the

@@ -26,15 +26,9 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel import DEFAULT_CONFIG, KernelConfig, extract
-
-# the `extracted` table schema (FIXTURES.md §2 golden + lineage extras)
-EXTRACTED_DDL = (
-    "url string, warc_ts timestamp, text string, "
-    "spans array<struct<block_id:int,char_start:int,char_end:int,cls:string>>, "
-    "n_blocks int, score double, n_bytes bigint, flags string, proc_us bigint"
-)
 
 _SPAN_TYPE = pa.list_(
     pa.struct(
@@ -60,6 +54,8 @@ _EXTRACTED_ARROW = pa.schema(
         pa.field("proc_us", pa.int64()),
     ]
 )
+# the `extracted` table schema (FIXTURES.md §2 golden + lineage extras)
+EXTRACTED_DDL = from_arrow_schema(_EXTRACTED_ARROW)
 
 
 def extraction_kernel_arrow(cfg: KernelConfig = DEFAULT_CONFIG):
@@ -69,53 +65,23 @@ def extraction_kernel_arrow(cfg: KernelConfig = DEFAULT_CONFIG):
 
     def _run(batches):
         for rb in batches:
-            urls = rb.column("url").to_pylist()
-            tss = rb.column("warc_ts")
-            htmls = rb.column("html").to_pylist()
-            texts, spans, n_blocks, scores, n_bytes, flags, proc_us = (
-                [], [], [], [], [], [], []
-            )
-            for h in htmls:
+            cols = {
+                k: [] for k in "text spans n_blocks score n_bytes flags proc_us".split()
+            }
+            for h in rb.column("html").to_pylist():
                 t0 = time.perf_counter_ns()
                 r = extract(h, cfg)
-                dt_us = (time.perf_counter_ns() - t0) // 1000
-                texts.append(r.text)
-                spans.append(
-                    [
-                        {"block_id": b, "char_start": s, "char_end": e, "cls": c}
-                        for (b, s, e, c) in r.spans
-                    ]
-                )
-                n_blocks.append(r.n_blocks)
-                scores.append(r.score)
-                n_bytes.append(len(h) if h is not None else 0)
-                flags.append(r.flags)
-                proc_us.append(dt_us)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, pa.string()),
-                    tss.cast(pa.timestamp("us")),
-                    pa.array(texts, pa.string()),
-                    pa.array(spans, _SPAN_TYPE),
-                    pa.array(n_blocks, pa.int32()),
-                    pa.array(scores, pa.float64()),
-                    pa.array(n_bytes, pa.int64()),
-                    pa.array(flags, pa.string()),
-                    pa.array(proc_us, pa.int64()),
-                ],
+                cols["proc_us"].append((time.perf_counter_ns() - t0) // 1000)
+                for k in ("text", "spans", "n_blocks", "score", "flags"):
+                    cols[k].append(getattr(r, k))
+                cols["n_bytes"].append(len(h) if h is not None else 0)
+            yield pa.RecordBatch.from_pydict(
+                {"url": rb.column("url"), "warc_ts": rb.column("warc_ts"), **cols},
                 schema=_EXTRACTED_ARROW,
             )
 
     return _run
 
-
-BLOCKS_DDL = (
-    "url string, block_id int, depth int, tag string, text string, "
-    "cls string, conf double, "
-    "candidates array<struct<cls:string,score:double>>, "
-    "n_chars int, link_density double, text_density double, "
-    "boiler_ctx boolean"
-)
 
 _CANDIDATES_TYPE = pa.list_(
     pa.struct([pa.field("cls", pa.string()), pa.field("score", pa.float64())])
@@ -137,6 +103,7 @@ _BLOCKS_ARROW = pa.schema(
         pa.field("boiler_ctx", pa.bool_()),
     ]
 )
+BLOCKS_DDL = from_arrow_schema(_BLOCKS_ARROW)
 
 
 def blocks_kernel_arrow(cfg: KernelConfig = DEFAULT_CONFIG):
@@ -147,51 +114,21 @@ def blocks_kernel_arrow(cfg: KernelConfig = DEFAULT_CONFIG):
 
     def _run(batches):
         for rb in batches:
+            cols: dict[str, list] = {name: [] for name in _BLOCKS_ARROW.names}
             urls = rb.column("url").to_pylist()
-            htmls = rb.column("html").to_pylist()
-            cols: dict[str, list] = {
-                k: []
-                for k in (
-                    "url block_id depth tag text cls conf candidates n_chars "
-                    "link_density text_density boiler_ctx".split()
-                )
-            }
-            for u, h in zip(urls, htmls):
-                r = extract(h, cfg)
-                for b in r.blocks:
-                    cols["url"].append(u)
-                    cols["block_id"].append(b.block_id)
-                    cols["depth"].append(b.depth)
-                    cols["tag"].append(b.tag)
-                    cols["text"].append(b.text)
-                    cols["cls"].append(b.cls)
-                    cols["conf"].append(b.conf)
-                    cols["candidates"].append(
-                        [{"cls": c, "score": s} for (c, s) in b.candidates]
-                    )
-                    cols["n_chars"].append(b.n_chars)
-                    cols["link_density"].append(b.link_density)
-                    cols["text_density"].append(b.text_density)
-                    cols["boiler_ctx"].append(b.boiler_ctx)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols["url"], pa.string()),
-                    pa.array(cols["block_id"], pa.int32()),
-                    pa.array(cols["depth"], pa.int32()),
-                    pa.array(cols["tag"], pa.string()),
-                    pa.array(cols["text"], pa.string()),
-                    pa.array(cols["cls"], pa.string()),
-                    pa.array(cols["conf"], pa.float64()),
-                    pa.array(cols["candidates"], _CANDIDATES_TYPE),
-                    pa.array(cols["n_chars"], pa.int32()),
-                    pa.array(cols["link_density"], pa.float64()),
-                    pa.array(cols["text_density"], pa.float64()),
-                    pa.array(cols["boiler_ctx"], pa.bool_()),
-                ],
-                schema=_BLOCKS_ARROW,
-            )
+            for u, h in zip(urls, rb.column("html").to_pylist()):
+                for b in extract(h, cfg).blocks:
+                    for k, v in cols.items():
+                        v.append(u if k == "url" else getattr(b, k))
+            yield pa.RecordBatch.from_pydict(cols, schema=_BLOCKS_ARROW)
 
     return _run
+
+
+def _nonempty_html(pages: DataFrame) -> DataFrame:
+    """The native-expression prefilter before every kernel stage: a NULL
+    or empty page never enters Python."""
+    return pages.filter(F.col("html").isNotNull() & (F.length("html") > 0))
 
 
 def extract_blocks(
@@ -201,9 +138,7 @@ def extract_blocks(
     salted: bool = False,
 ) -> DataFrame:
     """pages -> classified blocks table (FIXTURES.md §3)."""
-    slim = pages.select("url", "html").filter(
-        F.col("html").isNotNull() & (F.length("html") > 0)
-    )
+    slim = _nonempty_html(pages.select("url", "html"))
     if salted and n_partitions:
         slim = slim.repartition(n_partitions, F.sha2(F.col("url"), 256))
     return slim.mapInArrow(blocks_kernel_arrow(cfg), schema=BLOCKS_DDL)
@@ -224,9 +159,7 @@ def extract_pages(
       host clustering; at 10^12 rows this is the difference between a
       straggler-free stage and a handful of hot hosts pinning executors.
     """
-    slim = pages.select("url", "warc_ts", "html").filter(
-        F.col("html").isNotNull() & (F.length("html") > 0)
-    )
+    slim = _nonempty_html(pages.select("url", "warc_ts", "html"))
     if salted:
         if n_partitions:
             slim = slim.repartition(n_partitions, F.sha2(F.col("url"), 256))

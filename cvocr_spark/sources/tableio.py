@@ -1,5 +1,6 @@
-"""TableIO seam: partitioned parquet + per-partition lineage manifests +
-exact resume (SURVEY §7 step 6; FIXTURES.md §4 manifest schema).
+"""Extraction lineage: partitioned parquet + per-bucket lineage
+manifest + exact resume (SURVEY §7 step 6; FIXTURES.md §4 manifest
+schema).
 
 The reference's only durable IR is the per-line region.txt sink
 (/root/reference/cut.h:872-893) re-read by reco.py:194-216 — a manual
@@ -8,87 +9,38 @@ checkpoint a first-class lineage table:
 
   * the corpus is split into ``n_buckets`` deterministic url-hash
     buckets (``pmod(xxhash64(url), n)``) — the lineage/commit unit;
-  * output is written ``partitionBy('bucket')`` with DYNAMIC partition
-    overwrite, so a re-run of an uncommitted bucket replaces any partial
-    files instead of duplicating them;
-  * after a successful write, one manifest row per bucket is appended:
-    (run_id, bucket, input_fingerprint, n_docs, n_bytes, wall_us,
-    status) — the fingerprint is an order-independent bit_xor of
-    xxhash64(url), cheap at any scale (no sort, no collect);
-  * resume = anti-join pending buckets against committed manifest rows
-    and process only those.
-
-On a real cluster the same seam maps onto Iceberg: ``writeTo(tbl)
-.overwritePartitions()`` + a manifest table; the sandbox pyspark has no
-Iceberg jars (SURVEY preamble), so the parquet impl is the tested one
-and the Iceberg impl is a thin config switch (`fmt='iceberg'`).
+  * output is written partitioned by ``bucket`` through
+    ``durable.overwrite_partitions``, so a re-run of an uncommitted
+    bucket replaces any partial files instead of duplicating them;
+  * after a successful write, ``_commit_manifest`` appends one
+    ``MANIFEST_DDL`` row per bucket, aggregated from the committed rows
+    — the one manifest writer, shared with the streaming path
+    (extract_stream.py), which sets ``batch_id`` where the backfill
+    sets ``run_id``; ``input_fingerprint`` is an order-independent
+    bit_xor of xxhash64(url) and ``wall_us`` the summed kernel time;
+  * the manifest dir's ``_FINGERPRINT`` records the input (url,
+    warc_ts, html), ``n_buckets`` and the kernel config before the
+    first data write, and a resume over different input refuses
+    instead of serving stale buckets;
+  * resume = skip the buckets the manifest holds (``_committed``, the
+    one manifest reader) and process only the rest.
 """
 
 from __future__ import annotations
 
 import uuid
 
-from pyspark.errors import AnalysisException, SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import durable
 from ..kernel import DEFAULT_CONFIG, KernelConfig
-from ..plans.job import extract_pages
+from ..plans.job import EXTRACTED_DDL, extract_blocks, extract_pages
 
 MANIFEST_DDL = (
-    "run_id string, bucket int, input_fingerprint bigint, "
+    "run_id string, batch_id bigint, bucket int, input_fingerprint bigint, "
     "n_docs bigint, n_bytes bigint, wall_us bigint, status string"
 )
-
-
-class ParquetTableIO:
-    """Thin table abstraction: parquet dirs in the sandbox, Iceberg
-    identifiers on a real cluster (same call sites)."""
-
-    def __init__(self, spark: SparkSession, fmt: str = "parquet"):
-        self.spark = spark
-        self.fmt = fmt
-
-    def read(self, path: str) -> DataFrame:
-        if self.fmt == "iceberg":
-            return self.spark.read.format("iceberg").load(path)
-        return self.spark.read.parquet(path)
-
-    def exists(self, path: str) -> bool:
-        """True iff the table is readable AT THE CLUSTER'S storage layer.
-        Probed by attempting the read (schema inference) rather than
-        driver-local os.path checks, which silently return False for
-        S3/HDFS paths and would make resume reprocess every bucket
-        (ADVICE r1).  AnalysisException covers both a missing path and
-        an empty dir with no inferable schema."""
-        if self.fmt == "iceberg":
-            return self.spark.catalog.tableExists(path)
-        try:
-            self.read(path).schema
-            return True
-        except (AnalysisException, SparkRuntimeException):
-            # missing path, empty dir (no inferable schema), or a path
-            # that isn't a coherent table (conflicting partition layout):
-            # all mean "no committed manifest here"
-            return False
-
-    def write_partitioned(self, df: DataFrame, path: str, partition_col: str) -> None:
-        if self.fmt == "iceberg":
-            df.writeTo(path).overwritePartitions()
-            return
-        (
-            df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .parquet(path)
-        )
-
-    def append(self, df: DataFrame, path: str) -> None:
-        if self.fmt == "iceberg":
-            df.writeTo(path).append()
-            return
-        df.write.mode("append").parquet(path)
 
 
 def _with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -96,17 +48,54 @@ def _with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
 
 
-def committed_buckets(io: ParquetTableIO, manifest_dir: str) -> set[int]:
-    if not io.exists(manifest_dir):
+def _committed(spark: SparkSession, manifest_dir: str, col: str) -> set[int]:
+    """The ``col`` values (``bucket`` for the backfill, ``batch_id`` for
+    the stream) that the manifest at ``manifest_dir`` holds.  Explicit
+    schema: a torn first manifest (only ``_temporary/``) reads as
+    nothing committed, and no job infers a schema."""
+    if not durable.exists(spark, manifest_dir):
         return set()
     rows = (
-        io.read(manifest_dir)
-        .filter(F.col("status") == "committed")
-        .select("bucket")
+        spark.read.schema(MANIFEST_DDL)
+        .parquet(manifest_dir)
+        .filter(F.col(col).isNotNull())
+        .select(col)
         .distinct()
         .collect()
     )
-    return {r["bucket"] for r in rows}
+    return {r[col] for r in rows}
+
+
+def _commit_manifest(
+    committed: DataFrame,
+    manifest_dir: str,
+    run_id: str | None = None,
+    batch_id: int | None = None,
+) -> int:
+    """Append one manifest row per bucket of ``committed`` (rows already
+    durably written, carrying ``bucket``); returns the row count.  The
+    at most ``n_buckets`` rows are collected once, so the append scans
+    nothing again."""
+    rows = (
+        committed.groupBy("bucket")
+        .agg(
+            F.expr("bit_xor(xxhash64(url))").alias("input_fingerprint"),
+            F.count("*").alias("n_docs"),
+            F.sum("n_bytes").alias("n_bytes"),
+            F.sum("proc_us").alias("wall_us"),
+        )
+        .collect()
+    )
+    if rows:
+        committed.sparkSession.createDataFrame(
+            [
+                (run_id, batch_id, r["bucket"], r["input_fingerprint"], r["n_docs"],
+                 r["n_bytes"], r["wall_us"], "committed")
+                for r in rows
+            ],
+            MANIFEST_DDL,
+        ).write.mode("append").parquet(manifest_dir)
+    return len(rows)
 
 
 def write_debug_sample(
@@ -114,7 +103,6 @@ def write_debug_sample(
     out_dir: str,
     one_in: int = 1000,
     cfg: KernelConfig = DEFAULT_CONFIG,
-    io: ParquetTableIO | None = None,
 ) -> None:
     """Deterministic 1-in-N per-block debug sink — the graft of the
     reference's intermediate debug artifacts (preprocess.h:532-534
@@ -123,11 +111,8 @@ def write_debug_sample(
     after a kernel change; at 10^12 docs a one-in-a-million sample is
     still a million fully-segmented pages of triage material for the
     cost of a filter pushed down before the Arrow stage."""
-    from ..plans.job import extract_blocks
-
-    io = io or ParquetTableIO(pages.sparkSession)
     sampled = pages.filter(F.pmod(F.xxhash64("url"), F.lit(one_in)) == 0)
-    io.append(extract_blocks(sampled, cfg=cfg), out_dir)
+    extract_blocks(sampled, cfg=cfg).write.mode("append").parquet(out_dir)
 
 
 def run_extraction(
@@ -139,21 +124,29 @@ def run_extraction(
     run_id: str | None = None,
     max_buckets: int | None = None,
     cfg: KernelConfig = DEFAULT_CONFIG,
-    io: ParquetTableIO | None = None,
-    debug_sample_one_in: int | None = None,
 ) -> dict:
     """One (possibly resumed) extraction run.  Returns run stats.
 
     ``max_buckets`` processes only the first k pending buckets — the
     test hook that simulates a run killed partway (SURVEY §5 item 6).
-    ``debug_sample_one_in`` additionally writes the classified blocks
-    of a deterministic 1-in-N url sample to <out_dir>_debug_blocks.
+    Raises ``ValueError`` when the manifest holds committed buckets of
+    a different input, ``n_buckets`` or kernel config: resuming would
+    mix stale buckets into the output, and clearing a user's table is
+    not this function's call.  The check is a file listing, no Spark
+    job, for a bare ``spark.read`` scan.
     """
-    io = io or ParquetTableIO(spark)
     manifest_dir = manifest_dir or out_dir.rstrip("/") + "_manifest"
     run_id = run_id or uuid.uuid4().hex[:12]
 
-    done = committed_buckets(io, manifest_dir)
+    fp = durable.fingerprint(pages, ["url", "warc_ts", "html"], n_buckets, cfg)
+    done = _committed(spark, manifest_dir, "bucket")
+    if not done:
+        durable.write_fingerprint(spark, manifest_dir, fp)
+    elif (recorded := durable.read_fingerprint(spark, manifest_dir)) != fp:
+        raise ValueError(
+            f"{manifest_dir} commits buckets of input {recorded!r}, not of this "
+            f"input {fp!r}: extract into a new out_dir and manifest_dir"
+        )
     pending = _with_bucket(pages, n_buckets).filter(~F.col("bucket").isin(list(done)) if done else F.lit(True))
 
     todo: list[int] | None = None
@@ -166,38 +159,17 @@ def run_extraction(
 
     extracted = extract_pages(pending, cfg=cfg)
     extracted = _with_bucket(extracted, n_buckets)  # recompute: deterministic fn of url
-    io.write_partitioned(extracted, out_dir, "bucket")
-
-    if debug_sample_one_in is not None:
-        write_debug_sample(
-            pending, out_dir.rstrip("/") + "_debug_blocks",
-            one_in=debug_sample_one_in, cfg=cfg, io=io,
-        )
+    durable.overwrite_partitions(extracted, out_dir, "bucket")
 
     # manifest derived from the WRITTEN data (not the in-flight plan), so a
-    # bucket is committed iff its files are durably on disk
-    written = io.read(out_dir)
+    # bucket is committed iff its files are durably on disk; the explicit
+    # schema skips a footer-inference job, `bucket` comes from the paths
+    written = spark.read.schema(EXTRACTED_DDL).parquet(out_dir)
     if todo is not None:
         written = written.filter(F.col("bucket").isin(todo))
     elif done:
         written = written.filter(~F.col("bucket").isin(list(done)))
-    manifest = written.groupBy("bucket").agg(
-        F.expr("bit_xor(xxhash64(url))").alias("input_fingerprint"),
-        F.count("*").alias("n_docs"),
-        F.sum("n_bytes").alias("n_bytes"),
-        F.sum("proc_us").alias("wall_us"),
-    ).select(
-        F.lit(run_id).alias("run_id"),
-        F.col("bucket").cast("int"),
-        "input_fingerprint",
-        "n_docs",
-        "n_bytes",
-        "wall_us",
-        F.lit("committed").alias("status"),
-    )
-    io.append(manifest, manifest_dir)
-
-    n_new = manifest.count()
+    n_new = _commit_manifest(written, manifest_dir, run_id=run_id)
     return {
         "run_id": run_id,
         "buckets_committed_before": len(done),
@@ -220,8 +192,8 @@ def write_bucketed_table(
     shuffle-free, with the runtime salted repartition (plans/job.py)
     left as the ad-hoc fallback for unbucketed input.  The Iceberg
     production analogue is `PARTITIONED BY (bucket(N, url))`; this is
-    the same contract through Spark's own catalog (the sandbox has no
-    Iceberg jars — the seam stays thin).
+    the same contract through Spark's own catalog (no Iceberg jars are
+    available to test against).
 
     Robust to the torn-write case: a table whose CATALOG entry is gone
     (session restart with an in-memory catalog, or a crashed write)

@@ -13,9 +13,9 @@ pairs) cost instead of re-clustering the world.
 State layout under ``state_dir`` (any Hadoop filesystem path or URI;
 generations are listed, retained and committed through durable.py):
 
-    corpus/           (doc_id, text) PARTITIONED BY batch_id —
-                      dynamic-partition-overwrite, so a replayed batch
-                      rewrites its own partition (idempotent), and the
+    corpus/           (doc_id, text) PARTITIONED BY batch_id
+                      (``durable.overwrite_partitions``), so a replayed
+                      batch rewrites its own partition, and the
                       probe's ``batch_id < b`` filter partition-prunes
                       so a half-written partition for b never feeds its
                       own existing side
@@ -87,12 +87,8 @@ def cluster_batch_writer(
             return  # fully committed: replayed microbatch is a no-op
         batch = df.select("doc_id", "text").persist()
         try:
-            (
-                batch.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(corpus_dir)
+            durable.overwrite_partitions(
+                batch.withColumn("batch_id", F.lit(batch_id)), corpus_dir, "batch_id"
             )
             existing = (
                 spark.read.parquet(corpus_dir)

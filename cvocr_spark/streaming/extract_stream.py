@@ -16,11 +16,13 @@ dir playing the role the lineage manifest plays for batch.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from .. import durable
+from ..fixtures import PAGES_DDL
 from ..kernel import DEFAULT_CONFIG, KernelConfig
-from ..plans.job import EXTRACTED_DDL, extraction_kernel_arrow
-
-PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
+from ..plans.job import extract_pages
+from ..sources.tableio import _commit_manifest, _committed, _with_bucket
 
 
 def extract_pages_stream(
@@ -29,16 +31,15 @@ def extract_pages_stream(
     cfg: KernelConfig = DEFAULT_CONFIG,
     max_files_per_trigger: int = 8,
 ) -> DataFrame:
-    """Streaming pages-dir -> streaming extracted DataFrame."""
+    """Streaming pages-dir -> streaming extracted DataFrame: the batch
+    ``extract_pages`` plan over a file-source stream, unsalted (a
+    microbatch is small; the salt is a backfill skew defense)."""
     pages = (
         spark.readStream.schema(PAGES_DDL)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-    slim = pages.select("url", "warc_ts", "html").filter(
-        "html IS NOT NULL AND length(html) > 0"
-    )
-    return slim.mapInArrow(extraction_kernel_arrow(cfg), schema=EXTRACTED_DDL)
+    return extract_pages(pages, cfg=cfg, salted=False)
 
 
 def run_stream_with_lineage(
@@ -53,14 +54,15 @@ def run_stream_with_lineage(
 ):
     """Streaming extraction with the SAME lineage story as the batch
     path (tableio.py manifests): every microbatch writes output rows
-    carrying (bucket, batch_id) and appends one manifest row per bucket
-    touched — so a killed stream resumes from the checkpoint without
-    reprocessing, downstream audits read one manifest whether rows
-    arrived via backfill or stream, and a REPLAYED microbatch (failure
-    after the sink write but before the checkpoint commit — the gap the
-    built-in parquet sink closes with _spark_metadata, which foreachBatch
-    loses) is detected by its batch_id in the manifest and skipped:
-    the manifest anti-join IS the idempotence, exactly as in the batch
+    carrying (bucket, batch_id) and appends one ``MANIFEST_DDL`` row per
+    bucket touched, through the backfill's own manifest writer — so a
+    killed stream resumes from the checkpoint without reprocessing,
+    downstream audits read one manifest whether rows arrived via
+    backfill or stream, and a REPLAYED microbatch (failure after the
+    sink write but before the checkpoint commit — the gap the built-in
+    parquet sink closes with _spark_metadata, which foreachBatch loses)
+    is detected by its batch_id in the manifest and skipped: the
+    manifest anti-join IS the idempotence, exactly as in the batch
     run_extraction.  Returns the StreamingQuery."""
     manifest_dir = manifest_dir or output_dir.rstrip("/") + "_manifest"
     ext = extract_pages_stream(spark, input_dir, cfg, max_files_per_trigger)
@@ -82,46 +84,28 @@ def lineage_batch_writer(
 
     Two scale/correctness properties (ADVICE r3, VERDICT r3 #6):
 
-      * The output is PARTITIONED BY batch_id and written with dynamic
-        partition overwrite, so a microbatch replayed after a crash
-        INSIDE the commit window (output landed, manifest row didn't)
-        rewrites its own batch_id partition instead of appending
-        duplicates — the sink itself is idempotent per batch_id, not
-        just manifest-guarded.
-      * The manifest row derives from the in-memory microbatch frame
-        (persisted across write + count so the kernel pipeline runs
+      * The output is PARTITIONED BY batch_id
+        (``durable.overwrite_partitions``), so a microbatch replayed
+        after a crash INSIDE the commit window (output landed, manifest
+        row didn't) rewrites its own batch_id partition instead of
+        appending duplicates — the sink itself is idempotent per
+        batch_id, not just manifest-guarded.
+      * The manifest rows derive from the in-memory microbatch frame
+        (persisted across write + aggregate so the kernel pipeline runs
         once), NEVER from re-reading the output directory — the old
         full-output rescan cost O(total rows ever written) listing+scan
         per batch, quadratic over an always-on stream's life.  The
         committed-id set is likewise read once per writer (one restart)
         and maintained in memory, not re-collected per batch.
     """
-    from pyspark.sql import functions as F
-
-    from ..sources.tableio import ParquetTableIO, _with_bucket
-
-    io = ParquetTableIO(spark)
     committed: set[int] | None = None  # lazy: read the manifest ONCE
 
     def write_batch(df: DataFrame, batch_id: int) -> None:
-        import time as _time
-
         nonlocal committed
         if committed is None:
-            committed = (
-                {
-                    r["batch_id"]
-                    for r in io.read(manifest_dir)
-                    .select("batch_id")
-                    .distinct()
-                    .collect()
-                }
-                if io.exists(manifest_dir)
-                else set()
-            )
+            committed = _committed(spark, manifest_dir, "batch_id")
         if batch_id in committed:
             return  # replayed microbatch: already fully committed
-        t0 = _time.perf_counter()
         # the SAME bucket derivation as the batch manifest (tableio), so
         # batch and stream rows audit under one lineage key space
         out = (
@@ -130,20 +114,8 @@ def lineage_batch_writer(
             .persist()
         )
         try:
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(output_dir)
-            )
-            counts = out.groupBy("bucket").agg(F.count("*").alias("n_docs")).collect()
-            wall_us = int((_time.perf_counter() - t0) * 1e6)
-            if counts:
-                mani = spark.createDataFrame(
-                    [(r["bucket"], batch_id, r["n_docs"], wall_us) for r in counts],
-                    "bucket int, batch_id bigint, n_docs bigint, wall_us bigint",
-                )
-                mani.write.mode("append").parquet(manifest_dir)
+            durable.overwrite_partitions(out, output_dir, "batch_id")
+            if _commit_manifest(out, manifest_dir, batch_id=batch_id):
                 committed.add(batch_id)
         finally:
             out.unpersist()
@@ -162,8 +134,6 @@ def stats_batch_writer(spark: SparkSession, stats_dir: str):
     equals the batch-computed histogram over the same rows (asserted in
     tests/test_streaming.py), so a dashboard reads O(batches x buckets)
     rows, never the output table."""
-    from pyspark.sql import functions as F
-
     from ..operators.histsketch import log2_histogram
 
     def write_stats(df: DataFrame, batch_id: int) -> None:
@@ -172,20 +142,13 @@ def stats_batch_writer(spark: SparkSession, stats_dir: str):
             "grp_src",
             "v",
         ).withColumn("batch_id", F.lit(batch_id))
-        (
-            hist.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(stats_dir)
-        )
+        durable.overwrite_partitions(hist, stats_dir, "batch_id")
 
     return write_stats
 
 
 def read_merged_stats(spark: SparkSession, stats_dir: str) -> DataFrame:
     """(grp, bucket, n) — the merged histogram over all batches."""
-    from pyspark.sql import functions as F
-
     return (
         spark.read.parquet(stats_dir)
         .groupBy("grp", "bucket")

@@ -16,14 +16,15 @@ _PKG = pathlib.Path(__file__).resolve().parent.parent / "cvocr_spark"
 
 
 def test_filesystem_access_only_in_durable():
-    """A hand-written state layer elsewhere (Hadoop FS handles, or a
-    local-only listing that sees nothing on a non-local path) fails
-    here: route it through cvocr_spark/durable.py instead."""
+    """A hand-written state layer elsewhere (Hadoop FS handles, a
+    local-only listing that sees nothing on a non-local path, or a
+    partition-overwrite commit of its own) fails here: route it through
+    cvocr_spark/durable.py instead."""
     offenders = [
         f"{path.relative_to(_PKG)}: {needle}"
         for path in sorted(_PKG.rglob("*.py"))
         if path.name != "durable.py"
-        for needle in ("org.apache.hadoop.fs", "os.listdir")
+        for needle in ("org.apache.hadoop.fs", "os.listdir", "partitionOverwriteMode")
         if needle in path.read_text()
     ]
     assert offenders == []

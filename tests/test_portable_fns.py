@@ -105,24 +105,6 @@ def test_words_and_shingles_cross_engine(frames):
     assert got == want
 
 
-def test_simhash_cross_engine(frames):
-    sdf, con = frames
-    import pyspark.sql.functions as F
-
-    got = {
-        r["id"]: r["s"]
-        for r in sdf.select(
-            "id", F.expr(P.simhash_spark(P.words_spark("text"))).alias("s")
-        ).collect()
-    }
-    want = dict(
-        con.execute(
-            f"SELECT id, {P.simhash_duck(P.words_duck('text'))} FROM t"
-        ).fetchall()
-    )
-    assert got == want
-
-
 def test_ngrams_cross_engine_adversarial(frames):
     """The r4 n-word shingle builder (decontamination) must agree on
     the adversarial corpus exactly like the fixed 3-word builder."""

@@ -15,7 +15,9 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from cvocr_spark import durable  # noqa: E402
 from cvocr_spark.fixtures import gen_pages_df, gen_pages_table  # noqa: E402
+from cvocr_spark.kernel import DEFAULT_CONFIG  # noqa: E402
 from cvocr_spark.plans.job import extract_pages  # noqa: E402
 from cvocr_spark.sources.tableio import run_extraction  # noqa: E402
 
@@ -84,6 +86,109 @@ def test_resume_after_partial_run(spark, pages):
         assert r3["buckets_committed_now"] == 0
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_resume_refuses_changed_input(spark, pages, tmp_path):
+    """A manifest commits buckets of ONE input: resuming it with another
+    ``n_buckets`` (a bare file scan, fingerprinted from its listing) or
+    with changed html (a derived frame, fingerprinted from its content)
+    must refuse, naming both keys, and leave the output as it was —
+    not mix stale buckets in (444 rows / 369 urls of 500) or commit
+    nothing over stale text (all 500 rows stale)."""
+    src = str(tmp_path / "pages")
+    pages.write.parquet(src)
+    for out, first, changed, kw in (
+        (str(tmp_path / "nb"), spark.read.parquet(src), spark.read.parquet(src), {"n_buckets": 7}),
+        (str(tmp_path / "html"), pages,
+         pages.withColumn("html", F.concat("html", F.lit(b"<p>edit</p>"))), {"n_buckets": 12}),
+    ):
+        run_extraction(spark, first, out, n_buckets=12, max_buckets=3)
+        n_out = spark.read.parquet(out).count()
+        recorded = durable.read_fingerprint(spark, out + "_manifest")
+        now = durable.fingerprint(changed, ["url", "warc_ts", "html"], kw["n_buckets"], DEFAULT_CONFIG)
+        assert recorded != now
+        with pytest.raises(ValueError) as err:
+            run_extraction(spark, changed, out, **kw)
+        assert recorded in str(err.value) and now in str(err.value)
+        assert spark.read.parquet(out).count() == n_out
+        assert spark.read.parquet(out + "_manifest").count() == 3
+
+
+def test_torn_first_manifest_reads_as_nothing_committed(spark, pages, tmp_path):
+    """A kill inside the first manifest append leaves only
+    ``_temporary/``: both the backfill and the stream writer must read
+    it as nothing committed and commit every bucket / the batch."""
+    from cvocr_spark.sources.tableio import _committed
+    from cvocr_spark.streaming.extract_stream import lineage_batch_writer
+
+    few = pages.limit(40)
+    for name in ("b", "s"):
+        os.makedirs(tmp_path / f"{name}_manifest" / "_temporary" / "0")
+        assert _committed(spark, str(tmp_path / f"{name}_manifest"), "bucket") == set()
+    r = run_extraction(spark, few, str(tmp_path / "b"), n_buckets=4)
+    assert r["buckets_committed_before"] == 0 and r["buckets_committed_now"] == 4
+    writer = lineage_batch_writer(spark, str(tmp_path / "s"), str(tmp_path / "s_manifest"), 4)
+    writer(extract_pages(few, salted=False), 0)
+    assert _committed(spark, str(tmp_path / "s_manifest"), "batch_id") == {0}
+    assert spark.read.parquet(str(tmp_path / "s")).count() == 40
+
+
+def test_run_extraction_job_count(spark, pages, tmp_path):
+    """Spark jobs of one backfill over a bare file scan, fresh and as a
+    no-op resume: 9 and 10 under this local[8] session while the
+    manifest was re-scanned by a count and every read inferred its
+    schema.  Counted via statusTracker."""
+    src = str(tmp_path / "pages")
+    pages.coalesce(2).write.parquet(src)
+    sc = spark.sparkContext
+
+    def jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            r = run_extraction(spark, spark.read.parquet(src), str(tmp_path / "out"), n_buckets=12)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return r, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    fresh, n_fresh = jobs("extract-fresh")
+    noop, n_noop = jobs("extract-noop-resume")
+    assert (fresh["buckets_committed_now"], noop["buckets_committed_now"]) == (12, 0)
+    assert n_fresh <= 6 and n_noop <= 5, (n_fresh, n_noop)
+
+
+def test_backfill_and_stream_manifests_read_through_one_reader(spark, pages, tmp_path):
+    """Backfill and stream commit lineage through one writer: both
+    manifests hold the ``MANIFEST_DDL`` columns (``batch_id`` NULL in
+    the backfill, ``run_id`` NULL in the stream), the one reader
+    ``_committed`` lists what each committed, and in each ``n_docs``
+    per bucket equals the output's rows, ``wall_us`` their summed
+    ``proc_us``."""
+    from cvocr_spark.sources.tableio import MANIFEST_DDL, _committed
+    from cvocr_spark.streaming.extract_stream import lineage_batch_writer
+
+    few = pages.limit(60).cache()
+    b_out, s_out = str(tmp_path / "b"), str(tmp_path / "s")
+    run_extraction(spark, few, b_out, n_buckets=8, run_id="r1")
+    writer = lineage_batch_writer(spark, s_out, s_out + "_manifest", n_buckets=8)
+    for batch_id, half in enumerate(("length(url) % 2 = 0", "length(url) % 2 = 1")):
+        writer(extract_pages(few.filter(half), salted=False), batch_id)
+
+    def per_bucket(df, n, us):
+        return {
+            r["bucket"]: (r["n"], r["us"])
+            for r in df.groupBy("bucket").agg(F.sum(n).alias("n"), F.sum(us).alias("us")).collect()
+        }
+
+    for out, col, keys, unset in ((b_out, "bucket", set(range(8)), "batch_id"),
+                                  (s_out, "batch_id", {0, 1}, "run_id")):
+        mani = spark.read.parquet(out + "_manifest")
+        assert mani.schema.simpleString() == spark.createDataFrame([], MANIFEST_DDL).schema.simpleString()
+        assert mani.filter(F.col(unset).isNotNull()).count() == 0
+        assert _committed(spark, out + "_manifest", col) == keys
+        assert per_bucket(mani, "n_docs", "wall_us") == per_bucket(
+            spark.read.parquet(out).withColumn("one", F.lit(1)), "one", "proc_us"
+        )
+    few.unpersist()
 
 
 def test_spark_gen_matches_local_gen(spark, pages):
