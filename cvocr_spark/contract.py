@@ -32,25 +32,10 @@ from .operators import (
     windows,
 )
 from .plans.job import extract_blocks, extract_pages
-from .session import ensure_shipped
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _shipped(
-    query: Callable[[SparkSession, str], DataFrame],
-) -> Callable[[SparkSession, str], DataFrame]:
-    """``query`` with the package shipped to the Python workers first —
-    for queries that reach connected components, whose small-graph
-    solve runs as a mapInArrow stage."""
-
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        ensure_shipped(spark)
-        return query(spark, sf_dir)
-
-    return run
 
 
 # --------------------------------------------------------------------------
@@ -61,7 +46,6 @@ _URL_SQL = "concat('https://', source, '.example.com/', lang, '/doc', doc_id)"
 
 
 def q_extract_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_shipped(spark)
     docs = _t(spark, sf_dir, "documents")
     pages = gen_pages_df(spark, docs)
     ext = extract_pages(pages)
@@ -76,7 +60,6 @@ EXTRACT_ROUNDTRIP_SQL = f"SELECT {_URL_SQL} AS url, text FROM documents"
 
 
 def q_extract_chars_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ensure_shipped(spark)
     docs = _t(spark, sf_dir, "documents")
     pages = gen_pages_df(spark, docs)
     ext = extract_pages(pages)
@@ -111,7 +94,6 @@ def q_extract_blocks_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     block stats.  Kernel-internal segmentation/classification is not
     SQL-derivable, so this entry has no oracle (driver's rows-only
     check); byte-level verification lives in the golden pytest suite."""
-    ensure_shipped(spark)
     docs = _t(spark, sf_dir, "documents")
     pages = gen_pages_df(spark, docs)
     blocks = extract_blocks(pages)
@@ -145,7 +127,6 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
 
     def q_extract_match_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # C5 golden-comparison join: extraction output vs source-of-truth
-        ensure_shipped(spark)
         docs = _t(spark, sf_dir, "documents")
         pages = gen_pages_df(spark, docs)
         got = extract_pages(pages).select(
@@ -313,7 +294,7 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
     )
     c["repetition_stats"] = (
         # Gopher-style repetition quality filters (dup n-gram fraction,
-        # top-word fraction) — explode -> flat aggregates, codegen'd
+        # top-word fraction) — counts from the per-document text kernel
         lambda s, d: textstats.repetition_stats(_t(s, d, "documents")),
         textstats.repetition_stats_sql(),
     )
@@ -367,21 +348,21 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
         # union-find graft, ergroup.cpp:47-64,163-171); two injected dup
         # generations give >2-member components the propagation must
         # collapse transitively
-        _shipped(lambda s, d: dedup.dedup_clusters(
+        lambda s, d: dedup.dedup_clusters(
             dedup.with_injected_dups(_t(s, d, "documents"), generations=2),
             dedup.minhash_lsh_pairs(
                 dedup.with_injected_dups(_t(s, d, "documents"), generations=2)
             ),
-        )),
+        ),
         dedup.dedup_clusters_sql(corpus=dedup.injected_dups_sql(generations=2)),
     )
     c["dedup_clusters_verified"] = (
         # the production default: LSH -> exact-Jaccard verify -> CC ->
         # keepers (clustering raw candidates chains unrelated docs —
         # measured on the 200k soak)
-        _shipped(lambda s, d: dedup.dedup_clusters_verified(
+        lambda s, d: dedup.dedup_clusters_verified(
             dedup.with_injected_dups(_t(s, d, "documents"), generations=2)
-        )),
+        ),
         dedup.dedup_clusters_verified_sql(
             corpus=dedup.injected_dups_sql(generations=2)
         ),
@@ -414,7 +395,6 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
         # curate_corpus docstring).
         from .plans.curate import curate_corpus
 
-        ensure_shipped(s)
         docs = dedup.with_injected_dups(
             _t(s, d, "documents").select("doc_id", "text")
         )
@@ -495,7 +475,7 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
     c["embedding_dedup_clusters"] = (
         # vector-modality dedup to keepers (LSH pairs -> CC), same
         # resolution story as the token-space dedup_clusters
-        _shipped(lambda s, d: similarity.embedding_dedup_clusters(_t(s, d, "embeddings"))),
+        lambda s, d: similarity.embedding_dedup_clusters(_t(s, d, "embeddings")),
         similarity.embedding_dedup_clusters_sql(),
     )
 
@@ -528,7 +508,6 @@ def build_contract() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame]
         # stays asserted in tests/test_ann.py.
         from .operators import ann_numpy
 
-        ensure_shipped(s)
         return ann_numpy.cosine_topk_numpy(_t(s, d, "embeddings"))
 
     from .operators.ann_numpy import cosine_topk_numpy_sql

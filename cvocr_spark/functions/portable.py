@@ -44,18 +44,9 @@ def words_duck(col: str = "text") -> str:
 
 
 # -- 3-word shingles (document fingerprinting / minhash base) ---------------
-# Spark arrays are 0-based via element_at(1-based); DuckDB lists are 1-based.
-# Both guard size<3 (ANSI sequence() with negative bounds would throw).
-
-def shingles_spark(words: str) -> str:
-    return (
-        f"case when size({words}) >= 3 then "
-        f"transform(sequence(1, size({words}) - 2), "
-        f"i -> concat_ws(' ', element_at({words}, i), "
-        f"element_at({words}, i + 1), element_at({words}, i + 2))) "
-        f"else array(concat_ws(' ', {words})) end"
-    )
-
+# DuckDB lists are 1-based; the size<3 guard keeps range() bounds valid.
+# The Spark side builds shingles in the per-document text kernel
+# (operators/doctext.py), with the same NULL/empty/short rules.
 
 def shingles_duck(words: str) -> str:
     # coalesce in the else branch: NULL text -> NULL words -> Spark's
@@ -74,10 +65,8 @@ def shingles_duck(words: str) -> str:
 # (h1 = hex[0:14], h2 = hex[14:28]) and derive hash_j = h1 + j*h2.
 # Max value h1 + (k-1)*h2 < 2^56 * k — safe in bigint for k <= 63 under
 # ANSI mode.  8x fewer md5 calls than salting the hash per function.
-
-
-# Spark-side signature computation lives in operators/dedup.py
-# (_minhash_sigs_flat); the oracle-only list forms below stay.
+# The Spark side computes signatures in the per-document text kernel
+# (operators/doctext.py); the list forms below are the DuckDB oracle's.
 
 
 def minhash_pairs_duck(shingles: str) -> str:
@@ -98,10 +87,6 @@ def minhash_from_pairs_duck(pairs_col: str, k: int) -> list[str]:
 # The 14-hex (56-bit) halves above cap k at 63 under signed-bigint ANSI
 # math (h1 + (k-1)*h2 < 2^56 * k).  For k=128 use 13-hex (52-bit)
 # halves: max h1 + 127*h2 < 2^52 * 128 = 2^59 — safe in both engines.
-# Spark-side signature computation lives in operators/dedup.py
-# (_minhash_sigs_flat: explode -> flat MIN aggregates — HOF array
-# expressions are interpreted, measured ~100ms/doc at k=128); only the
-# DuckDB oracle uses the list-expression form.
 
 MINHASH_WIDE_K = 128
 
@@ -113,27 +98,17 @@ def minhash_pairs_wide_duck(shingles: str) -> str:
     )
 
 
-def hn_spark(hexpr: str, off: int, n: int) -> str:
-    return f"cast(conv(substr({hexpr}, {off}, {n}), 16, 10) as bigint)"
-
-
 def hn_duck(hexpr: str, off: int, n: int) -> str:
     return f"cast('0x' || substr({hexpr}, {off}, {n}) as bigint)"
 
 
 # -- 64-bit simhash as two 32-bit halves (bigint-safe in both engines) -------
-# Two salted md5s per word (lo/hi), 32 bits each; the Spark side folds
-# ONE aggregate with an array<long> vote state (2 md5 per word total);
-# the DuckDB oracle states the same votes as 64 independent list_sums —
-# different plan, identical values.
+# Two salted md5s per word (lo/hi), 32 bits each, one +-1 vote per word
+# per bit.  The Spark side counts the votes in the per-document text
+# kernel (operators/doctext.py); the DuckDB oracle states them as 64
+# independent list_sums — different plan, identical values.
 
 SIMHASH64_MASK32 = (1 << 32) - 1
-
-
-# (the Spark side builds its votes as 64 flat SUM aggregate columns in
-# operators/simhash64.py — higher-order-function folds proved 60x
-# slower than codegen'd flat expressions; only the DuckDB oracle uses
-# the list-expression form below)
 
 
 def simhash64_pairs_duck(words: str) -> str:

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import portable as P
+from ..session import ensure_shipped
 
 DIM = 64
 _LOCAL_DDL = "query_id bigint, neighbor_id bigint, dot bigint, na bigint"
@@ -87,6 +88,7 @@ def cosine_topk_numpy(emb: DataFrame, n_queries: int = 5, k: int = 5) -> DataFra
                 }
             )
 
+    ensure_shipped(spark)  # the Arrow stage runs _score on the workers
     local = vq.mapInPandas(_score, schema=_LOCAL_DDL)
     # the one float division happens HERE, with the oracle's expression:
     # zero-norm rows become NULL (not NaN) and sort last under desc

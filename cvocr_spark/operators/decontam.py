@@ -9,8 +9,8 @@ the hash — the eval side is tiny by construction (benchmarks are
 thousands of docs, not billions) so Catalyst broadcasts it and the
 corpus side never shuffles; the corpus-side explode is linear and
 feeds a distinct-by-doc semi-join result.  No HOF evaluates per
-shingle: hashing happens AFTER explode in codegen (the dedup.py
-pattern).  Cross-engine pinned in tests/test_decontam.py.
+shingle: hashing happens AFTER explode in codegen.  Cross-engine
+pinned in tests/test_decontam.py.
 
 Reference analogue: the golden-comparison join (C5, extract.py:16-23)
 — there comparing extraction to truth per line, here comparing a

@@ -9,9 +9,10 @@ an exact DuckDB oracle.  Scale design:
     at 100 TB this is the cheapest possible dedup (partial agg combines
     map-side).  The hash input is the whole document — two docs sharing
     a prefix but diverging later never merge.
-  * minhash + LSH    — signatures are per-row expressions (no shuffle),
-    banding turns O(n^2) similarity into an equi-join on band keys:
-    shuffle on (band_id, band_val), join only within buckets.  A
+  * minhash + LSH    — signatures come from the per-document text
+    kernel (doctext.py: one Arrow pass, no shuffle); banding turns
+    O(n^2) similarity into an equi-join on band keys: shuffle on
+    (band_id, band_val), join only within buckets.  A
     HOT-BUCKET GUARD drops degenerate buckets (empty docs, templated
     boilerplate) above ``max_bucket`` members — the classic crawl-scale
     skew-killer where one band value would otherwise self-join
@@ -59,6 +60,8 @@ from pyspark.sql import functions as F
 
 from .. import durable
 from ..functions import portable as P
+from ..session import ensure_shipped
+from . import doctext
 
 DUP_OFFSET = 100000
 
@@ -111,49 +114,10 @@ BANDS = 4  # 4 bands x 2 rows
 MAX_BUCKET = 100  # hot-bucket guard: band buckets larger than this are skipped
 
 
-def _minhash_sigs_flat(docs: DataFrame, k: int, off2: int, width: int) -> DataFrame:
-    """(doc_id, mh0..mh{k-1}) via explode -> flat MIN aggregates.
-
-    The higher-order-function form (array of (h1,h2) structs + k
-    array_min(transform(...)) per row) is interpreted expression eval —
-    measured ~100 ms/doc at k=128 on long docs.  This form stays inside
-    whole-stage codegen end to end: one md5 per exploded shingle, k
-    flat `min(h1 + j*h2)` aggregate columns, map-side partial agg
-    (shingles of a doc share their scan partition, so the shuffle
-    carries one row of k longs per doc).  The shingle guard emits >= 1
-    element for every doc, so no doc is lost to the explode."""
-    words = P.words_spark("text")
-    shingles = f"array_distinct({P.shingles_spark(words)})"
-    sc = docs.sparkSession.sparkContext
-    # spread the md5-heavy stage across all cores ONLY when the input
-    # arrives narrower than the cluster (a small local parquet scans as
-    # 1-2 partitions).  An unconditional repartition would full-shuffle
-    # raw text at crawl scale, where the input is already wide.  The
-    # width probe counts input FILES (driver-side metadata, no RDD
-    # conversion — ADVICE r2); non-file plans (in-memory test frames)
-    # report 0 files and get spread, which is always safe for them.
-    try:
-        n_in = len(docs.inputFiles())
-    except Exception:
-        n_in = 0
-    if n_in < sc.defaultParallelism:
-        docs = docs.repartition(sc.defaultParallelism)
-    ex = docs.select("doc_id", F.explode(F.expr(shingles)).alias("s"))
-    hashed = ex.select(
-        "doc_id",
-        F.expr(P.hn_spark("md5(s)", 1, width)).alias("h1"),
-        F.expr(P.hn_spark("md5(s)", off2, width)).alias("h2"),
-    )
-    aggs = [
-        F.min(F.col("h1") + F.lit(j) * F.col("h2")).alias(f"mh{j}") for j in range(k)
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
-
-
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """k=8 minhashes over distinct 3-word shingles; one md5 per shingle
     (14-hex double-hash halves, h1 + 7*h2 < 2^59)."""
-    return _minhash_sigs_flat(docs, MINHASH_K, off2=15, width=14)
+    return doctext.minhash(docs, MINHASH_K, 14)
 
 
 def _band(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -183,17 +147,19 @@ def _bucket_sizes(banded: DataFrame) -> DataFrame:
     return banded.groupBy("band_id", "band_val").agg(F.count("*").alias("bucket_n"))
 
 
-def _safe_banded(banded: DataFrame, max_bucket: int) -> DataFrame:
-    """Hot-bucket guard as a WINDOW count over one shuffle of the banded
-    rows.  vs the former groupBy+self-join guard: the (expensive md5
-    explode -> MIN-agg) signature pipeline appears ONCE in the plan, the
-    single (band_id, band_val) exchange it introduces is exactly the
-    partitioning the downstream self-join needs (ReuseExchange dedupes
-    it across the join's two sides), and skew behavior is identical —
-    either form hashes a monster bucket's rows to one task before
-    dropping them.  Measured at sf0.1: dedup_clusters 12.0s -> see
-    BENCH notes (the guard was the dominant re-evaluation)."""
-    w = F.count("*").over(Window.partitionBy("band_id", "band_val"))
+def _safe_banded(
+    banded: DataFrame, max_bucket: int, keys=("band_id", "band_val")
+) -> DataFrame:
+    """The one hot-bucket guard: drop the rows of every ``keys`` bucket
+    with more than ``max_bucket`` members, as a WINDOW count over one
+    shuffle of the rows.  Minhash bands, simhash64 chunks and the
+    cosine LSH buckets all call it.  vs a groupBy+self-join guard: the
+    upstream signature stage appears ONCE in the plan, the single
+    ``keys`` exchange it introduces is exactly the partitioning the
+    downstream self-join needs (ReuseExchange dedupes it across the
+    join's two sides), and skew behavior is identical — either form
+    hashes a monster bucket's rows to one task before dropping them."""
+    w = F.count("*").over(Window.partitionBy(*keys))
     return (
         banded.withColumn("bucket_n", w)
         .filter(F.col("bucket_n") <= max_bucket)
@@ -311,7 +277,7 @@ WIDE_ROWS = 8
 
 def minhash_signatures_wide(docs: DataFrame) -> DataFrame:
     """k=128 minhashes (52-bit halves, h1 + 127*h2 < 2^59)."""
-    return _minhash_sigs_flat(docs, P.MINHASH_WIDE_K, off2=14, width=13)
+    return doctext.minhash(docs, P.MINHASH_WIDE_K, 13)
 
 
 def _banded_wide(docs: DataFrame) -> DataFrame:
@@ -451,6 +417,7 @@ def connected_components(
     rounds path only; the one-task solve has no rounds to resume."""
     both, m, fp = _directed_edges(pairs)
     if m <= _SMALL_GRAPH_EDGES:
+        ensure_shipped(pairs.sparkSession)  # the Arrow stage calls _union_find_labels
         # coalesce, not repartition: the edges are already materialized,
         # so one task can read every partition without a shuffle
         return both.coalesce(1).mapInArrow(_union_find_batches, "node bigint, label bigint")

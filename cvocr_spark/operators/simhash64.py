@@ -10,9 +10,10 @@ Scale design:
     PIGEONHOLE banding: the 64 bits split into four 16-bit chunks; two
     signatures within distance 3 must agree on at least one chunk, so
     an equi-join on (chunk_id, chunk_val) finds every such pair without
-    a cross product.  A hot-bucket guard drops degenerate chunks
-    (same defense as dedup.minhash_lsh_pairs), and the exact Hamming
-    distance — bit_count(xor) on both halves — verifies candidates.
+    a cross product.  The signatures come from the per-document text
+    kernel (doctext.py), the one hot-bucket guard (dedup._safe_banded)
+    drops degenerate chunks, and the exact Hamming distance —
+    bit_count(xor) on both halves — verifies candidates.
   * minhash k=128 — one md5 per shingle, halves narrowed to 52 bits so
     h1 + 127*h2 < 2^59 never overflows; the contract query digests the
     128 mins into one md5 so the oracle row stays narrow while still
@@ -25,10 +26,12 @@ standard crawl-dedup configuration (64-bit simhash, k≈128 minhash).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import portable as P
+from . import doctext
+from .dedup import _safe_banded, minhash_signatures_wide
 
 CHUNKS = 4           # 4 x 16-bit chunks: pigeonhole-complete for d <= 3
 MAX_HAMMING = 3
@@ -38,45 +41,11 @@ _M16 = (1 << 16) - 1
 
 def simhash64_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, sim_lo, sim_hi): 64-bit SimHash as two 32-bit halves.
-
-    Plan: explode words -> 2 md5 per word -> ONE hash-aggregate with 64
-    flat SUM columns (vote per bit) -> collapse to halves.  Every stage
-    is whole-stage-codegen'd flat expressions — measured 60x faster
-    than the higher-order-function fold it replaced (197s -> ~3s at
-    sf0.1), because per-word array allocation in aggregate/zip_with
-    sits outside codegen.  Words of a doc share their scan partition,
-    so the partial aggregate collapses to one row per doc map-side and
-    the shuffle carries only doc_id + 64 longs per doc."""
-    words = docs.select(
-        "doc_id", F.explode(F.expr(P.words_spark("text"))).alias("w")
-    )
-    hashed = words.select(
-        "doc_id",
-        F.expr(f"{P.hash60_spark('w', 's64lo')} & {P.SIMHASH64_MASK32}").alias("hlo"),
-        F.expr(f"{P.hash60_spark('w', 's64hi')} & {P.SIMHASH64_MASK32}").alias("hhi"),
-    )
-    aggs = []
-    for b in range(64):
-        src = F.col("hlo") if b < 32 else F.col("hhi")
-        bit = F.shiftright(src, b % 32).bitwiseAND(F.lit(1))
-        aggs.append(F.sum(F.when(bit == 1, 1).otherwise(-1)).alias(f"v{b}"))
-    votes = hashed.groupBy("doc_id").agg(*aggs)
-    lo = sum(
-        (F.when(F.col(f"v{b}") > 0, F.lit(1 << b)).otherwise(0) for b in range(32)),
-        F.lit(0),
-    )
-    hi = sum(
-        (
-            F.when(F.col(f"v{32 + b}") > 0, F.lit(1 << b)).otherwise(0)
-            for b in range(32)
-        ),
-        F.lit(0),
-    )
-    return votes.select(
-        "doc_id",
-        lo.cast("bigint").alias("sim_lo"),
-        hi.cast("bigint").alias("sim_hi"),
-    )
+    Every word votes on each bit of its two salted hash60 halves
+    (``s64lo``/``s64hi``); a bit is set iff it wins more than half of
+    the votes.  Computed by the per-document text kernel (doctext.py);
+    NULL text has no words and gets no row."""
+    return doctext.simhash64(docs)
 
 
 def _chunked(sigs: DataFrame) -> DataFrame:
@@ -102,20 +71,8 @@ def simhash64_neardup_pairs(
     """(a, b, hamming): pairs within Hamming distance max_hamming.
     Pigeonhole-complete for max_hamming <= 3 with 4 chunks (minus any
     buckets the hot-chunk guard dropped)."""
-    chunked = _chunked(simhash64_signatures(docs))
-    # hot-chunk guard as a WINDOW count (the dedup._safe_banded form,
-    # r6): the former groupBy+self-join guard re-evaluated the whole
-    # signature pipeline — explode words -> 2 md5/word -> 64 flat SUM
-    # votes — on BOTH plan branches; the window form computes it ONCE,
-    # and the single (chunk_id, chunk_val) exchange it introduces is
-    # exactly the partitioning the candidate self-join below reuses.
-    # Skew behavior is identical: either form hashes a monster chunk's
-    # rows to one task before dropping them.
-    w = F.count("*").over(Window.partitionBy("chunk_id", "chunk_val"))
-    safe = (
-        chunked.withColumn("bucket_n", w)
-        .filter(F.col("bucket_n") <= max_bucket)
-        .drop("bucket_n")
+    safe = _safe_banded(
+        _chunked(simhash64_signatures(docs)), max_bucket, ("chunk_id", "chunk_val")
     )
     a, b = safe.alias("a"), safe.alias("b")
     ham = F.bit_count(
@@ -184,10 +141,7 @@ def simhash64_neardup_pairs_sql(
 def minhash_k128_digest(docs: DataFrame) -> DataFrame:
     """(doc_id, sig_digest): md5 over all 128 minhash values — a narrow
     row that still pins every min exactly, green against DuckDB at the
-    full production width.  Signatures come from the codegen'd flat
-    min-aggregate path (dedup._minhash_sigs_flat), not HOF expressions."""
-    from .dedup import minhash_signatures_wide
-
+    full production width."""
     sigs = minhash_signatures_wide(docs)
     joined = F.concat_ws(
         ",", *[F.col(f"mh{j}").cast("string") for j in range(P.MINHASH_WIDE_K)]

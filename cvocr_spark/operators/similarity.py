@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import portable as P
+from .dedup import _safe_banded
 
 N_PLANES = 4
 DIM = 64
@@ -95,17 +96,10 @@ def cosine_neardup_pairs(
         "vec_id", F.col("vec_id") + 100000
     )
     corpus = with_bucket(base.unionByName(dups))
-    # window-count guard: the 4-dot-product bucket expression is
-    # evaluated ONCE per row (the former groupBy+join guard re-ran it on
-    # both plan branches), and the single bkt exchange is the very
+    # the window-count guard evaluates the 4-dot-product bucket
+    # expression ONCE per row, and its single bkt exchange is the very
     # partitioning the self-join below reuses
-    safe = (
-        corpus.withColumn(
-            "bucket_n", F.count("*").over(Window.partitionBy("bkt"))
-        )
-        .filter(F.col("bucket_n") <= max_bucket)
-        .drop("bucket_n")
-    )
+    safe = _safe_banded(corpus, max_bucket, ("bkt",))
     a = safe.select("bkt", F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
     b = safe.select("bkt", F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
     return (

@@ -3,8 +3,11 @@ training-data-pipeline extensions: token counting, quality scoring,
 language-ID heuristic, document fingerprinting (SURVEY §2c F5 scalar
 functions, grown into first-class column ops).
 
-All pure column expressions (JVM-side, whole-stage codegen — no Python
-in the hot path), each with an exact DuckDB oracle.
+Per-row features are column expressions (JVM-side, whole-stage
+codegen); the shingle features (fingerprint, repetition counts) come
+from the per-document text kernel (doctext.py), with ratios and gates
+as column expressions over its integers.  Each operator has an exact
+DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -13,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import portable as P
+from . import doctext
 
 _STOP_DUCK = "[" + ", ".join(f"'{w}'" for w in P.STOPWORDS) + "]"
 
@@ -157,20 +161,10 @@ FROM x
 
 def doc_fingerprint(docs: DataFrame) -> DataFrame:
     """Document fingerprinting: min-hash over rolling 3-word shingles
-    (a 1-permutation minhash == rolling-hash fingerprint).
-
-    Plan: explode -> md5 -> min aggregate — the same flat codegen'd
-    shape as the minhash signature pipeline (dedup.py); the earlier
-    ``array_min(transform(...))`` form ran the per-shingle md5 in the
-    INTERPRETED higher-order-function evaluator on every document
-    (tests/test_plans.py pins the lambda-free plan)."""
-    words = P.words_spark("text")
-    sh = P.shingles_spark(words)
-    return (
-        docs.select("doc_id", F.explode(F.expr(sh)).alias("s"))
-        .groupBy("doc_id")
-        .agg(F.min(F.md5("s")).alias("fingerprint"))
-    )
+    (a 1-permutation minhash == rolling-hash fingerprint), from the
+    per-document text kernel (tests/test_plans.py pins the one-Arrow-
+    stage plan)."""
+    return doctext.fingerprint(docs)
 
 
 def doc_fingerprint_sql() -> str:
@@ -191,40 +185,18 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
       * dup_trigram_fraction — 1 - distinct 3-shingles / total shingles
         (the "duplicate n-gram fraction" repetition filter)
 
-    Plan: two explode -> flat-aggregate passes (words, shingles) joined
-    on doc_id — whole-stage codegen, map-side partial aggregation (a
-    doc's tokens share its scan partition), no HOF array expressions.
+    The integer counts come from the per-document text kernel
+    (doctext.py, one Arrow pass); the ratios are column expressions.
+    NULL text has no words and gets no row.
     """
-    words = F.split("text", " ")
-    shingles = F.expr(P.shingles_spark(P.words_spark("text")))
-    w = docs.select("doc_id", F.explode(words).alias("w"))
-    wc = w.groupBy("doc_id", "w").agg(F.count("*").alias("c"))
-    word_stats = wc.groupBy("doc_id").agg(
-        F.sum("c").alias("n_tokens"),
-        F.count("*").alias("n_types"),
-        F.max("c").alias("top_c"),
-    )
-    s = docs.select("doc_id", F.explode(shingles).alias("s"))
-    sc_ = s.groupBy("doc_id", "s").agg(F.count("*").alias("c"))
-    shingle_stats = sc_.groupBy("doc_id").agg(
-        F.sum("c").alias("n_shingles"),
-        F.count("*").alias("n_distinct_shingles"),
-    )
-    return (
-        word_stats.join(shingle_stats, "doc_id")
-        .select(
-            "doc_id",
-            F.col("n_tokens").cast("int").alias("n_tokens"),
-            F.round(F.col("n_types") / F.col("n_tokens"), 4).alias(
-                "distinct_word_ratio"
-            ),
-            F.round(F.col("top_c") / F.col("n_tokens"), 4).alias(
-                "top_word_fraction"
-            ),
-            F.round(
-                1.0 - F.col("n_distinct_shingles") / F.col("n_shingles"), 4
-            ).alias("dup_trigram_fraction"),
-        )
+    return doctext.repetition(docs).select(
+        "doc_id",
+        F.col("n_tokens").cast("int").alias("n_tokens"),
+        F.round(F.col("n_types") / F.col("n_tokens"), 4).alias("distinct_word_ratio"),
+        F.round(F.col("top_c") / F.col("n_tokens"), 4).alias("top_word_fraction"),
+        F.round(
+            1.0 - F.col("n_distinct_shingles") / F.col("n_shingles"), 4
+        ).alias("dup_trigram_fraction"),
     )
 
 

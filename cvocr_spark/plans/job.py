@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..kernel import DEFAULT_CONFIG, KernelConfig, extract
+from ..session import ensure_shipped
 
 _SPAN_TYPE = pa.list_(
     pa.struct(
@@ -131,16 +132,10 @@ def _nonempty_html(pages: DataFrame) -> DataFrame:
     return pages.filter(F.col("html").isNotNull() & (F.length("html") > 0))
 
 
-def extract_blocks(
-    pages: DataFrame,
-    n_partitions: int | None = None,
-    cfg: KernelConfig = DEFAULT_CONFIG,
-    salted: bool = False,
-) -> DataFrame:
+def extract_blocks(pages: DataFrame, cfg: KernelConfig = DEFAULT_CONFIG) -> DataFrame:
     """pages -> classified blocks table (FIXTURES.md §3)."""
+    ensure_shipped(pages.sparkSession)  # the Arrow stage runs the kernel
     slim = _nonempty_html(pages.select("url", "html"))
-    if salted and n_partitions:
-        slim = slim.repartition(n_partitions, F.sha2(F.col("url"), 256))
     return slim.mapInArrow(blocks_kernel_arrow(cfg), schema=BLOCKS_DDL)
 
 
@@ -159,6 +154,7 @@ def extract_pages(
       host clustering; at 10^12 rows this is the difference between a
       straggler-free stage and a handful of hot hosts pinning executors.
     """
+    ensure_shipped(pages.sparkSession)  # the Arrow stage runs the kernel
     slim = _nonempty_html(pages.select("url", "warc_ts", "html"))
     if salted:
         if n_partitions:

@@ -110,9 +110,10 @@ def write_debug_sample(
     stable across runs, so the same pages are inspectable before and
     after a kernel change; at 10^12 docs a one-in-a-million sample is
     still a million fully-segmented pages of triage material for the
-    cost of a filter pushed down before the Arrow stage."""
+    cost of a filter pushed down before the Arrow stage.  The sample is
+    a function of ``pages``, so a rerun overwrites it."""
     sampled = pages.filter(F.pmod(F.xxhash64("url"), F.lit(one_in)) == 0)
-    extract_blocks(sampled, cfg=cfg).write.mode("append").parquet(out_dir)
+    extract_blocks(sampled, cfg=cfg).write.mode("overwrite").parquet(out_dir)
 
 
 def run_extraction(
@@ -141,6 +142,10 @@ def run_extraction(
     fp = durable.fingerprint(pages, ["url", "warc_ts", "html"], n_buckets, cfg)
     done = _committed(spark, manifest_dir, "bucket")
     if not done:
+        # nothing committed: bucket dirs of a run killed before its
+        # manifest append are debris no manifest covers, and the
+        # read-back below would commit them with this run's buckets
+        durable.delete(spark, out_dir)
         durable.write_fingerprint(spark, manifest_dir, fp)
     elif (recorded := durable.read_fingerprint(spark, manifest_dir)) != fp:
         raise ValueError(

@@ -84,18 +84,19 @@ def test_hash60_cross_engine(frames):
 
 
 def test_words_and_shingles_cross_engine(frames):
-    sdf, con = frames
-    import pyspark.sql.functions as F
+    """The per-document text kernel's word split and 3-word shingle
+    builder equal DuckDB's ``words_duck`` / ``shingles_duck``."""
+    from cvocr_spark.operators import doctext
 
-    w_s, w_d = P.words_spark("text"), P.words_duck("text")
+    sdf, con = frames
     got = {
-        r["id"]: (r["w"], r["sh"])
-        for r in sdf.select(
-            "id",
-            F.expr(w_s).alias("w"),
-            F.expr(P.shingles_spark(w_s)).alias("sh"),
-        ).collect()
+        r["id"]: (
+            None if r["text"] is None else doctext.words(r["text"]),
+            doctext.shingles(r["text"]),
+        )
+        for r in sdf.collect()
     }
+    w_d = P.words_duck("text")
     want = {
         i: (w, sh)
         for i, w, sh in con.execute(

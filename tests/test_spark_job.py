@@ -133,6 +133,45 @@ def test_torn_first_manifest_reads_as_nothing_committed(spark, pages, tmp_path):
     assert spark.read.parquet(str(tmp_path / "s")).count() == 40
 
 
+def test_fresh_run_clears_uncommitted_buckets(spark, pages, tmp_path):
+    """A first run killed after its data write but before its manifest
+    append leaves bucket dirs that no manifest covers.  A rerun finds
+    nothing committed and must clear them rather than commit them with
+    its own buckets (12 stale buckets, then ``n_buckets=7``, committed
+    12 buckets and 700 rows for 500 urls)."""
+    out = str(tmp_path / "ext")
+    run_extraction(spark, pages, out, n_buckets=12)
+    # the kill: drop the manifest rows, keep the recorded fingerprint
+    mdir = tmp_path / "ext_manifest"
+    for f in os.listdir(mdir):
+        if not f.startswith("_"):
+            os.remove(mdir / f)
+    r = run_extraction(spark, pages, out, n_buckets=7)
+    got = spark.read.parquet(out)
+    n_pages = pages.count()
+    assert r["buckets_committed_before"] == 0 and r["buckets_committed_now"] == 7
+    assert got.count() == got.select("url").distinct().count() == n_pages
+    assert got.select("bucket").distinct().count() == 7
+
+
+def test_debug_sample_rerun_overwrites(spark, pages, tmp_path):
+    """The debug sample is a function of ``pages``: writing it twice
+    into one dir gives the rows of one run, not twice as many."""
+    from cvocr_spark.sources.tableio import write_debug_sample
+
+    out = str(tmp_path / "dbg")
+
+    def rows():
+        return sorted(
+            map(tuple, spark.read.parquet(out).select("url", "block_id", "text").collect())
+        )
+
+    write_debug_sample(pages, out, one_in=10)
+    first = rows()
+    write_debug_sample(pages, out, one_in=10)
+    assert rows() == first and first
+
+
 def test_run_extraction_job_count(spark, pages, tmp_path):
     """Spark jobs of one backfill over a bare file scan, fresh and as a
     no-op resume: 9 and 10 under this local[8] session while the
