@@ -24,10 +24,13 @@ semantics it re-expresses:
   low-score absorb           C3          reco.py:159-192 (refreshRegion)
   ordered assembly           W7          reco.py:246-265
 
-The kernel is stdlib-only (html.parser), fully deterministic (no
-wall-clock, no dict-order dependence, fixed decode cascade), and never
-raises on malformed input: it is the single Python stage that runs
-inside Spark's ``mapInArrow`` (SURVEY §3 graft lifecycle).
+The kernel is stdlib-only, fully deterministic (no wall-clock, no
+dict-order dependence, fixed decode cascade), and never raises on
+malformed input: it is the single Python stage that runs inside Spark's
+``mapInArrow`` (SURVEY §3 graft lifecycle).  Its rules are constants,
+as the reference's are ``#define``s.  It segments with the scanner
+``fastparse.FastSegmenter``; ``_Segmenter`` (stdlib ``html.parser``) is
+only the reference tests/test_fastparse.py compares the scanner with.
 """
 
 from __future__ import annotations
@@ -37,57 +40,47 @@ import unicodedata
 from dataclasses import dataclass, field
 from html.parser import HTMLParser
 
-__all__ = ["extract", "ExtractResult", "Block", "KernelConfig", "DEFAULT_CONFIG"]
+__all__ = ["extract", "ExtractResult", "Block"]
 
 # --------------------------------------------------------------------------
-# configuration (analogue of the reference's #define constants, cut.h:36-60)
+# extraction rules (analogue of the reference's #define constants, cut.h:36-60)
 # --------------------------------------------------------------------------
 
-
-@dataclass(frozen=True)
-class KernelConfig:
-    # decode
-    max_html_bytes: int = 2 * 1024 * 1024  # giant-page cap (SURVEY §4 spill row)
-    charset_sniff_bytes: int = 1024
-    # classification thresholds (analogue of MIN_SIMILIRITY / shape ratios,
-    # cut.h:332: aspect>=0.83 && h_ratio>=0.85 && w_ratio>=0.85)
-    max_link_density: float = 0.50   # >= this => boilerplate
-    content_link_density: float = 0.10
-    loose_link_density: float = 0.25
-    min_content_chars: int = 25
-    loose_content_chars: int = 80
-    short_chars: int = 15            # below: too short to promote
-    std_ratio: float = 0.5           # vs per-doc standard length (cut.h:332)
-    filtered_mean_min_chars: int = 20  # A2 filter (cut.h:166-168 analogue)
-    # re-split (cut.h:256-315)
-    resplit_factor: float = 4.0 / 3.0  # re-split blocks > factor*standard (cut.h:306)
-    resplit_min_chars: int = 480       # absolute floor for re-split trigger
-    resplit_max_chars: int = 2000      # absolute ceiling: a lone giant block
-    #                                    is its own doc standard, so the
-    #                                    relative rule alone never fires
-    max_resplit_depth: int = 10        # hard recursion bound (cut.h:260)
-    # neighbor relabel (cut.h:733-769)
-    max_promotions: int = 3            # <=3 promotions per doc (cut.h:737,764-767)
-    # run-length promotion (cut.h:812-859)
-    min_run: int = 3                   # >=3 consecutive (cut.h:824)
-    run_link_density: float = 0.20
-    # fusion (cut.h:400-497)
-    max_fuse_lookahead: int = 4        # try fusing 2..5 adjacent (cut.h:446-455)
-    similar_ratio: float = 0.8         # MIN_SIMILIRITY (cut.h:40)
-    # low-confidence absorb (reco.py:167-176): a content block whose
-    # classifier confidence is below absorb_conf AND whose length is
-    # <= absorb_ratio of its neighbor is absorbed into that neighbor —
-    # the graft of refreshRegion consuming per-patch recognition scores
-    # (reco.py:167, confidences tesstool.h:44-47)
-    absorb_conf: float = 0.5
-    absorb_ratio: float = 0.4
-    # segmentation backend: the fast regex scanner (fastparse.py) or the
-    # stdlib-HTMLParser reference path; both verified block-identical on
-    # the fixture corpus (tests/test_fastparse.py)
-    fast_parse: bool = True
-
-
-DEFAULT_CONFIG = KernelConfig()
+# decode
+MAX_HTML_BYTES = 2 * 1024 * 1024  # giant-page cap (SURVEY §4 spill row)
+CHARSET_SNIFF_BYTES = 1024
+# classification thresholds (analogue of MIN_SIMILIRITY / shape ratios,
+# cut.h:332: aspect>=0.83 && h_ratio>=0.85 && w_ratio>=0.85)
+MAX_LINK_DENSITY = 0.50   # >= this => boilerplate
+CONTENT_LINK_DENSITY = 0.10
+LOOSE_LINK_DENSITY = 0.25
+MIN_CONTENT_CHARS = 25
+LOOSE_CONTENT_CHARS = 80
+SHORT_CHARS = 15          # below: too short to promote
+STD_RATIO = 0.5           # vs per-doc standard length (cut.h:332)
+FILTERED_MEAN_MIN_CHARS = 20  # A2 filter (cut.h:166-168 analogue)
+# re-split (cut.h:256-315)
+RESPLIT_FACTOR = 4.0 / 3.0  # re-split blocks > factor*standard (cut.h:306)
+RESPLIT_MIN_CHARS = 480     # absolute floor for re-split trigger
+RESPLIT_MAX_CHARS = 2000    # absolute ceiling: a lone giant block is its
+#                             own doc standard, so the relative rule alone
+#                             never fires
+MAX_RESPLIT_DEPTH = 10      # hard recursion bound (cut.h:260)
+# neighbor relabel (cut.h:733-769)
+MAX_PROMOTIONS = 3          # <=3 promotions per doc (cut.h:737,764-767)
+# run-length promotion (cut.h:812-859)
+MIN_RUN = 3                 # >=3 consecutive (cut.h:824)
+RUN_LINK_DENSITY = 0.20
+# fusion (cut.h:400-497)
+MAX_FUSE_LOOKAHEAD = 4      # try fusing 2..5 adjacent (cut.h:446-455)
+SIMILAR_RATIO = 0.8         # MIN_SIMILIRITY (cut.h:40)
+# low-confidence absorb (reco.py:167-176): a content block whose
+# classifier confidence is below ABSORB_CONF AND whose length is
+# <= ABSORB_RATIO of its neighbor is absorbed into that neighbor —
+# the graft of refreshRegion consuming per-patch recognition scores
+# (reco.py:167, confidences tesstool.h:44-47)
+ABSORB_CONF = 0.5
+ABSORB_RATIO = 0.4
 
 # --------------------------------------------------------------------------
 # data model (analogue of struct Patch / struct Region, cut.h:63-114)
@@ -153,23 +146,28 @@ _BOMS = (
 )
 
 
-def decode_html(raw: bytes, cfg: KernelConfig = DEFAULT_CONFIG) -> tuple[str, str]:
+def decode_html(raw: bytes) -> tuple[str, str]:
     """BOM -> meta-charset scan (first 1024 bytes) -> utf-8, errors='replace'.
 
     Returns (decoded_text, flags).  Fixed cascade: byte-identical goldens
     require the same decode on every run and every executor.
     """
+    return _decode(raw, None)
+
+
+def _decode(raw: bytes, codec: str | None) -> tuple[str, str]:
+    """The byte cap, then ``codec`` or (None) the BOM/meta cascade."""
     flags = []
-    if len(raw) > cfg.max_html_bytes:
-        raw = raw[: cfg.max_html_bytes]
+    if len(raw) > MAX_HTML_BYTES:
+        raw = raw[:MAX_HTML_BYTES]
         flags.append("truncated")
-    codec = None
-    for bom, name in _BOMS:
-        if raw.startswith(bom):
-            codec = name
-            break
     if codec is None:
-        m = _META_CHARSET_RE.search(raw[: cfg.charset_sniff_bytes])
+        for bom, name in _BOMS:
+            if raw.startswith(bom):
+                codec = name
+                break
+    if codec is None:
+        m = _META_CHARSET_RE.search(raw[:CHARSET_SNIFF_BYTES])
         if m:
             declared = m.group(1).decode("ascii", "replace").lower()
             try:
@@ -425,7 +423,7 @@ def _normalize(s: str) -> str:
 # --------------------------------------------------------------------------
 
 
-def _split_block(b: Block, cfg: KernelConfig) -> list[Block]:
+def _split_block(b: Block) -> list[Block]:
     """P7: split a raw block at separator runs (blank lines / <br> marks),
     the graft of zero-ink-run column splitting (cut.h:234-245)."""
     pieces = [p for p in _BLANKLINE_RE.split(b.text) if p.strip()]
@@ -448,7 +446,7 @@ def _split_block(b: Block, cfg: KernelConfig) -> list[Block]:
     return out
 
 
-def _resplit(text: str, limit: int, depth: int, cfg: KernelConfig) -> list[str]:
+def _resplit(text: str, limit: int, depth: int) -> list[str]:
     """P8: recursive re-split of over-long segments with a rising
     threshold and a hard recursion bound (cut.h:256-315, bound cut.h:260).
 
@@ -457,7 +455,7 @@ def _resplit(text: str, limit: int, depth: int, cfg: KernelConfig) -> list[str]:
     separator char run, preserving the join-with-'\\n' reconstruction
     invariant used by the roundtrip oracle.
     """
-    if depth >= cfg.max_resplit_depth or len(text) <= limit:
+    if depth >= MAX_RESPLIT_DEPTH or len(text) <= limit:
         return [text]
     mid = len(text) // 2
     cut_at = -1
@@ -483,7 +481,7 @@ def _resplit(text: str, limit: int, depth: int, cfg: KernelConfig) -> list[str]:
         return [text]
     # rising threshold per recursion (cut.h:260-263: minCutPixes+1 per level)
     nxt = limit + max(1, limit // 10)
-    return _resplit(head, nxt, depth + 1, cfg) + _resplit(tail, nxt, depth + 1, cfg)
+    return _resplit(head, nxt, depth + 1) + _resplit(tail, nxt, depth + 1)
 
 
 # --------------------------------------------------------------------------
@@ -491,14 +489,14 @@ def _resplit(text: str, limit: int, depth: int, cfg: KernelConfig) -> list[str]:
 # --------------------------------------------------------------------------
 
 
-def _doc_standard_len(blocks: list[Block], cfg: KernelConfig) -> float:
+def _doc_standard_len(blocks: list[Block]) -> float:
     """A2 filtered mean: mean block length excluding short/link-heavy
     blocks, with fallback to unfiltered mean when none qualify
     (cut.h:158-185 incl. the count==0 fallback at cut.h:178-184)."""
     good = [
         b.n_chars
         for b in blocks
-        if b.n_chars >= cfg.filtered_mean_min_chars and b.link_density < cfg.max_link_density
+        if b.n_chars >= FILTERED_MEAN_MIN_CHARS and b.link_density < MAX_LINK_DENSITY
     ]
     if good:
         return sum(good) / len(good)
@@ -506,39 +504,39 @@ def _doc_standard_len(blocks: list[Block], cfg: KernelConfig) -> float:
     return (sum(allb) / len(allb)) if allb else 0.0
 
 
-def _classify(b: Block, std_len: float, cfg: KernelConfig) -> str:
+def _classify(b: Block, std_len: float) -> str:
     """C1 deterministic ordered rule cascade (cut.h:680-725) with the
     F1 vs-per-doc-standard predicate (cut.h:324-356)."""
     n = b.n_chars
     ld = b.link_density
     if n == 0:
         return "noise"
-    if ld >= cfg.max_link_density:
+    if ld >= MAX_LINK_DENSITY:
         return "boilerplate"
     if b.boiler_ctx:
         # inside nav/header/footer/aside: only long, link-free text survives
-        if ld > 0.0 or n < max(cfg.loose_content_chars, std_len):
+        if ld > 0.0 or n < max(LOOSE_CONTENT_CHARS, std_len):
             return "boilerplate"
         return "undecided"
     # F1: compare against per-doc standard (the meanHeight/meanWidth analogue)
-    if n >= max(cfg.min_content_chars, cfg.std_ratio * std_len) and ld <= cfg.content_link_density:
+    if n >= max(MIN_CONTENT_CHARS, STD_RATIO * std_len) and ld <= CONTENT_LINK_DENSITY:
         return "content"
-    if n >= cfg.loose_content_chars and ld <= cfg.loose_link_density:
+    if n >= LOOSE_CONTENT_CHARS and ld <= LOOSE_LINK_DENSITY:
         return "content"
-    if ld == 0.0 and n >= cfg.short_chars:
+    if ld == 0.0 and n >= SHORT_CHARS:
         return "content"
-    if n < cfg.short_chars and ld == 0.0:
+    if n < SHORT_CHARS and ld == 0.0:
         return "undecided"
     return "boilerplate"
 
 
-def _neighbor_relabel(blocks: list[Block], cfg: KernelConfig) -> None:
+def _neighbor_relabel(blocks: list[Block]) -> None:
     """W2: an undecided block whose left or right neighbor is content is
     promoted, bounded promotions per document (cut.h:733-769, cap at
     cut.h:737,764-767).  Left-to-right scan = deterministic."""
     promos = 0
     for i, b in enumerate(blocks):
-        if promos >= cfg.max_promotions:
+        if promos >= MAX_PROMOTIONS:
             break
         if b.cls != "undecided":
             continue
@@ -564,7 +562,7 @@ def _neighbor_relabel(blocks: list[Block], cfg: KernelConfig) -> None:
         # link-free promo sitting between two paragraphs is exactly the
         # shape this would wrongly promote (r4, promo_plaintext page).
         # A genuinely mis-contained article still recovers through the
-        # multi-block run-length promotion, which requires >= min_run
+        # multi-block run-length promotion, which requires >= MIN_RUN
         # consecutive blocks — isolated interstitials never have that.
         if (
             (prev_c or next_c)
@@ -576,36 +574,36 @@ def _neighbor_relabel(blocks: list[Block], cfg: KernelConfig) -> None:
             promos += 1
 
 
-def _run_length_promote(blocks: list[Block], cfg: KernelConfig) -> None:
-    """W3 gaps-and-islands: >= min_run consecutive undecided blocks with
+def _run_length_promote(blocks: list[Block]) -> None:
+    """W3 gaps-and-islands: >= MIN_RUN consecutive undecided blocks with
     low link density collapse into content (cut.h:812-859; >=3 rule at
     cut.h:824)."""
     i = 0
     n = len(blocks)
     while i < n:
-        if blocks[i].cls != "undecided" or blocks[i].link_density > cfg.run_link_density:
+        if blocks[i].cls != "undecided" or blocks[i].link_density > RUN_LINK_DENSITY:
             i += 1
             continue
         j = i
         while (
             j < n
             and blocks[j].cls == "undecided"
-            and blocks[j].link_density <= cfg.run_link_density
+            and blocks[j].link_density <= RUN_LINK_DENSITY
         ):
             j += 1
-        if j - i >= cfg.min_run:
+        if j - i >= MIN_RUN:
             total = sum(blocks[k].n_chars for k in range(i, j))
             mean = total / (j - i)
             # substance guards (the similar-and-short / digit-run refusal
             # of cut.h:468-472): a run of table cells or menu stubs has
             # high count but tiny mean length — not content
-            if total >= cfg.loose_content_chars and mean >= cfg.short_chars:
+            if total >= LOOSE_CONTENT_CHARS and mean >= SHORT_CHARS:
                 for k in range(i, j):
                     blocks[k].cls = "content"
         i = j
 
 
-def _assign_confidence(b: Block, std_len: float, cfg: KernelConfig) -> None:
+def _assign_confidence(b: Block, std_len: float) -> None:
     """Set b.conf (normalized affinity of the ASSIGNED class) and
     b.candidates (all classes with scores, desc — the top-k candidate
     list of C2, reco.py:41).
@@ -618,8 +616,8 @@ def _assign_confidence(b: Block, std_len: float, cfg: KernelConfig) -> None:
     n = b.n_chars
     rc = b.raw_chars
     ld = (b.link_chars / rc) if rc > 0 else 0.0
-    std = cfg.min_content_chars
-    alt = cfg.std_ratio * std_len
+    std = MIN_CONTENT_CHARS
+    alt = STD_RATIO * std_len
     if alt > std:
         std = alt
     if std < 1.0:
@@ -627,25 +625,25 @@ def _assign_confidence(b: Block, std_len: float, cfg: KernelConfig) -> None:
     len_term = n / std
     if len_term > 1.0:
         len_term = 1.0
-    link_term = 1.0 - ld / cfg.max_link_density
+    link_term = 1.0 - ld / MAX_LINK_DENSITY
     if link_term < 0.0:
         link_term = 0.0
     s_content = len_term * link_term
     if b.boiler_ctx:
         s_content *= 0.35
-    s_boiler = ld / cfg.max_link_density
+    s_boiler = ld / MAX_LINK_DENSITY
     if s_boiler > 1.0:
         s_boiler = 1.0
     if b.boiler_ctx and s_boiler < 0.75:
         s_boiler = 0.75
-    alt = 1.0 - n / cfg.loose_content_chars
+    alt = 1.0 - n / LOOSE_CONTENT_CHARS
     alt = 0.55 * alt if alt > 0.0 else 0.0
     if alt > s_boiler:
         s_boiler = alt
     if n == 0:
         s_noise = 1.0
-    elif n < cfg.short_chars:
-        s_noise = 0.5 * (cfg.short_chars - n) / cfg.short_chars
+    elif n < SHORT_CHARS:
+        s_noise = 0.5 * (SHORT_CHARS - n) / SHORT_CHARS
     else:
         s_noise = 0.0
     total = s_content + s_boiler + s_noise
@@ -664,16 +662,16 @@ def _assign_confidence(b: Block, std_len: float, cfg: KernelConfig) -> None:
     b.candidates = cands
 
 
-def _is_similar(a: Block, b: Block, cfg: KernelConfig) -> bool:
+def _is_similar(a: Block, b: Block) -> bool:
     """F2 similarity guard (cut.h:365-384): similar short blocks are list
     items — fusing them would glue a menu into fake content."""
     if a.n_chars == 0 or b.n_chars == 0:
         return False
     r = min(a.n_chars, b.n_chars) / max(a.n_chars, b.n_chars)
-    return r >= cfg.similar_ratio and a.tag == b.tag
+    return r >= SIMILAR_RATIO and a.tag == b.tag
 
 
-def _fuse(blocks: list[Block], std_len: float, cfg: KernelConfig) -> list[Block]:
+def _fuse(blocks: list[Block], std_len: float) -> list[Block]:
     """P10 lookahead fusion (cut.h:400-497): fuse a short content block
     with following adjacent content blocks when the fused length passes
     the standard and the refusal guards don't fire (cut.h:458-479)."""
@@ -690,11 +688,11 @@ def _fuse(blocks: list[Block], std_len: float, cfg: KernelConfig) -> list[Block]
         acc = b
         while (
             j < n
-            and j - i <= cfg.max_fuse_lookahead
+            and j - i <= MAX_FUSE_LOOKAHEAD
             and blocks[j].cls == "content"
             and blocks[j].block_id == blocks[j - 1].block_id + 1  # gap guard (cut.h:458)
-            and acc.n_chars < cfg.loose_content_chars               # already-valid guard (cut.h:461)
-            and not _is_similar(acc, blocks[j], cfg)                # similar-short guard (cut.h:468-472)
+            and acc.n_chars < LOOSE_CONTENT_CHARS                   # already-valid guard (cut.h:461)
+            and not _is_similar(acc, blocks[j])                     # similar-short guard (cut.h:468-472)
         ):
             fused = Block(
                 block_id=acc.block_id,
@@ -707,7 +705,7 @@ def _fuse(blocks: list[Block], std_len: float, cfg: KernelConfig) -> list[Block]
                 boiler_ctx=acc.boiler_ctx,
                 cls="content",
             )
-            _assign_confidence(fused, std_len, cfg)  # conf reflects fused features
+            _assign_confidence(fused, std_len)  # conf reflects fused features
             acc = fused
             j += 1
         out.append(acc)
@@ -715,10 +713,10 @@ def _fuse(blocks: list[Block], std_len: float, cfg: KernelConfig) -> list[Block]
     return out
 
 
-def _absorb_low_conf(blocks: list[Block], cfg: KernelConfig) -> list[Block]:
+def _absorb_low_conf(blocks: list[Block]) -> list[Block]:
     """C3 low-confidence merge (reco.py:159-192): a content block whose
-    classifier confidence is below ``absorb_conf`` AND whose length is
-    at most ``absorb_ratio`` of the preceding content block is absorbed
+    classifier confidence is below ``ABSORB_CONF`` AND whose length is
+    at most ``ABSORB_RATIO`` of the preceding content block is absorbed
     into it — keyed on the per-block confidence (the refreshRegion
     score consumption, reco.py:167), not on raw length alone."""
     out: list[Block] = []
@@ -727,8 +725,8 @@ def _absorb_low_conf(blocks: list[Block], cfg: KernelConfig) -> list[Block]:
             out
             and b.cls == "content"
             and out[-1].cls == "content"
-            and b.conf < cfg.absorb_conf
-            and b.n_chars <= cfg.absorb_ratio * out[-1].n_chars
+            and b.conf < ABSORB_CONF
+            and b.n_chars <= ABSORB_RATIO * out[-1].n_chars
         ):
             prev = out[-1]
             prev.text = prev.text + " " + b.text
@@ -744,7 +742,7 @@ def _absorb_low_conf(blocks: list[Block], cfg: KernelConfig) -> list[Block]:
 # --------------------------------------------------------------------------
 
 
-def extract(html: bytes | str | None, cfg: KernelConfig = DEFAULT_CONFIG) -> ExtractResult:
+def extract(html: bytes | str | None) -> ExtractResult:
     """The full per-document pipeline; never raises.
 
     Output invariants (SURVEY §5 item 1):
@@ -756,8 +754,9 @@ def extract(html: bytes | str | None, cfg: KernelConfig = DEFAULT_CONFIG) -> Ext
     if html is None:
         res.flags = "empty"
         return res
+    codec = None  # a str is decoded: only the byte cap applies, in UTF-8
     if isinstance(html, str):
-        html = html.encode("utf-8", "replace")
+        html, codec = html.encode("utf-8", "replace"), "utf-8"
     if not html:
         res.flags = "empty"
         return res
@@ -772,7 +771,7 @@ def extract(html: bytes | str | None, cfg: KernelConfig = DEFAULT_CONFIG) -> Ext
         res.flags = "binary_container"
         return res
     try:
-        doc, flags = decode_html(html, cfg)
+        doc, flags = _decode(html, codec)
         res.flags = flags
         if _TAG_LIKE_RE.search(doc) is None and doc.strip():
             # plain-text passthrough (C2 dispatch seam, reco.py:94-148):
@@ -788,12 +787,9 @@ def extract(html: bytes | str | None, cfg: KernelConfig = DEFAULT_CONFIG) -> Ext
                 )
             ]
         else:
-            if cfg.fast_parse:
-                from .fastparse import FastSegmenter
+            from .fastparse import FastSegmenter  # it imports this module
 
-                seg = FastSegmenter()
-            else:
-                seg = _Segmenter()
+            seg = FastSegmenter()
             seg.feed(doc)
             seg.close()
             raw_blocks = seg.blocks
@@ -801,25 +797,25 @@ def extract(html: bytes | str | None, cfg: KernelConfig = DEFAULT_CONFIG) -> Ext
         # P7 split + P6 normalize
         blocks: list[Block] = []
         for b in raw_blocks:
-            blocks.extend(_split_block(b, cfg))
+            blocks.extend(_split_block(b))
 
         # P4 sanitation: drop empty/whitespace-only (already handled), clamp
         blocks = [b for b in blocks if b.n_chars > 0]
 
         # A1/A2 per-doc standards
-        std_len = _doc_standard_len(blocks, cfg)
+        std_len = _doc_standard_len(blocks)
 
         # P8 bounded re-split of over-long blocks
         limit = int(
             min(
-                max(cfg.resplit_min_chars, cfg.resplit_factor * max(std_len, 1.0)),
-                cfg.resplit_max_chars,
+                max(RESPLIT_MIN_CHARS, RESPLIT_FACTOR * max(std_len, 1.0)),
+                RESPLIT_MAX_CHARS,
             )
         )
         resplit: list[Block] = []
         for b in blocks:
             if b.n_chars > limit and " " in b.text:
-                for piece in _resplit(b.text, limit, 0, cfg):
+                for piece in _resplit(b.text, limit, 0):
                     nb = Block(
                         depth=b.depth, tag=b.tag, text=piece,
                         raw_chars=max(1, round(b.raw_chars * len(piece) / b.n_chars)),
@@ -838,11 +834,11 @@ def extract(html: bytes | str | None, cfg: KernelConfig = DEFAULT_CONFIG) -> Ext
 
         # C1/F1 classify
         for b in blocks:
-            b.cls = _classify(b, std_len, cfg)
+            b.cls = _classify(b, std_len)
 
         # W2 neighbor relabel, W3 run-length promotion
-        _neighbor_relabel(blocks, cfg)
-        _run_length_promote(blocks, cfg)
+        _neighbor_relabel(blocks)
+        _run_length_promote(blocks)
 
         # leftover undecided => boilerplate (noise lines dropped, cut.h:697)
         for b in blocks:
@@ -853,13 +849,13 @@ def extract(html: bytes | str | None, cfg: KernelConfig = DEFAULT_CONFIG) -> Ext
         # (after promotions, so conf reflects what the doc-level rules
         # actually decided)
         for b in blocks:
-            _assign_confidence(b, std_len, cfg)
+            _assign_confidence(b, std_len)
 
         res.blocks = list(blocks)
 
         # P10 fusion + C3 low-confidence absorb operate on the kept sequence
-        fused = _fuse(blocks, std_len, cfg)
-        fused = _absorb_low_conf(fused, cfg)
+        fused = _fuse(blocks, std_len)
+        fused = _absorb_low_conf(fused)
 
         # W7 ordered assembly with char-span offsets
         kept = [b for b in fused if b.cls == "content" and b.n_chars > 0]

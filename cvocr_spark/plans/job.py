@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
-from ..kernel import DEFAULT_CONFIG, KernelConfig, extract
+from ..kernel import extract
 from ..session import ensure_shipped
 
 _SPAN_TYPE = pa.list_(
@@ -59,29 +59,25 @@ _EXTRACTED_ARROW = pa.schema(
 EXTRACTED_DDL = from_arrow_schema(_EXTRACTED_ARROW)
 
 
-def extraction_kernel_arrow(cfg: KernelConfig = DEFAULT_CONFIG):
-    """Returns the mapInArrow batch driver: per Arrow batch, run the pure
-    kernel per doc and emit the extracted schema.  Vectorized transfer,
-    scalar per-doc parse loop inside the batch (SURVEY §4 codegen row)."""
-
-    def _run(batches):
-        for rb in batches:
-            cols = {
-                k: [] for k in "text spans n_blocks score n_bytes flags proc_us".split()
-            }
-            for h in rb.column("html").to_pylist():
-                t0 = time.perf_counter_ns()
-                r = extract(h, cfg)
-                cols["proc_us"].append((time.perf_counter_ns() - t0) // 1000)
-                for k in ("text", "spans", "n_blocks", "score", "flags"):
-                    cols[k].append(getattr(r, k))
-                cols["n_bytes"].append(len(h) if h is not None else 0)
-            yield pa.RecordBatch.from_pydict(
-                {"url": rb.column("url"), "warc_ts": rb.column("warc_ts"), **cols},
-                schema=_EXTRACTED_ARROW,
-            )
-
-    return _run
+def extraction_kernel_arrow(batches):
+    """The mapInArrow batch driver: per Arrow batch, run the pure kernel
+    per doc and emit the extracted schema.  Vectorized transfer, scalar
+    per-doc parse loop inside the batch (SURVEY §4 codegen row)."""
+    for rb in batches:
+        cols = {
+            k: [] for k in "text spans n_blocks score n_bytes flags proc_us".split()
+        }
+        for h in rb.column("html").to_pylist():
+            t0 = time.perf_counter_ns()
+            r = extract(h)
+            cols["proc_us"].append((time.perf_counter_ns() - t0) // 1000)
+            for k in ("text", "spans", "n_blocks", "score", "flags"):
+                cols[k].append(getattr(r, k))
+            cols["n_bytes"].append(len(h) if h is not None else 0)
+        yield pa.RecordBatch.from_pydict(
+            {"url": rb.column("url"), "warc_ts": rb.column("warc_ts"), **cols},
+            schema=_EXTRACTED_ARROW,
+        )
 
 
 _CANDIDATES_TYPE = pa.list_(
@@ -107,23 +103,19 @@ _BLOCKS_ARROW = pa.schema(
 BLOCKS_DDL = from_arrow_schema(_BLOCKS_ARROW)
 
 
-def blocks_kernel_arrow(cfg: KernelConfig = DEFAULT_CONFIG):
+def blocks_kernel_arrow(batches):
     """doc -> n block rows: the UDTF-shaped stage (SURVEY §2g: 'the
     entire C++/Py kernel is, morally, one UDTF').  Emits the classified
     per-block intermediate table — the graft of the region.txt IR
     (reference cut.h:863-893, parsed back at reco.py:194-216)."""
-
-    def _run(batches):
-        for rb in batches:
-            cols: dict[str, list] = {name: [] for name in _BLOCKS_ARROW.names}
-            urls = rb.column("url").to_pylist()
-            for u, h in zip(urls, rb.column("html").to_pylist()):
-                for b in extract(h, cfg).blocks:
-                    for k, v in cols.items():
-                        v.append(u if k == "url" else getattr(b, k))
-            yield pa.RecordBatch.from_pydict(cols, schema=_BLOCKS_ARROW)
-
-    return _run
+    for rb in batches:
+        cols: dict[str, list] = {name: [] for name in _BLOCKS_ARROW.names}
+        urls = rb.column("url").to_pylist()
+        for u, h in zip(urls, rb.column("html").to_pylist()):
+            for b in extract(h).blocks:
+                for k, v in cols.items():
+                    v.append(u if k == "url" else getattr(b, k))
+        yield pa.RecordBatch.from_pydict(cols, schema=_BLOCKS_ARROW)
 
 
 def _nonempty_html(pages: DataFrame) -> DataFrame:
@@ -132,18 +124,15 @@ def _nonempty_html(pages: DataFrame) -> DataFrame:
     return pages.filter(F.col("html").isNotNull() & (F.length("html") > 0))
 
 
-def extract_blocks(pages: DataFrame, cfg: KernelConfig = DEFAULT_CONFIG) -> DataFrame:
+def extract_blocks(pages: DataFrame) -> DataFrame:
     """pages -> classified blocks table (FIXTURES.md §3)."""
     ensure_shipped(pages.sparkSession)  # the Arrow stage runs the kernel
     slim = _nonempty_html(pages.select("url", "html"))
-    return slim.mapInArrow(blocks_kernel_arrow(cfg), schema=BLOCKS_DDL)
+    return slim.mapInArrow(blocks_kernel_arrow, schema=BLOCKS_DDL)
 
 
 def extract_pages(
-    pages: DataFrame,
-    n_partitions: int | None = None,
-    cfg: KernelConfig = DEFAULT_CONFIG,
-    salted: bool = True,
+    pages: DataFrame, n_partitions: int | None = None, salted: bool = True
 ) -> DataFrame:
     """pages(url, warc_ts, html, ...) -> extracted DataFrame.
 
@@ -161,4 +150,4 @@ def extract_pages(
             slim = slim.repartition(n_partitions, F.sha2(F.col("url"), 256))
         else:
             slim = slim.repartition(F.sha2(F.col("url"), 256))
-    return slim.mapInArrow(extraction_kernel_arrow(cfg), schema=EXTRACTED_DDL)
+    return slim.mapInArrow(extraction_kernel_arrow, schema=EXTRACTED_DDL)

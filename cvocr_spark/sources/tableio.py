@@ -19,22 +19,24 @@ checkpoint a first-class lineage table:
     sets ``run_id``; ``input_fingerprint`` is an order-independent
     bit_xor of xxhash64(url) and ``wall_us`` the summed kernel time;
   * the manifest dir's ``_FINGERPRINT`` records the input (url,
-    warc_ts, html), ``n_buckets`` and the kernel config before the
-    first data write, and a resume over different input refuses
-    instead of serving stale buckets;
+    warc_ts, html), ``n_buckets`` and the kernel source digest
+    (``_kernel_digest``) before the first data write, and a resume over
+    different input or a changed kernel refuses instead of serving
+    stale buckets;
   * resume = skip the buckets the manifest holds (``_committed``, the
     one manifest reader) and process only the rest.
 """
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import durable
-from ..kernel import DEFAULT_CONFIG, KernelConfig
+from .. import durable, fastparse, kernel
 from ..plans.job import EXTRACTED_DDL, extract_blocks, extract_pages
 
 MANIFEST_DDL = (
@@ -46,6 +48,13 @@ MANIFEST_DDL = (
 def _with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     # deterministic lineage unit: stable across runs and partition counts
     return df.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+
+
+def _kernel_digest() -> str:
+    """The kernel's source digest: its rules are constants there, so any
+    rule or logic edit changes it, and a resume across the edit refuses."""
+    src = "".join(inspect.getsource(m) for m in (kernel, fastparse))
+    return hashlib.sha256(src.encode()).hexdigest()[:16]
 
 
 def _committed(spark: SparkSession, manifest_dir: str, col: str) -> set[int]:
@@ -98,12 +107,7 @@ def _commit_manifest(
     return len(rows)
 
 
-def write_debug_sample(
-    pages: DataFrame,
-    out_dir: str,
-    one_in: int = 1000,
-    cfg: KernelConfig = DEFAULT_CONFIG,
-) -> None:
+def write_debug_sample(pages: DataFrame, out_dir: str, one_in: int = 1000) -> None:
     """Deterministic 1-in-N per-block debug sink — the graft of the
     reference's intermediate debug artifacts (preprocess.h:532-534
     region dumps, cut.h:203-214 patch images).  Sampling by url hash is
@@ -113,7 +117,7 @@ def write_debug_sample(
     cost of a filter pushed down before the Arrow stage.  The sample is
     a function of ``pages``, so a rerun overwrites it."""
     sampled = pages.filter(F.pmod(F.xxhash64("url"), F.lit(one_in)) == 0)
-    extract_blocks(sampled, cfg=cfg).write.mode("overwrite").parquet(out_dir)
+    extract_blocks(sampled).write.mode("overwrite").parquet(out_dir)
 
 
 def run_extraction(
@@ -124,14 +128,13 @@ def run_extraction(
     n_buckets: int = 64,
     run_id: str | None = None,
     max_buckets: int | None = None,
-    cfg: KernelConfig = DEFAULT_CONFIG,
 ) -> dict:
     """One (possibly resumed) extraction run.  Returns run stats.
 
     ``max_buckets`` processes only the first k pending buckets — the
     test hook that simulates a run killed partway (SURVEY §5 item 6).
     Raises ``ValueError`` when the manifest holds committed buckets of
-    a different input, ``n_buckets`` or kernel config: resuming would
+    a different input, ``n_buckets`` or kernel source: resuming would
     mix stale buckets into the output, and clearing a user's table is
     not this function's call.  The check is a file listing, no Spark
     job, for a bare ``spark.read`` scan.
@@ -139,7 +142,7 @@ def run_extraction(
     manifest_dir = manifest_dir or out_dir.rstrip("/") + "_manifest"
     run_id = run_id or uuid.uuid4().hex[:12]
 
-    fp = durable.fingerprint(pages, ["url", "warc_ts", "html"], n_buckets, cfg)
+    fp = durable.fingerprint(pages, ["url", "warc_ts", "html"], n_buckets, _kernel_digest())
     done = _committed(spark, manifest_dir, "bucket")
     if not done:
         # nothing committed: bucket dirs of a run killed before its
@@ -162,7 +165,7 @@ def run_extraction(
         todo = all_pending[:max_buckets]
         pending = pending.filter(F.col("bucket").isin(todo))
 
-    extracted = extract_pages(pending, cfg=cfg)
+    extracted = extract_pages(pending)
     extracted = _with_bucket(extracted, n_buckets)  # recompute: deterministic fn of url
     durable.overwrite_partitions(extracted, out_dir, "bucket")
 

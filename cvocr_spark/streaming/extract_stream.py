@@ -20,16 +20,12 @@ from pyspark.sql import functions as F
 
 from .. import durable
 from ..fixtures import PAGES_DDL
-from ..kernel import DEFAULT_CONFIG, KernelConfig
 from ..plans.job import extract_pages
 from ..sources.tableio import _commit_manifest, _committed, _with_bucket
 
 
 def extract_pages_stream(
-    spark: SparkSession,
-    input_dir: str,
-    cfg: KernelConfig = DEFAULT_CONFIG,
-    max_files_per_trigger: int = 8,
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int = 8
 ) -> DataFrame:
     """Streaming pages-dir -> streaming extracted DataFrame: the batch
     ``extract_pages`` plan over a file-source stream, unsalted (a
@@ -39,7 +35,7 @@ def extract_pages_stream(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-    return extract_pages(pages, cfg=cfg, salted=False)
+    return extract_pages(pages, salted=False)
 
 
 def run_stream_with_lineage(
@@ -48,7 +44,6 @@ def run_stream_with_lineage(
     output_dir: str,
     checkpoint_dir: str,
     manifest_dir: str | None = None,
-    cfg: KernelConfig = DEFAULT_CONFIG,
     n_buckets: int = 64,
     max_files_per_trigger: int = 2,
 ):
@@ -65,7 +60,7 @@ def run_stream_with_lineage(
     manifest anti-join IS the idempotence, exactly as in the batch
     run_extraction.  Returns the StreamingQuery."""
     manifest_dir = manifest_dir or output_dir.rstrip("/") + "_manifest"
-    ext = extract_pages_stream(spark, input_dir, cfg, max_files_per_trigger)
+    ext = extract_pages_stream(spark, input_dir, max_files_per_trigger)
     write_batch = lineage_batch_writer(spark, output_dir, manifest_dir, n_buckets)
     return (
         ext.writeStream.foreachBatch(write_batch)
@@ -161,12 +156,11 @@ def run_stream_with_stats(
     input_dir: str,
     stats_dir: str,
     checkpoint_dir: str,
-    cfg: KernelConfig = DEFAULT_CONFIG,
     max_files_per_trigger: int = 2,
 ):
     """Continuous extraction feeding the mergeable-stats sink only —
     the always-on corpus-health monitor shape.  Returns the query."""
-    ext = extract_pages_stream(spark, input_dir, cfg, max_files_per_trigger)
+    ext = extract_pages_stream(spark, input_dir, max_files_per_trigger)
     return (
         ext.writeStream.foreachBatch(stats_batch_writer(spark, stats_dir))
         .option("checkpointLocation", checkpoint_dir)

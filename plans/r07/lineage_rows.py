@@ -14,6 +14,8 @@ pass them), local[4]:
   * ``run_stream_with_lineage`` over two drops of the same pages (one
     microbatch per drop);
   * ``run_stream_with_stats`` over the same two drops;
+  * ``extract_blocks`` over the pages, and ``write_debug_sample`` at
+    ``one_in=10``;
   * the ``bands/`` and ``corpus/`` tables and ``current_clusters`` after
     three ``cluster_batch_writer`` batches.
 
@@ -59,8 +61,9 @@ def main(repo: str, out: str) -> None:
     sys.path.insert(0, repo)
     from cvocr_spark.fixtures import gen_pages_df
     from cvocr_spark.operators import dedup as dd
+    from cvocr_spark.plans.job import extract_blocks
     from cvocr_spark.session import build_session, ensure_shipped
-    from cvocr_spark.sources.tableio import run_extraction
+    from cvocr_spark.sources.tableio import run_extraction, write_debug_sample
     from cvocr_spark.streaming import (
         cluster_batch_writer,
         current_clusters,
@@ -110,6 +113,10 @@ def main(repo: str, out: str) -> None:
     result["run_extraction.resume.manifest"] = _rows(
         spark.read.parquet(f"{res}_manifest").select(*BACKFILL_COLS)
     )
+
+    result["extract_blocks.rows"] = _rows(extract_blocks(pages))
+    write_debug_sample(pages, f"{tmp}/sample", one_in=10)
+    result["write_debug_sample.rows"] = _rows(spark.read.parquet(f"{tmp}/sample"))
 
     # two drops, two files each: one microbatch per drop at 2 files/trigger
     drops = [pages.filter("length(url) % 2 = 0"), pages.filter("length(url) % 2 = 1")]

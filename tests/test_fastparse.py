@@ -1,28 +1,33 @@
-"""Differential tests: FastSegmenter vs the stdlib-HTMLParser reference
-segmenter must produce identical extraction results on the entire
-fixture corpus and on seeded generated pages; on arbitrary garbage both
-must not crash."""
+"""Differential tests: FastSegmenter, the kernel's one production
+segmenter, vs the stdlib-HTMLParser reference segmenter
+(``kernel._Segmenter``) must produce identical extraction results on
+the entire fixture corpus and on seeded generated pages; on arbitrary
+garbage both must not crash."""
 
 from __future__ import annotations
 
-import dataclasses
 import os
 import sys
+from unittest import mock
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from cvocr_spark import fastparse, kernel  # noqa: E402
 from cvocr_spark.fixtures import build_page, gen_pages_table  # noqa: E402
-from cvocr_spark.kernel import DEFAULT_CONFIG, extract  # noqa: E402
+from cvocr_spark.kernel import extract  # noqa: E402
 
-FAST = dataclasses.replace(DEFAULT_CONFIG, fast_parse=True)
-SLOW = dataclasses.replace(DEFAULT_CONFIG, fast_parse=False)
+
+def _reference(html: bytes) -> kernel.ExtractResult:
+    """``extract`` with the reference segmenter in the scanner's place."""
+    with mock.patch.object(fastparse, "FastSegmenter", kernel._Segmenter):
+        return extract(html)
 
 
 def _same(html: bytes) -> None:
-    a, b = extract(html, FAST), extract(html, SLOW)
+    a, b = extract(html), _reference(html)
     assert a.text == b.text
     assert a.spans == b.spans
     assert a.score == b.score
@@ -75,9 +80,34 @@ def test_fast_handles_edge_markup():
         b'<div class="news&#108;etter">subscribe now to our daily letter</div>'
         b"<p>real content that is long enough to pass the keep rule today ok</p>",
         b'<div class="x" &quot;newsletter&quot;><p>attr soup with real content long enough</p></div>',
+        # '</ p>' is an end tag to the reference; '</>' and '</' before a
+        # non-letter are dropped up to '>' (HTML5: missing end-tag name,
+        # bogus comment) — content after each must survive, markup not
+        b"<p>x</ p>content after a spaced end tag that is long enough to keep</p>",
+        b"<p>first paragraph long enough to keep as content</>more text after it ok</p>",
+        b"<p>first paragraph long enough to keep as content</ p x>more text after ok</p>",
+        # a downlevel-revealed conditional comment: two complete comments
+        b"<!--[if !IE]><!--><p>revealed paragraph long enough to be kept here ok</p>"
+        b"<!--<![endif]--><p>and a second paragraph long enough to be kept ok</p>",
     ]
     for c in cases:
         _same(c)
+    # '<!-->' and '<!--->' are empty comments (HTML5 abrupt closing of
+    # an empty comment): the paragraph after must survive.  Python
+    # 3.11's HTMLParser cannot close them and, at EOF, keeps them as a
+    # text block of their own (boilerplate, 5-6 chars), so the reference
+    # agrees on the extracted text only
+    for empty in (b"<!-->", b"<!--->"):
+        c = b"<p>first paragraph long enough to keep as content</p>" + empty + (
+            b"<p>second paragraph long enough to keep as content</p>"
+        )
+        r = extract(c)
+        assert r.text == _reference(c).text
+        assert "second paragraph" in r.text
+        assert [x.text for x in r.blocks] == [
+            "first paragraph long enough to keep as content",
+            "second paragraph long enough to keep as content",
+        ]
 
 
 def test_rawtext_close_is_exact_name():
@@ -87,14 +117,14 @@ def test_rawtext_close_is_exact_name():
         b"<script>var a='</scripts>'; run();</script>"
         b"<p>the only real paragraph of content on this page long enough to keep</p>"
     )
-    r = extract(html, FAST)
+    r = extract(html)
     assert "run()" not in r.text and "scripts" not in r.text
     assert "only real paragraph" in r.text
 
 
 def test_nonascii_lower_desync_does_not_drop_content():
     html = ("İ" * 30 + "<script>s()</script><p>" + "kept content words " * 5 + "</p>").encode()
-    r = extract(html, FAST)
+    r = extract(html)
     assert "kept content words" in r.text
     assert "s()" not in r.text
 
@@ -112,7 +142,7 @@ def test_fast_equals_reference_on_generated_pages(words, doc_id):
 @settings(max_examples=60, deadline=None)
 @given(st.binary(max_size=2048))
 def test_fast_never_crashes_on_garbage(raw):
-    r = extract(raw, FAST)
+    r = extract(raw)
     assert isinstance(r.text, str)
     for (_b, s, e, _c) in r.spans:
         assert 0 <= s <= e <= len(r.text)

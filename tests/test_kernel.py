@@ -19,7 +19,7 @@ from hypothesis import strategies as st
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cvocr_spark.fixtures import build_page, chunk_text, gen_pages_table  # noqa: E402
-from cvocr_spark.kernel import DEFAULT_CONFIG, decode_html, extract  # noqa: E402
+from cvocr_spark.kernel import ABSORB_CONF, MAX_HTML_BYTES, decode_html, extract  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 
@@ -68,6 +68,20 @@ def test_decode_utf16_bom_roundtrip():
     assert r.text == body
 
 
+def test_extract_str_is_not_decoded_twice():
+    """A str is already decoded: the charset its page declares must not
+    decode it a second time (latin-1 turned 'café' into 'cafÃ©'), and
+    the byte cap still holds, counted in UTF-8."""
+    body = "caf\xe9 society r\xe9sum\xe9 words to make this block long enough to pass"
+    page = '<html><head><meta charset="{}"></head><body><p>' + body + "</p></body></html>"
+    assert extract(page.format("latin-1").encode("latin-1")).text == body
+    for charset in ("latin-1", "utf-16"):
+        r = extract(page.format(charset))
+        assert r.text == body and r.flags == ""
+    r = extract("<p>" + "\xe9" * MAX_HTML_BYTES + "</p>")
+    assert "truncated" in r.flags and len(r.text) <= MAX_HTML_BYTES // 2
+
+
 def test_decode_pdf_and_containers_flagged():
     assert extract(b"%PDF-1.7 blah").flags == "pdf_unsupported"
     assert extract(b"\x1f\x8b\x08gzip").flags == "binary_container"
@@ -75,10 +89,10 @@ def test_decode_pdf_and_containers_flagged():
 
 
 def test_decode_truncates_giant_pages():
-    raw = b"<p>" + b"x" * (DEFAULT_CONFIG.max_html_bytes + 100)
+    raw = b"<p>" + b"x" * (MAX_HTML_BYTES + 100)
     text, flags = decode_html(raw)
     assert "truncated" in flags
-    assert len(text) <= DEFAULT_CONFIG.max_html_bytes
+    assert len(text) <= MAX_HTML_BYTES
 
 
 # -- chrome strip (P1) -------------------------------------------------------
@@ -226,7 +240,7 @@ def test_confidence_low_for_promoted_stub():
     r = extract(_page(f"<p>{LONG}</p><p>tiny but ok</p><p>{LONG}</p>"))
     stub = next(x for x in r.blocks if x.text == "tiny but ok")
     assert stub.cls == "content"
-    assert stub.conf < DEFAULT_CONFIG.absorb_conf
+    assert stub.conf < ABSORB_CONF
 
 
 def test_confidence_boilerplate_for_link_dense():
@@ -301,7 +315,7 @@ def test_giant_page_capped_and_bounded():
 
     body = ("<p>" + "word " * 200 + "</p>") * 4000  # ~4.1 MB
     raw = ("<html><body>" + body + "</body></html>").encode()
-    assert len(raw) > DEFAULT_CONFIG.max_html_bytes
+    assert len(raw) > MAX_HTML_BYTES
     t0 = time.perf_counter()
     r = extract(raw)
     dt = time.perf_counter() - t0

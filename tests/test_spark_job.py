@@ -17,8 +17,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cvocr_spark import durable  # noqa: E402
 from cvocr_spark.fixtures import gen_pages_df, gen_pages_table  # noqa: E402
-from cvocr_spark.kernel import DEFAULT_CONFIG  # noqa: E402
 from cvocr_spark.plans.job import extract_pages  # noqa: E402
+from cvocr_spark.sources import tableio  # noqa: E402
 from cvocr_spark.sources.tableio import run_extraction  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -105,13 +105,39 @@ def test_resume_refuses_changed_input(spark, pages, tmp_path):
         run_extraction(spark, first, out, n_buckets=12, max_buckets=3)
         n_out = spark.read.parquet(out).count()
         recorded = durable.read_fingerprint(spark, out + "_manifest")
-        now = durable.fingerprint(changed, ["url", "warc_ts", "html"], kw["n_buckets"], DEFAULT_CONFIG)
+        now = durable.fingerprint(
+            changed, ["url", "warc_ts", "html"], kw["n_buckets"], tableio._kernel_digest()
+        )
         assert recorded != now
         with pytest.raises(ValueError) as err:
             run_extraction(spark, changed, out, **kw)
         assert recorded in str(err.value) and now in str(err.value)
         assert spark.read.parquet(out).count() == n_out
         assert spark.read.parquet(out + "_manifest").count() == 3
+
+
+def test_resume_refuses_changed_kernel(spark, pages, tmp_path, monkeypatch):
+    """The same input through a changed kernel is not the same output:
+    a resume after a kernel edit (here: its source digest) must refuse
+    and leave the output, the manifest and its fingerprint as they
+    were."""
+    out = str(tmp_path / "ext")
+    run_extraction(spark, pages, out, n_buckets=12, max_buckets=3)
+
+    def state():
+        return (
+            sorted(map(tuple, spark.read.parquet(out).select("url", "text", "bucket").collect())),
+            sorted(map(tuple, spark.read.parquet(out + "_manifest").drop("wall_us").collect())),
+            durable.read_fingerprint(spark, out + "_manifest"),
+        )
+
+    before = state()
+    assert len(before[1]) == 3
+    monkeypatch.setattr(tableio, "_kernel_digest", lambda: "edited-kernel")
+    with pytest.raises(ValueError) as err:
+        run_extraction(spark, pages, out, n_buckets=12)
+    assert before[2] in str(err.value) and "edited-kernel" in str(err.value)
+    assert state() == before
 
 
 def test_torn_first_manifest_reads_as_nothing_committed(spark, pages, tmp_path):
