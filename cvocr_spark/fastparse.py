@@ -22,7 +22,9 @@ sanitation of the reference, preprocess.h:187-205).  ``<!-->`` and
 ``<!--->`` are empty comments and an unterminated ``<!--`` runs to EOF,
 as in HTML5, where the reference keeps them as text when no later
 ``-->`` closes them; ``</>`` and ``</`` before a non-letter are dropped
-up to ``>``, and ``</ p>`` ends a ``p``, as in the reference.
+up to ``>``, and ``</ p>`` ends a ``p``, as in the reference.  A start
+tag is self-closing when HTMLParser's attribute lexing leaves ``/>``:
+``<p/>`` opens and closes a ``p``, ``<a href=/x/>`` only opens an ``a``.
 """
 
 from __future__ import annotations
@@ -47,9 +49,9 @@ TOKEN_RE = re.compile(
     r"|<!\[CDATA\[.*?(?:\]\]>|$)"            # CDATA blobs
     r"|<[!?][^>]*(?:>|$)"                    # doctype / PIs / bogus decls
     r"|<(/?)([a-zA-Z][a-zA-Z0-9\-]*)"        # 1: closing slash, 2: tag name
-    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)"     # 3: raw attributes
-    r"(/?)>"                                 # 4: self-closing slash
-    r"|</\s+([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"  # 5: end tag name after '</ '
+    r"((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)>"    # 3: raw attributes (and a
+    #                                          self-closing '/': _self_closing)
+    r"|</\s+([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"  # 4: end tag name after '</ '
     r"|</(?:[^a-zA-Z>][^>]*)?>",             # '</>', '</ x y>': dropped
     re.DOTALL,
 )
@@ -66,6 +68,29 @@ _RAWTEXT = frozenset(("script", "style", "textarea", "title"))
 _RAWTEXT_CLOSE = {
     t: re.compile(r"</\s*%s\s*>" % t, re.IGNORECASE) for t in _RAWTEXT
 }
+
+# html.parser's tolerant start-tag lexing (Python 3.11): the gap after
+# the tag name, and one attribute with its trailing gap
+_TAG_GAP_RE = re.compile(r"(?:\s|/(?!>))*")
+_ATTR_LEX_RE = re.compile(
+    r"""((?<=['"\s/])[^\s/>][^\s/=>]*)(\s*=+\s*"""
+    r"""('[^']*'|"[^"]*"|(?!['"])[^>\s]*))?(?:\s|/(?!>))*"""
+)
+
+
+def _self_closing(doc: str, k: int, end: int) -> bool:
+    """True iff the start tag whose raw attributes are ``doc[k:end]``
+    (``doc[end]`` is its '>') is self-closing as HTMLParser reads it:
+    what is left after lexing its attributes is '/>'.  A '/' that an
+    unquoted value takes (``<a href=/x/>``) does not close the tag."""
+    k = _TAG_GAP_RE.match(doc, k).end()
+    while k < end:
+        m = _ATTR_LEX_RE.match(doc, k)
+        if m is None:
+            break
+        k = m.end()
+    return doc[k:end + 1].strip() == "/>"
+
 
 _ATTR_RE = re.compile(
     r"""([a-zA-Z][a-zA-Z0-9\-:_]*)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>]*))?"""
@@ -259,7 +284,7 @@ class FastSegmenter:
             if start > pos:
                 self._data(doc[pos:start])
             pos = m.end()
-            closing, name, attrs, selfclose, spaced_end = m.group(1, 2, 3, 4, 5)
+            closing, name, attrs, spaced_end = m.group(1, 2, 3, 4)
             if name is None:
                 if spaced_end:
                     self._end(spaced_end.lower())
@@ -270,7 +295,10 @@ class FastSegmenter:
                 continue
             hidden = False
             boiler_cls = False
+            selfclose = False
             if attrs:
+                if attrs[-1] == "/":
+                    selfclose = _self_closing(doc, m.start(3), pos - 1)
                 al = attrs.lower()
                 if "hidden" in al or "display" in al or "visibility" in al:
                     hidden = _is_hidden(al)

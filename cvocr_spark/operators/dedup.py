@@ -11,11 +11,11 @@ an exact DuckDB oracle.  Scale design:
     a prefix but diverging later never merge.
   * minhash + LSH    — signatures come from the per-document text
     kernel (doctext.py: one Arrow pass, no shuffle); banding turns
-    O(n^2) similarity into an equi-join on band keys: shuffle on
-    (band_id, band_val), join only within buckets.  A
+    O(n^2) similarity into per-bucket pairing: shuffle on
+    (band_id, band_val), pair only within buckets.  A
     HOT-BUCKET GUARD drops degenerate buckets (empty docs, templated
     boilerplate) above ``max_bucket`` members — the classic crawl-scale
-    skew-killer where one band value would otherwise self-join
+    skew-killer where one band value would otherwise pair
     quadratically; skipped buckets are surfaced by
     ``lsh_skipped_buckets``.
   * band tables      — every band frame that is stored or passed
@@ -154,11 +154,11 @@ def _safe_banded(
     with more than ``max_bucket`` members, as a WINDOW count over one
     shuffle of the rows.  Minhash bands, simhash64 chunks and the
     cosine LSH buckets all call it.  vs a groupBy+self-join guard: the
-    upstream signature stage appears ONCE in the plan, the single
-    ``keys`` exchange it introduces is exactly the partitioning the
-    downstream self-join needs (ReuseExchange dedupes it across the
-    join's two sides), and skew behavior is identical — either form
-    hashes a monster bucket's rows to one task before dropping them."""
+    upstream signature stage appears ONCE in the plan, and the single
+    ``keys`` exchange it introduces is exactly the partitioning
+    ``_bucket_pairs`` groups by, so pairing adds no exchange.  Skew
+    behavior is identical — either form hashes a monster bucket's rows
+    to one task before dropping them."""
     w = F.count("*").over(Window.partitionBy(*keys))
     return (
         banded.withColumn("bucket_n", w)
@@ -168,27 +168,40 @@ def _safe_banded(
 
 
 def minhash_lsh_pairs(docs: DataFrame, max_bucket: int = MAX_BUCKET) -> DataFrame:
-    """Band the signatures (2 rows/band) and equi-join on band value:
-    candidate near-dup pairs without a cross product.  Buckets larger
-    than ``max_bucket`` are DROPPED before the self-join (hot-bucket
+    """Band the signatures (2 rows/band) and pair the docs of each band
+    bucket: candidate near-dup pairs without a cross product.  Buckets
+    larger than ``max_bucket`` are DROPPED before pairing (hot-bucket
     guard): a degenerate band value (10k identical boilerplate docs)
     would otherwise produce a single O(n^2) task at crawl scale.
     Skipped buckets are observable via ``lsh_skipped_buckets``."""
     return _self_candidates(_safe_banded(_banded(docs), max_bucket))
 
 
-def _self_candidates(bands: DataFrame) -> DataFrame:
-    """Distinct (a, b), a < b, of docs sharing a band bucket — the LSH
-    self-join over an already hot-bucket-guarded band frame."""
-    a, b = bands.alias("a"), bands.alias("b")
+def _bucket_pairs(safe: DataFrame, keys, member) -> DataFrame:
+    """(x, y) for every two members of one ``keys`` bucket of a guarded
+    frame, x before y in ``member`` order: ONE aggregate per bucket
+    (``sort_array(collect_list(member))``) and its i < j pairs.  vs a
+    self-join, the frame (and the signature kernel under it) is
+    evaluated once, and the aggregate groups by the guard's own window
+    partitioning, so it adds no exchange.  Buckets with a NULL key pair
+    nothing, as under an equi-join."""
+    m = F.sort_array(F.collect_list(member)).alias("m")
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a"), F.col("b.doc_id").alias("b"))
+        safe.dropna(subset=list(keys))
+        .groupBy(*keys)
+        .agg(m)
+        .select("m", F.posexplode("m").alias("i", "x"))
+        .select("x", F.explode(F.expr("slice(m, i + 2, size(m) - i - 1)")).alias("y"))
+    )
+
+
+def _self_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (a, b), a < b, of docs sharing a band bucket of an
+    already hot-bucket-guarded band frame."""
+    return (
+        _bucket_pairs(bands, ("band_id", "band_val"), F.col("doc_id"))
+        .filter(F.col("x") < F.col("y"))
+        .select(F.col("x").alias("a"), F.col("y").alias("b"))
         .distinct()
     )
 
@@ -1077,7 +1090,7 @@ def minhash_verified_dups_banded(
     """``minhash_verified_dups`` over a PRECOMPUTED raw band frame
     (the ``_banded(docs)`` rows, e.g. read back from a stored band
     table): the signature pipeline is not re-derived; the hot-bucket
-    guard, candidate self-join and exact-Jaccard verify are the same
+    guard, candidate pairing and exact-Jaccard verify are the same
     tail as the in-plan form, so pairs are identical whenever ``bands``
     equals ``_banded(docs)``."""
     cand = _self_candidates(_safe_banded(bands, max_bucket))

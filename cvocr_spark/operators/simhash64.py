@@ -9,11 +9,12 @@ Scale design:
     both engines).  Near-dup candidates at Hamming distance <= 3 via
     PIGEONHOLE banding: the 64 bits split into four 16-bit chunks; two
     signatures within distance 3 must agree on at least one chunk, so
-    an equi-join on (chunk_id, chunk_val) finds every such pair without
-    a cross product.  The signatures come from the per-document text
-    kernel (doctext.py), the one hot-bucket guard (dedup._safe_banded)
-    drops degenerate chunks, and the exact Hamming distance —
-    bit_count(xor) on both halves — verifies candidates.
+    pairing the members of each (chunk_id, chunk_val) bucket finds
+    every such pair without a cross product.  The signatures come from
+    the per-document text kernel (doctext.py), the one hot-bucket guard
+    (dedup._safe_banded) drops degenerate chunks, one aggregate per
+    bucket (dedup._bucket_pairs) pairs the rest, and the exact Hamming
+    distance — bit_count(xor) on both halves — verifies candidates.
   * minhash k=128 — one md5 per shingle, halves narrowed to 52 bits so
     h1 + 127*h2 < 2^59 never overflows; the contract query digests the
     128 mins into one md5 so the oracle row stays narrow while still
@@ -31,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions import portable as P
 from . import doctext
-from .dedup import _safe_banded, minhash_signatures_wide
+from .dedup import _bucket_pairs, _safe_banded, minhash_signatures_wide
 
 CHUNKS = 4           # 4 x 16-bit chunks: pigeonhole-complete for d <= 3
 MAX_HAMMING = 3
@@ -74,20 +75,16 @@ def simhash64_neardup_pairs(
     safe = _safe_banded(
         _chunked(simhash64_signatures(docs)), max_bucket, ("chunk_id", "chunk_val")
     )
-    a, b = safe.alias("a"), safe.alias("b")
-    ham = F.bit_count(
-        F.col("a.sim_lo").bitwiseXOR(F.col("b.sim_lo"))
-    ) + F.bit_count(F.col("a.sim_hi").bitwiseXOR(F.col("b.sim_hi")))
+    member = F.struct("doc_id", "sim_lo", "sim_hi")
+    ham = F.bit_count(F.col("x.sim_lo").bitwiseXOR(F.col("y.sim_lo"))) + F.bit_count(
+        F.col("x.sim_hi").bitwiseXOR(F.col("y.sim_hi"))
+    )
     return (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _bucket_pairs(safe, ("chunk_id", "chunk_val"), member)
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
         .select(
-            F.col("a.doc_id").alias("a"),
-            F.col("b.doc_id").alias("b"),
+            F.col("x.doc_id").alias("a"),
+            F.col("y.doc_id").alias("b"),
             ham.cast("int").alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)

@@ -96,9 +96,11 @@ def cosine_neardup_pairs(
         "vec_id", F.col("vec_id") + 100000
     )
     corpus = with_bucket(base.unionByName(dups))
-    # the window-count guard evaluates the 4-dot-product bucket
-    # expression ONCE per row, and its single bkt exchange is the very
-    # partitioning the self-join below reuses
+    # as the executed (AQE) plan shows: the 4-dot-product bucket
+    # expression and its bkt exchange run ONCE, the self-join's second
+    # side reading them back as a ReusedExchange; the window count
+    # runs once per side, and at the default limit AQE broadcasts one
+    # side instead of joining on the bkt partitioning
     safe = _safe_banded(corpus, max_bucket, ("bkt",))
     a = safe.select("bkt", F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
     b = safe.select("bkt", F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))

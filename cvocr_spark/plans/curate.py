@@ -69,7 +69,8 @@ def curate_corpus(
     tests/test_curate.py).
 
     CACHING CONTRACT (ADVICE r4): the returned frame references a
-    persisted intermediate (the quality survivors — three consumers).
+    persisted intermediate (the graded corpus: doc_id, text, keep,
+    drop_reasons — four consumers).
     Call ``release(manifest)`` once the manifest has been materialized
     (written / collected); otherwise each curate_corpus call leaks one
     cached frame for the session's life — the same leak class ADVICE
@@ -83,36 +84,32 @@ def curate_corpus(
     script = _sc.script_profile(base).select("doc_id", "main_script")
 
     # 3. quality gates (over the ORIGINAL text: '<EMAIL>' tokens must
-    # not perturb quality statistics).  The manifest is anchored on the
-    # INPUT frame, not the gate frame: a NULL-text doc has no
-    # repetition-stats row on either engine (shingles of NULL are
-    # undefined), but it must still get a manifest decision —
-    # keep=false, reason 'no_text'.
-    gates = (
-        base.select("doc_id")
-        .join(_ts.corpus_filter(base).select("doc_id", "keep", "drop_reasons"),
-              "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("keep", F.lit(False)).alias("keep"),
-            F.coalesce("drop_reasons", F.lit("no_text")).alias("drop_reasons"),
-        )
+    # not perturb quality statistics), graded onto the INPUT frame: a
+    # NULL-text doc has no repetition-stats row on either engine
+    # (shingles of NULL are undefined), but it must still get a manifest
+    # decision — keep=false, reason 'no_text'.
+    graded = base.join(
+        _ts.corpus_filter(base).select("doc_id", "keep", "drop_reasons"), "doc_id", "left"
+    ).select(
+        "doc_id",
+        "text",
+        F.coalesce("keep", F.lit(False)).alias("keep"),
+        F.coalesce("drop_reasons", F.lit("no_text")).alias("drop_reasons"),
     )
 
-    # 4. dedup over quality survivors only.  survivors feeds THREE
-    # consumers (pair pipeline, cluster resolution, keeper probe) —
-    # persist so the gate pipelines run once, not three times.  A
-    # crawl-scale run materializes each stage to the lake instead
-    # (the dedup-index build/serve split, dedup.py) — this in-plan
-    # composition is the single-job form.
-    # ``cache=False`` trades the 3x gate recompute for zero session
+    # 4. dedup over quality survivors only.  graded feeds the pair
+    # pipeline, cluster resolution, the keeper probe and the manifest's
+    # gate columns — persist so the gate pipeline (the repetition
+    # kernel) runs once, not once per consumer.  A crawl-scale run
+    # materializes each stage to the lake instead (the dedup-index
+    # build/serve split, dedup.py) — this in-plan composition is the
+    # single-job form.
+    # ``cache=False`` trades the gate recompute for zero session
     # residue — the shape the oracled contract query uses (the driver
     # collects the returned frame and never gets a release() window)
-    survivors = base.join(
-        gates.filter("keep").select("doc_id"), "doc_id", "left_semi"
-    )
     if cache:
-        survivors = survivors.persist()
+        graded = graded.persist()
+    survivors = graded.filter("keep").select("doc_id", "text")
     if dedup_index_path is not None:
         spark = docs.sparkSession
         # stale-index guard (r6, ADVICE r5): the _BUILT marker alone
@@ -121,7 +118,7 @@ def curate_corpus(
         # stale bands and emit a wrong manifest.  The index records a
         # fingerprint of the corpus it was built over; a mismatch
         # rebuilds.  Cost: one count+xor aggregate over survivors per
-        # serve call — a scan the gates pipeline performs anyway.
+        # serve call — a scan of the persisted graded frame.
         fp = _dd.index_fingerprint(survivors)
         if not durable.built(spark, dedup_index_path, fp):
             _dd.build_dedup_index(survivors, dedup_index_path)
@@ -147,7 +144,8 @@ def curate_corpus(
     split = _sp.split_train_eval(keepers.select("doc_id"), "doc_id", eval_pct)
 
     out = (
-        gates.join(clusters.select("doc_id", "cluster_id", "is_keeper"), "doc_id", "left")
+        graded.select("doc_id", "keep", "drop_reasons")
+        .join(clusters.select("doc_id", "cluster_id", "is_keeper"), "doc_id", "left")
         .join(contam, "doc_id", "left")
         .join(split.select("doc_id", "split"), "doc_id", "left")
         .join(script, "doc_id", "left")
@@ -179,15 +177,16 @@ def curate_corpus(
     # stash the persisted intermediate for release() — a plain python
     # attribute on the returned frame; never serialized, purely a
     # driver-side unpersist handle
-    manifest._curate_cached = [survivors] if cache else []  # type: ignore[attr-defined]
+    manifest._curate_cached = [graded] if cache else []  # type: ignore[attr-defined]
     return manifest
 
 
 def release(manifest: DataFrame) -> None:
     """Unpersist the cached intermediates behind a curate_corpus
     manifest.  Call AFTER materializing (write/collect) — the manifest
-    plan references the cached survivors frame lazily, so releasing
-    first would just silently recompute the gate pipelines thrice."""
+    plan references the cached graded frame lazily, so releasing
+    first would just silently recompute the gate pipeline once per
+    consumer."""
     for df in getattr(manifest, "_curate_cached", []):
         df.unpersist()
 

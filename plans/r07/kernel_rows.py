@@ -16,6 +16,10 @@ Pages, by set:
     mix block, inline, link, hidden, boiler-class, rawtext, comment,
     CDATA, doctype and entity markup with words, unclosed and stray
     tags, and malformed comment and end-tag forms (``MENDED_RE``).
+  * ``soup_reference``: the same pages through ``extract`` with the
+    reference segmenter (``kernel._Segmenter``) in the scanner's place;
+    the merge counts, per side, the soup pages where scanner and
+    reference differ.
 
 Run once per checkout, then merge the two files:
 
@@ -39,9 +43,10 @@ import sys
 
 N_SOUP = 2000
 
-# the malformed forms whose reading changed: an empty comment, and '</'
-# before a non-letter (up to 8 chars of what follows, to name the form)
-MENDED_RE = re.compile(r"<!---?>|</(?![a-zA-Z])[^>]{0,8}>?")
+# the forms whose reading changed: an empty comment, '</' before a
+# non-letter (up to 8 chars of what follows, to name the form), and a
+# self-closing start tag of a non-void element
+MENDED_RE = re.compile(r"<!---?>|</(?![a-zA-Z])[^>]{0,8}>?|<(?!br\b)[a-zA-Z][^<>]*/>")
 
 _WORDS = (
     "the of and river bank market report city council weather season "
@@ -119,12 +124,18 @@ def pages(repo: str, testdata: str) -> dict[str, list[tuple[str, bytes]]]:
 
 def main(repo: str, testdata: str, out: str) -> None:
     sys.path.insert(0, repo)
+    from unittest import mock
+
+    from cvocr_spark import fastparse, kernel
     from cvocr_spark.kernel import extract
 
+    sets = pages(repo, testdata)
     result = {
         name: {pid: _page_sha(extract(html)) for pid, html in rows}
-        for name, rows in pages(repo, testdata).items()
+        for name, rows in sets.items()
     }
+    with mock.patch.object(fastparse, "FastSegmenter", kernel._Segmenter):
+        result["soup_reference"] = {pid: _page_sha(extract(html)) for pid, html in sets["soup"]}
     with open(out, "w") as f:
         json.dump(result, f, indent=0, sort_keys=True)
 
@@ -137,7 +148,7 @@ def merge(parent: str, change: str, out: str, repo: str, testdata: str) -> None:
         b = json.load(f)
     html = {name: dict(rows) for name, rows in pages(repo, testdata).items()}
     sets = {}
-    for name in sorted(a):
+    for name in sorted(set(a) & set(html)):
         differ = sorted(p for p in a[name] if a[name][p] != b[name].get(p))
         same = sorted(p for p in a[name] if p not in differ)
 
@@ -153,6 +164,11 @@ def merge(parent: str, change: str, out: str, repo: str, testdata: str) -> None:
                 for p in differ
             },
         }
+    for side, rows in (("parent", a), ("change", b)):
+        if "soup_reference" in rows:
+            sets[f"soup_scanner_vs_reference_{side}"] = sorted(
+                p for p in rows["soup"] if rows["soup"][p] != rows["soup_reference"][p]
+            )
     with open(out, "w") as f:
         json.dump(sets, f, indent=1, sort_keys=True)
 

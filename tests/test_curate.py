@@ -27,7 +27,7 @@ def _manifest(spark):
     )
     m = curate_corpus(docs, ev)
     rows = m.collect()
-    release(m)  # ADVICE r4: drop the cached survivors after materializing
+    release(m)  # ADVICE r4: drop the cached graded frame after materializing
     return docs, rows
 
 
@@ -258,7 +258,7 @@ def test_curation_manifest_oracle_nasty_corpus(spark):
 
 
 def test_curate_release_unpersists(spark):
-    """ADVICE r4: release() must actually drop the cached survivors —
+    """ADVICE r4: release() must actually drop the cached graded frame —
     the per-call cached-frame leak class."""
     docs = spark.createDataFrame(
         [(1, "plain words repeated enough to pass every quality gate in "

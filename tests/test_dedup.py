@@ -463,6 +463,77 @@ def test_hot_bucket_guard_keeps_small_buckets(spark):
     assert (1000, 1001) in got
 
 
+def _duck(sql, tables):
+    import duckdb
+
+    con = duckdb.connect()
+    for name, (ddl, rows) in tables.items():
+        con.execute(f"CREATE TABLE {name} ({ddl})")
+        con.executemany(f"INSERT INTO {name} VALUES ({', '.join('?' * ddl.count(','))}, ?)", rows)
+    return sorted(map(tuple, con.execute(sql).fetchall()))
+
+
+def test_bucket_pairs_boundaries_equal_duckdb(spark):
+    """Pairing per band bucket at its edges, k=8 and k=128, against the
+    DuckDB self-join restatements: a bucket of exactly ``max_bucket``
+    copies pairs (each pair shares every band and comes out once), one
+    of ``max_bucket + 1`` copies is dropped, and single-member buckets
+    pair nothing."""
+    mb = 4
+    a = "kept bucket body text about river barges and canal locks"
+    b = "dropped bucket body text about mountain huts and ridge trails"
+    rows = (
+        [(10 + i, a) for i in range(mb)]
+        + [(20 + i, b) for i in range(mb + 1)]
+        + [(30 + i, f"single member document {i} on topic {i * 13} and more") for i in range(6)]
+        + [(40, a + " plus a tail"), (41, a + " plus a tail")]
+    )
+    df = _docs(spark, rows)
+    corpus = "SELECT doc_id, text FROM documents"
+    table = {"documents": ("doc_id BIGINT, text VARCHAR", rows)}
+    want8 = _duck(f"WITH {dedup._lsh_pairs_ctes(corpus, mb)} SELECT a, b FROM lsh_pairs", table)
+    want128 = _duck(dedup.minhash_lsh_pairs_wide_sql(corpus, mb), table)
+    got8 = sorted(map(tuple, dedup.minhash_lsh_pairs(df, max_bucket=mb).collect()))
+    got128 = sorted(map(tuple, dedup.minhash_lsh_pairs_wide(df, max_bucket=mb).collect()))
+    assert got8 == want8 and got128 == want128
+    kept = {(10 + i, 10 + j) for i in range(mb) for j in range(i + 1, mb)}
+    for got in (got8, got128):
+        assert kept <= set(got) and len(got) == len(set(got))
+        assert not [p for p in got if p[0] >= 20 and p[1] < 40]
+
+
+def test_bucket_pairs_stay_within_band(spark):
+    """Over a raw band frame: equal ``band_val`` under two ``band_id``s
+    never pairs, a pair sharing two bands comes out once, a bucket over
+    the guard and a NULL ``band_val`` pair nothing — as in the DuckDB
+    restatement's guard and self-join."""
+    rows = [
+        (1, 0, "x"), (2, 1, "x"),
+        (3, 0, "y"), (4, 0, "y"), (3, 1, "z"), (4, 1, "z"),
+        (5, 2, "w"), (6, 2, "w"), (7, 2, "w"),
+        (8, 3, "v"),
+        (9, 0, None), (10, 0, None),
+    ]
+    bands = spark.createDataFrame(rows, "doc_id bigint, band_id int, band_val string")
+    got = sorted(map(tuple, dedup._self_candidates(dedup._safe_banded(bands, 2)).collect()))
+    want = _duck(
+        """
+        WITH safe AS (
+          SELECT doc_id, band_id, band_val FROM (
+            SELECT *, count(*) OVER (PARTITION BY band_id, band_val) AS bucket_n
+            FROM banded
+          ) WHERE bucket_n <= 2
+        )
+        SELECT DISTINCT a.doc_id AS a, b.doc_id AS b
+        FROM safe a JOIN safe b
+          ON a.band_id = b.band_id AND a.band_val = b.band_val
+         AND a.doc_id < b.doc_id
+        """,
+        {"banded": ("doc_id BIGINT, band_id INT, band_val VARCHAR", rows)},
+    )
+    assert got == want == [(3, 4)]
+
+
 def test_repetition_stats_detects_repetitive_doc(spark):
     """A doc that repeats one phrase must score near-1 dup-trigram
     fraction and high top-word fraction; varied prose must not."""

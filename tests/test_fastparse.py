@@ -89,6 +89,12 @@ def test_fast_handles_edge_markup():
         # a downlevel-revealed conditional comment: two complete comments
         b"<!--[if !IE]><!--><p>revealed paragraph long enough to be kept here ok</p>"
         b"<!--<![endif]--><p>and a second paragraph long enough to be kept ok</p>",
+        # a self-closing '/' opens and closes the element, so the text
+        # after it is not inside a 'p'; a '/' an unquoted attribute
+        # value takes (href=/x/) does not close the tag
+        b"<p/>council minutes long enough to be kept as real page content today",
+        b'<p class="x"/>text after a self-closing paragraph long enough to keep ok',
+        b"<a href=/x/>text inside a link whose unquoted href ends in a slash ok</a>",
     ]
     for c in cases:
         _same(c)

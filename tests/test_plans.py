@@ -297,3 +297,70 @@ def test_stratified_sample_has_partial_rank_limit(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(sampling.stratified_sample(docs, "source", "doc_id", 3))
     assert "WindowGroupLimit" in plan and ", Partial" in plan, plan[:3000]
+
+
+def _counting_rows(spark, monkeypatch, *names):
+    """Wrap the text kernel's ``doctext.<name>`` row functions so each
+    call adds 1 to an accumulator: {name: accumulator}."""
+    from cvocr_spark.operators import doctext
+
+    def counting(fn, acc):
+        def row(text, **kw):
+            acc.add(1)
+            return fn(text, **kw)
+        return row
+
+    accs = {n: spark.sparkContext.accumulator(0) for n in names}
+    for n, acc in accs.items():
+        monkeypatch.setattr(doctext, n, counting(getattr(doctext, n), acc))
+    return accs
+
+
+def test_pair_operators_run_the_text_kernel_once(spark, monkeypatch):
+    """The LSH pair operators pair each guarded bucket with one
+    aggregate, never a self-join over the band frame: the plan holds
+    ONE Arrow kernel node (a self-join has one per side, and over a
+    persisted input the kernel then runs once per side), the
+    aggregate groups by the guard's window partitioning without an
+    exchange of its own, and the kernel evaluates each doc once."""
+    from cvocr_spark.operators import dedup, simhash64
+
+    docs = dedup.with_injected_dups(
+        spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    ).persist()
+    n = docs.count()
+    accs = _counting_rows(spark, monkeypatch, "_minhash_row", "_simhash64_row")
+    for fn, acc in ((dedup.minhash_lsh_pairs, accs["_minhash_row"]),
+                    (dedup.minhash_lsh_pairs_wide, accs["_minhash_row"]),
+                    (simhash64.simhash64_neardup_pairs, accs["_simhash64_row"])):
+        df = fn(docs)
+        plan = _plan(df)
+        assert plan.count("MapInArrow ") == 1, plan[:4000]
+        below = plan[plan.index("ObjectHashAggregate"):]
+        assert "Exchange" not in below[: below.index("Window [")], plan[:4000]
+        before = acc.value
+        assert df.collect(), fn.__name__
+        assert acc.value - before == n, fn.__name__
+    docs.unpersist()
+
+
+def test_curation_evaluates_each_text_kernel_once(spark, tmp_path, monkeypatch):
+    """One curate_corpus(cache=True), through its CC edge aggregate and
+    its manifest write, evaluates the repetition kernel once per
+    document and the minhash kernel once per quality survivor."""
+    from cvocr_spark.operators import dedup, textstats
+    from cvocr_spark.plans.curate import curate_corpus, release
+
+    docs = dedup.with_injected_dups(
+        spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    )
+    accs = _counting_rows(spark, monkeypatch, "_repetition_row", "_minhash_row")
+    m = curate_corpus(docs)
+    m.write.parquet(str(tmp_path / "manifest"))
+    release(m)
+    rep, mh = accs["_repetition_row"].value, accs["_minhash_row"].value
+    monkeypatch.undo()
+    n_docs = docs.count()
+    n_survivors = textstats.corpus_filter(docs).filter("keep").count()
+    assert 0 < n_survivors < n_docs
+    assert (rep, mh) == (n_docs, n_survivors)
