@@ -19,10 +19,11 @@ inputs (tests/test_fastparse.py) — while doing one regex pass:
 Lenient by construction: anything that doesn't lex as a tag is text;
 unmatched end tags are ignored; unclosed tags pop lazily (the clamp
 sanitation of the reference, preprocess.h:187-205).  ``<!-->`` and
-``<!--->`` are empty comments and an unterminated ``<!--`` runs to EOF,
-as in HTML5, where the reference keeps them as text when no later
-``-->`` closes them; ``</>`` and ``</`` before a non-letter are dropped
-up to ``>``, and ``</ p>`` ends a ``p``, as in the reference.  A start
+``<!--->`` are empty comments, ``--!>`` closes a comment and an
+unterminated ``<!--`` runs to EOF, as in HTML5, where the reference
+keeps them as text when no later ``-->`` closes them; ``</>`` and
+``</`` before a non-letter are dropped up to ``>``, and ``</ p>`` ends
+a ``p``, as in the reference.  A start
 tag is self-closing when HTMLParser's attribute lexing leaves ``/>``:
 ``<p/>`` opens and closes a ``p``, ``<a href=/x/>`` only opens an ``a``.
 """
@@ -44,7 +45,8 @@ from .kernel import (
 )
 
 TOKEN_RE = re.compile(
-    r"<!--(?:-?>|.*?(?:-->|$))"              # comments (empty: <!--> <!--->;
+    r"<!--(?:-?>|.*?(?:--!?>|$))"            # comments (empty: <!--> <!--->;
+    #                                          '--!>' closes one too;
     #                                          unterminated: to EOF)
     r"|<!\[CDATA\[.*?(?:\]\]>|$)"            # CDATA blobs
     r"|<[!?][^>]*(?:>|$)"                    # doctype / PIs / bogus decls

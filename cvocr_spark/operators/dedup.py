@@ -110,6 +110,7 @@ def exact_dedup_sql(corpus: str = "documents") -> str:
 
 
 MINHASH_K = 8
+MINHASH_WIDTH = 14  # hex digits per double-hash half
 BANDS = 4  # 4 bands x 2 rows
 MAX_BUCKET = 100  # hot-bucket guard: band buckets larger than this are skipped
 
@@ -117,7 +118,7 @@ MAX_BUCKET = 100  # hot-bucket guard: band buckets larger than this are skipped
 def minhash_signatures(docs: DataFrame) -> DataFrame:
     """k=8 minhashes over distinct 3-word shingles; one md5 per shingle
     (14-hex double-hash halves, h1 + 7*h2 < 2^59)."""
-    return doctext.minhash(docs, MINHASH_K, 14)
+    return doctext.minhash(docs, MINHASH_K, MINHASH_WIDTH)
 
 
 def _band(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -138,7 +139,12 @@ def _band(sigs: DataFrame, bands: int, rows: int) -> DataFrame:
 
 
 def _banded(docs: DataFrame) -> DataFrame:
-    return _band(minhash_signatures(docs), BANDS, MINHASH_K // BANDS)
+    """The raw k=8 band rows of ``docs``.  A frame that carries its
+    signatures (mh0 .. mh7, as the curation's graded frame does) is
+    banded as it stands; any other is signed by the text kernel."""
+    carried = all(f"mh{j}" in docs.columns for j in range(MINHASH_K))
+    sigs = docs if carried else minhash_signatures(docs)
+    return _band(sigs, BANDS, MINHASH_K // BANDS)
 
 
 def _bucket_sizes(banded: DataFrame) -> DataFrame:
@@ -184,14 +190,24 @@ def _bucket_pairs(safe: DataFrame, keys, member) -> DataFrame:
     self-join, the frame (and the signature kernel under it) is
     evaluated once, and the aggregate groups by the guard's own window
     partitioning, so it adds no exchange.  Buckets with a NULL key pair
-    nothing, as under an equi-join."""
-    m = F.sort_array(F.collect_list(member)).alias("m")
+    nothing, as under an equi-join.
+
+    No filter sits between the keys and the aggregate (a NULL-key
+    bucket is emptied in the aggregate's output), and the generators
+    are the ``_outer`` forms, whose empty rows are dropped at the end:
+    the optimizer infers and pushes filters from a key filter and from
+    plain generators, and over keys computed through many aliases (the
+    cosine buckets' dot products) inferring them never finishes."""
+    keyed = F.lit(True)
+    for k in keys:
+        keyed = keyed & F.col(k).isNotNull()
+    m = F.when(keyed, F.sort_array(F.collect_list(member))).alias("m")
     return (
-        safe.dropna(subset=list(keys))
-        .groupBy(*keys)
+        safe.groupBy(*keys)
         .agg(m)
-        .select("m", F.posexplode("m").alias("i", "x"))
-        .select("x", F.explode(F.expr("slice(m, i + 2, size(m) - i - 1)")).alias("y"))
+        .select("m", F.posexplode_outer("m").alias("i", "x"))
+        .select("x", F.explode_outer(F.expr("slice(m, i + 2, size(m) - i - 1)")).alias("y"))
+        .filter(F.col("y").isNotNull())
     )
 
 
@@ -384,8 +400,10 @@ def verify_pairs_jaccard(
 def minhash_verified_dups(docs: DataFrame, threshold: float = 0.8) -> DataFrame:
     """The full near-dup pipeline: LSH candidates -> exact Jaccard
     verification (the n-gram Jaccard capability, applied where it is
-    linear: after candidate generation)."""
-    return verify_pairs_jaccard(minhash_lsh_pairs(docs), docs, threshold)
+    linear: after candidate generation) — the band, guard, pair and
+    verify chain of ``minhash_verified_dups_banded`` over the bands
+    of ``docs``."""
+    return minhash_verified_dups_banded(docs, _banded(docs), threshold)
 
 
 def minhash_verified_dups_sql(corpus: str = "documents", threshold: float = 0.8) -> str:

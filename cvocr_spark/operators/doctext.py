@@ -14,6 +14,9 @@ Spark expressions over the kernel's integers.
 One output row per input row, so callers pass unique doc_ids (the
 ``dedup_incremental_pairs`` contract).  NULL text gets no repetition or
 simhash row (it has no words), and a minhash and fingerprint row.
+``repetition_minhash`` is the curation's one pass: the repetition
+counts and the minhash from one words/shingles split, the text passed
+through, and a row of NULL features for NULL text.
 """
 
 from __future__ import annotations
@@ -30,6 +33,8 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..session import ensure_shipped
 
+# the repetition counts, in output order
+_REPETITION = "n_tokens n_types top_c n_shingles n_distinct_shingles".split()
 _MASK32 = np.uint64((1 << 32) - 1)
 _BITS32 = np.arange(32, dtype=np.uint64)
 
@@ -39,9 +44,10 @@ def words(text: str) -> list[str]:
 
 
 def shingles(text: str | None) -> list[str]:
-    if text is None:
-        return [""]
-    w = words(text)
+    return [""] if text is None else _shingles(words(text))
+
+
+def _shingles(w: list[str]) -> list[str]:
     if len(w) < 3:
         return [" ".join(w)]
     return [f"{a} {b} {c}" for a, b, c in zip(w, w[1:], w[2:])]
@@ -65,20 +71,38 @@ def _hex_int(d: np.ndarray, off: int, n: int) -> np.ndarray:
     return (v & np.uint64((1 << 4 * n) - 1)).astype(np.int64)
 
 
-def _minhash_row(text, k: int, width: int):
-    """mh_j = min over distinct shingles of h1 + j*h2, h1 and h2 the
+def _minhash(distinct: set[str], k: int, width: int) -> list[int]:
+    """mh_j = min over the distinct shingles of h1 + j*h2, h1 and h2 the
     ``width``-hex halves of the shingle's md5."""
-    d = md5s(set(shingles(text)))
+    d = md5s(distinct)
     h1, h2 = _hex_int(d, 0, width), _hex_int(d, width, width)
     return (h1[:, None] + h2[:, None] * np.arange(k)).min(axis=0).tolist()
+
+
+def _minhash_row(text, k: int, width: int):
+    return _minhash(set(shingles(text)), k, width)
+
+
+def _counts(w: list[str], s: list[str], distinct: set[str]) -> tuple[int, ...]:
+    c = Counter(w)
+    return len(w), len(c), max(c.values()), len(s), len(distinct)
 
 
 def _repetition_row(text):
     if text is None:
         return None
-    w, s = words(text), shingles(text)
-    c = Counter(w)
-    return len(w), len(c), max(c.values()), len(s), len(set(s))
+    w = words(text)
+    s = _shingles(w)
+    return _counts(w, s, set(s))
+
+
+def _repetition_minhash_row(text, k: int, width: int):
+    if text is None:
+        return (None,) * (len(_REPETITION) + k)
+    w = words(text)
+    s = _shingles(w)
+    distinct = set(s)
+    return *_counts(w, s, distinct), *_minhash(distinct, k, width)
 
 
 def _simhash_half(w: list[str], salt: str) -> int:
@@ -102,12 +126,18 @@ def _fingerprint_row(text):
     return (f"{int(hi):016x}{int(lo):016x}",)
 
 
-def _map(docs: DataFrame, fields: list[tuple[str, T.DataType]], row) -> DataFrame:
+def _map(
+    docs: DataFrame, fields: list[tuple[str, T.DataType]], row, with_text: bool = False
+) -> DataFrame:
     """The one batch driver: (doc_id, text) -> (doc_id, *fields), one
-    row per text from ``row(text)``; a None row drops the document."""
+    row per text from ``row(text)``; a None row drops the document.
+    ``with_text`` passes the text through after doc_id."""
     ensure_shipped(docs.sparkSession)
     slim = docs.select("doc_id", "text")
-    schema = T.StructType([slim.schema["doc_id"], *(T.StructField(n, t) for n, t in fields)])
+    through = ["doc_id", "text"] if with_text else ["doc_id"]
+    schema = T.StructType(
+        [*(slim.schema[c] for c in through), *(T.StructField(n, t) for n, t in fields)]
+    )
     arrow = to_arrow_schema(schema)
 
     def run(batches):
@@ -115,9 +145,10 @@ def _map(docs: DataFrame, fields: list[tuple[str, T.DataType]], row) -> DataFram
             rows = [row(t) for t in rb.column("text").to_pylist()]
             kept = [r for r in rows if r is not None]
             cols = list(zip(*kept)) if kept else [()] * len(fields)
-            ids = rb.column("doc_id").filter(pa.array([r is not None for r in rows]))
-            arrays = [pa.array(c, f.type) for c, f in zip(cols, list(arrow)[1:])]
-            yield pa.RecordBatch.from_arrays([ids, *arrays], schema=arrow)
+            mask = pa.array([r is not None for r in rows])
+            passed = [rb.column(c).filter(mask) for c in through]
+            arrays = [pa.array(c, f.type) for c, f in zip(cols, list(arrow)[len(through):])]
+            yield pa.RecordBatch.from_arrays([*passed, *arrays], schema=arrow)
 
     return slim.mapInArrow(run, schema)
 
@@ -129,11 +160,19 @@ def minhash(docs: DataFrame, k: int, width: int) -> DataFrame:
 
 
 def repetition(docs: DataFrame) -> DataFrame:
-    """(doc_id, n_tokens, n_types, top_c, n_shingles,
-    n_distinct_shingles) bigint: word count, distinct words, count of
-    the most frequent word, shingle count, distinct shingles."""
-    names = "n_tokens n_types top_c n_shingles n_distinct_shingles".split()
-    return _map(docs, [(n, T.LongType()) for n in names], _repetition_row)
+    """(doc_id, text, n_tokens, n_types, top_c, n_shingles,
+    n_distinct_shingles): word count, distinct words, count of the most
+    frequent word, shingle count, distinct shingles (bigint), with the
+    text passed through for the gates that also read it."""
+    return _map(docs, [(n, T.LongType()) for n in _REPETITION], _repetition_row, True)
+
+
+def repetition_minhash(docs: DataFrame, k: int, width: int) -> DataFrame:
+    """(doc_id, text, <repetition counts>, mh0 .. mh{k-1}) bigint, one
+    row per document: ``repetition`` and ``minhash`` from one pass, and
+    NULL counts and minhashes for NULL text."""
+    fields = [(n, T.LongType()) for n in _REPETITION] + [(f"mh{j}", T.LongType()) for j in range(k)]
+    return _map(docs, fields, partial(_repetition_minhash_row, k=k, width=width), True)
 
 
 def simhash64(docs: DataFrame) -> DataFrame:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import portable as P
-from .dedup import _safe_banded
+from .dedup import _bucket_pairs, _safe_banded
 
 N_PLANES = 4
 DIM = 64
@@ -72,7 +72,7 @@ def cosine_topk_sql(n_queries: int = 5, k: int = 5) -> str:
     """
 
 
-MAX_BUCKET = 2000  # hot-bucket guard for the neardup self-join
+MAX_BUCKET = 2000  # hot-bucket guard for the neardup bucket pairing
 
 
 def cosine_neardup_pairs(
@@ -84,9 +84,9 @@ def cosine_neardup_pairs(
     """Embedding-cosine near-dup pairs among vec_id < limit_id, with
     injected exact copies (vec_id + 100000) so the fixture is non-empty.
 
-    SCALE PATH (VERDICT r1): the self-join runs WITHIN sign-projection
+    SCALE PATH (VERDICT r1): pairs are formed WITHIN sign-projection
     LSH buckets, never all-pairs — at 0.995 cosine two vectors almost
-    surely share every hyperplane sign, so per-bucket joins find them
+    surely share every hyperplane sign, so per-bucket pairing finds them
     while the cross product never materializes.  Buckets above
     ``max_bucket`` are dropped (skew guard).  Recall < 1 by
     construction (disclosed); tests/test_ann.py measures it against the
@@ -96,16 +96,19 @@ def cosine_neardup_pairs(
         "vec_id", F.col("vec_id") + 100000
     )
     corpus = with_bucket(base.unionByName(dups))
-    # as the executed (AQE) plan shows: the 4-dot-product bucket
-    # expression and its bkt exchange run ONCE, the self-join's second
-    # side reading them back as a ReusedExchange; the window count
-    # runs once per side, and at the default limit AQE broadcasts one
-    # side instead of joining on the bkt partitioning
+    # each guarded bucket is paired by ONE aggregate (dedup._bucket_pairs)
+    # over the guard's own bkt partitioning: the bucket expression, its
+    # exchange and the guard's window count each run once
     safe = _safe_banded(corpus, max_bucket, ("bkt",))
-    a = safe.select("bkt", F.col("vec_id").alias("a"), F.col("embedding").alias("ea"))
-    b = safe.select("bkt", F.col("vec_id").alias("b"), F.col("embedding").alias("eb"))
+    member = F.struct(F.col("vec_id"), F.col("embedding"))
     return (
-        a.join(b, ["bkt"])
+        _bucket_pairs(safe, ("bkt",), member)
+        .select(
+            F.col("x.vec_id").alias("a"),
+            F.col("y.vec_id").alias("b"),
+            F.col("x.embedding").alias("ea"),
+            F.col("y.embedding").alias("eb"),
+        )
         .filter(F.col("a") < F.col("b"))
         .withColumn("sim", F.round(F.expr(P.cosine_spark("ea", "eb")), 6))
         .filter(F.col("sim") >= threshold)

@@ -62,23 +62,28 @@ FROM documents
 """
 
 
+def _quality(n_tokens, n_types):
+    """The quality score from a word count, a distinct-word count and
+    the stopwords of ``text``: the length, stopword and type/token
+    ratios composed into one deterministic score (the graft of the
+    reference's patch shape-quality predicate, cut.h:324-356)."""
+    n = n_tokens.cast("double")
+    stop_ratio = _n_stop() / n
+    len_score = F.least(F.lit(1.0), n / 100.0)
+    return F.round(0.5 * len_score + 0.3 * (1.0 - stop_ratio) + 0.2 * (n_types / n), 4)
+
+
 def quality_score(docs: DataFrame) -> DataFrame:
     """Quality scoring: length + stopword + type/token ratios composed
-    into one deterministic score (the graft of the reference's patch
-    shape-quality predicate, cut.h:324-356)."""
+    into one score (``_quality``), with the two ratios it reads."""
     words = F.split("text", " ")
-    n_tokens = F.size(words).cast("double")
-    n_stop = _n_stop()
-    stop_ratio = n_stop / n_tokens
-    type_ratio = F.size(F.array_distinct(words)) / n_tokens
-    len_score = F.least(F.lit(1.0), n_tokens / 100.0)
+    n_tokens = F.size(words)
+    n_types = F.size(F.array_distinct(words))
     return docs.select(
         "doc_id",
-        F.round(stop_ratio, 4).alias("stop_ratio"),
-        F.round(type_ratio, 4).alias("type_ratio"),
-        F.round(0.5 * len_score + 0.3 * (1.0 - stop_ratio) + 0.2 * type_ratio, 4).alias(
-            "quality"
-        ),
+        F.round(_n_stop() / n_tokens.cast("double"), 4).alias("stop_ratio"),
+        F.round(n_types / n_tokens.cast("double"), 4).alias("type_ratio"),
+        _quality(n_tokens, n_types).alias("quality"),
     )
 
 
@@ -193,11 +198,17 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
         "doc_id",
         F.col("n_tokens").cast("int").alias("n_tokens"),
         F.round(F.col("n_types") / F.col("n_tokens"), 4).alias("distinct_word_ratio"),
-        F.round(F.col("top_c") / F.col("n_tokens"), 4).alias("top_word_fraction"),
-        F.round(
-            1.0 - F.col("n_distinct_shingles") / F.col("n_shingles"), 4
-        ).alias("dup_trigram_fraction"),
+        _top_word_fraction().alias("top_word_fraction"),
+        _dup_trigram_fraction().alias("dup_trigram_fraction"),
     )
+
+
+def _top_word_fraction():
+    return F.round(F.col("top_c") / F.col("n_tokens"), 4)
+
+
+def _dup_trigram_fraction():
+    return F.round(1.0 - F.col("n_distinct_shingles") / F.col("n_shingles"), 4)
 
 
 def repetition_stats_sql(corpus: str = "SELECT * FROM documents") -> str:
@@ -235,32 +246,37 @@ FILTER_MAX_TOP_WORD = 0.2
 FILTER_MIN_TOKENS = 20
 
 
+def grade(feats: DataFrame) -> DataFrame:
+    """The quality gates as column expressions over the text kernel's
+    rows (``doctext.repetition`` or ``doctext.repetition_minhash``:
+    doc_id, text and the repetition counts): adds ``quality``,
+    ``dup_trigram_fraction``, ``drop_reasons`` (the failed gates named,
+    ','-joined in a fixed order) and ``keep``.  NULL text, whose counts
+    are NULL, is dropped with reason 'no_text'."""
+    quality = _quality(F.col("n_tokens"), F.col("n_types"))
+    dup = _dup_trigram_fraction()
+    checks = [
+        ("short", F.col("n_tokens") < FILTER_MIN_TOKENS),
+        ("low_quality", quality < FILTER_MIN_QUALITY),
+        ("repetitive", dup > FILTER_MAX_DUP_TRIGRAM),
+        ("top_heavy", _top_word_fraction() > FILTER_MAX_TOP_WORD),
+    ]
+    reasons = F.when(F.col("text").isNull(), F.lit("no_text")).otherwise(
+        F.concat_ws(",", *[F.when(cond, F.lit(name)) for name, cond in checks])
+    )
+    return feats.withColumns(
+        {"quality": quality, "dup_trigram_fraction": dup, "drop_reasons": reasons}
+    ).withColumn("keep", F.col("drop_reasons") == "")
+
+
 def corpus_filter(docs: DataFrame) -> DataFrame:
     """The composed keep/drop decision over all text-quality gates —
     what a training-data pipeline actually wires after extraction:
     length + quality score + repetition filters, with the failed gates
-    named per doc (deterministic ','-joined reason string).  One join
-    of the two per-doc stat frames; all gates JVM expressions."""
-    q = quality_score(docs).select("doc_id", "quality")
-    r = repetition_stats(docs)
-    checks = [
-        ("short", F.col("n_tokens") < FILTER_MIN_TOKENS),
-        ("low_quality", F.col("quality") < FILTER_MIN_QUALITY),
-        ("repetitive", F.col("dup_trigram_fraction") > FILTER_MAX_DUP_TRIGRAM),
-        ("top_heavy", F.col("top_word_fraction") > FILTER_MAX_TOP_WORD),
-    ]
-    reasons = F.concat_ws(
-        ",", *[F.when(cond, F.lit(name)) for name, cond in checks]
-    )
-    return (
-        q.join(r, "doc_id")
-        .select(
-            "doc_id",
-            "quality",
-            "dup_trigram_fraction",
-            reasons.alias("drop_reasons"),
-        )
-        .withColumn("keep", F.col("drop_reasons") == "")
+    named per doc (``grade``).  One kernel pass, no join; NULL text has
+    no repetition row and so no decision row."""
+    return grade(doctext.repetition(docs)).select(
+        "doc_id", "quality", "dup_trigram_fraction", "drop_reasons", "keep"
     )
 
 

@@ -7,8 +7,9 @@ team actually runs, wired from the repo's own operators in the order a
                  pass-through — both entry points are supported)
   2. hygiene     pii_scrub (redacted text is what ships) +
                  script_profile (routing metadata)
-  3. quality     corpus_filter gates (length / quality / repetition),
-                 drop reasons carried, not discarded
+  3. quality     the corpus_filter gates (textstats.grade: length /
+                 quality / repetition), drop reasons carried, not
+                 discarded
   4. dedup       exact (length, md5) then MinHash-LSH -> Jaccard-verify
                  -> connected components -> one keeper per cluster
   5. decontam    eval-set n-gram overlap flag (broadcast semi-join)
@@ -35,6 +36,7 @@ from pyspark.sql import functions as F
 from .. import durable
 from ..operators import decontam as _dc
 from ..operators import dedup as _dd
+from ..operators import doctext as _dt
 from ..operators import sampling as _sp
 from ..operators import scrub as _sc
 from ..operators import textstats as _ts
@@ -68,50 +70,68 @@ def curate_corpus(
     Manifests are byte-identical to the in-plan form (asserted in
     tests/test_curate.py).
 
+    The per-document text work is ONE kernel stage: the repetition
+    counts behind the quality gates and the k=8 minhash signatures
+    behind the pair stage come from one ``mapInArrow`` pass per
+    document, in ``spark.sql.shuffle.partitions`` tasks.
+
     CACHING CONTRACT (ADVICE r4): the returned frame references a
-    persisted intermediate (the graded corpus: doc_id, text, keep,
-    drop_reasons — four consumers).
+    persisted intermediate, the graded corpus (doc_id, text, keep,
+    drop_reasons, mh0 .. mh7), hash-partitioned by doc_id.  Its
+    consumers are hygiene (scrub, script), the pair stage (which bands
+    the stored signatures, so the kernel does not run again), cluster
+    resolution, the keeper probe and the manifest's gate columns.
     Call ``release(manifest)`` once the manifest has been materialized
     (written / collected); otherwise each curate_corpus call leaks one
     cached frame for the session's life — the same leak class ADVICE
     r2 flagged for ivf._train.  run_curation_job.py and the contract
     query both do this.
     """
-    base = docs.select("doc_id", "text")
-
-    # 2. hygiene: scrubbed text + script routing metadata
-    scrubbed = _sc.pii_scrub(base)
-    script = _sc.script_profile(base).select("doc_id", "main_script")
-
-    # 3. quality gates (over the ORIGINAL text: '<EMAIL>' tokens must
-    # not perturb quality statistics), graded onto the INPUT frame: a
-    # NULL-text doc has no repetition-stats row on either engine
-    # (shingles of NULL are undefined), but it must still get a manifest
-    # decision — keep=false, reason 'no_text'.
-    graded = base.join(
-        _ts.corpus_filter(base).select("doc_id", "keep", "drop_reasons"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        "text",
-        F.coalesce("keep", F.lit(False)).alias("keep"),
-        F.coalesce("drop_reasons", F.lit("no_text")).alias("drop_reasons"),
+    spark = docs.sparkSession
+    # 2-3. the per-document text work in ONE kernel pass per document:
+    # the repetition counts and the k=8 minhash from one words/shingles
+    # split, the text passed through.  The kernel reads its input
+    # hash-partitioned by doc_id into an explicit
+    # spark.sql.shuffle.partitions (a count AQE does not coalesce), so
+    # it runs one task per core whatever the input's file layout.  Its
+    # output is re-keyed by the same hash into the same count (each
+    # row stays in its partition): the kernel's output columns are new
+    # to the planner, and without this every doc_id join downstream
+    # shuffles graded again and AQE coalesces those shuffles, decontam's
+    # gram stage down to one task.  The quality gates (over the
+    # ORIGINAL text: '<EMAIL>' tokens must not perturb quality
+    # statistics) are column expressions over the kernel's counts; a
+    # NULL-text doc has no counts but still gets a manifest decision:
+    # keep=false, reason 'no_text'.
+    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    base = docs.select("doc_id", "text").repartition(n_tasks, "doc_id")
+    sigs = [f"mh{j}" for j in range(_dd.MINHASH_K)]
+    graded = (
+        _ts.grade(_dt.repetition_minhash(base, _dd.MINHASH_K, _dd.MINHASH_WIDTH))
+        .select("doc_id", "text", "keep", "drop_reasons", *sigs)
+        .repartition(n_tasks, "doc_id")
     )
 
-    # 4. dedup over quality survivors only.  graded feeds the pair
-    # pipeline, cluster resolution, the keeper probe and the manifest's
-    # gate columns — persist so the gate pipeline (the repetition
-    # kernel) runs once, not once per consumer.  A crawl-scale run
-    # materializes each stage to the lake instead (the dedup-index
-    # build/serve split, dedup.py) — this in-plan composition is the
-    # single-job form.
-    # ``cache=False`` trades the gate recompute for zero session
-    # residue — the shape the oracled contract query uses (the driver
-    # collects the returned frame and never gets a release() window)
+    # graded feeds hygiene, the pair pipeline (its signatures are
+    # banded as they stand), cluster resolution, the keeper probe and
+    # the manifest's gate columns — persist so the kernel runs once,
+    # not once per action (the CC edge count is an action of its own).
+    # A crawl-scale run materializes each stage to the lake instead (the
+    # dedup-index build/serve split, dedup.py) — this in-plan
+    # composition is the single-job form.  ``cache=False`` trades that
+    # recompute for zero session residue — the shape the oracled
+    # contract query uses (the driver collects the returned frame and
+    # never gets a release() window).
     if cache:
         graded = graded.persist()
-    survivors = graded.filter("keep").select("doc_id", "text")
+
+    # hygiene: scrubbed text + script routing metadata
+    scrubbed = _sc.pii_scrub(graded)
+    script = _sc.script_profile(graded).select("doc_id", "main_script")
+
+    # 4. dedup over quality survivors only
+    survivors = graded.filter("keep").select("doc_id", "text", *sigs)
     if dedup_index_path is not None:
-        spark = docs.sparkSession
         # stale-index guard (r6, ADVICE r5): the _BUILT marker alone
         # let a re-run with the same path but a CHANGED corpus (or
         # changed quality gates -> different survivors) silently serve
@@ -185,8 +205,8 @@ def release(manifest: DataFrame) -> None:
     """Unpersist the cached intermediates behind a curate_corpus
     manifest.  Call AFTER materializing (write/collect) — the manifest
     plan references the cached graded frame lazily, so releasing
-    first would just silently recompute the gate pipeline once per
-    consumer."""
+    first would just silently rerun the text kernel once per
+    action."""
     for df in getattr(manifest, "_curate_cached", []):
         df.unpersist()
 

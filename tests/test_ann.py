@@ -84,6 +84,47 @@ def test_lsh_neardup_recall_vs_exact(spark):
     assert lsh <= exact  # no false positives (both verify exact cosine)
 
 
+def test_cosine_neardup_pairs_guarded_buckets_equal_duckdb(spark):
+    """cosine_neardup_pairs pairs each guarded bucket with one aggregate
+    (dedup._bucket_pairs): its rows equal the DuckDB restatement's
+    guard + self-join at the defaults and over every vector (with its
+    injected copies) at a bucket limit of 33, where the guard drops
+    about half of the 16 buckets, and the executed plan
+    holds ONE Window node (the guard's count, once, not once per
+    self-join side)."""
+    import duckdb
+
+    from cvocr_spark.operators.similarity import (
+        _bucket_expr_duck,
+        cosine_neardup_pairs,
+        cosine_neardup_pairs_sql,
+    )
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{SF_DIR}/embeddings.parquet'")
+    guarded = {"limit_id": 1000, "max_bucket": 33}
+    hot = con.execute(f"""
+        WITH c AS (
+          SELECT vec_id, embedding FROM embeddings WHERE vec_id < 1000
+          UNION ALL
+          SELECT vec_id + 100000, embedding FROM embeddings
+          WHERE vec_id < 1000 AND vec_id % 20 = 0
+        )
+        SELECT count(*) FROM (
+          SELECT {_bucket_expr_duck("c")} AS bkt FROM c GROUP BY bkt HAVING count(*) > 33
+        )
+    """).fetchone()[0]
+    assert hot > 0  # the guard drops buckets at this limit
+    for kw in ({}, guarded):
+        df = cosine_neardup_pairs(emb, **kw)
+        got = sorted(map(tuple, df.collect()))
+        rows = con.execute(cosine_neardup_pairs_sql(**kw)).fetchall()
+        assert got == sorted(rows) and got, kw
+        final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+        assert final.count("Window [") == 1, final[:4000]
+
+
 def test_ivf_ann_recall_and_self_hit(spark):
     """IVF with n_probe=2 of k=8 lists: every query finds itself (its
     own list is always probed) and recall@5 vs exact lands in

@@ -6,6 +6,8 @@ from __future__ import annotations
 import os
 import sys
 
+from pyspark.accumulators import AccumulatorParam
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("CVOCR_TEST_SF_DIR", "/root/testdata/sf0.01")
@@ -346,21 +348,70 @@ def test_pair_operators_run_the_text_kernel_once(spark, monkeypatch):
 
 def test_curation_evaluates_each_text_kernel_once(spark, tmp_path, monkeypatch):
     """One curate_corpus(cache=True), through its CC edge aggregate and
-    its manifest write, evaluates the repetition kernel once per
-    document and the minhash kernel once per quality survivor."""
-    from cvocr_spark.operators import dedup, textstats
+    its manifest write, evaluates the fused repetition + minhash row
+    function once per document, and the standalone repetition and
+    minhash row functions not at all: the pair stage bands the graded
+    frame's signatures instead of signing the survivors again."""
+    from cvocr_spark.operators import dedup
     from cvocr_spark.plans.curate import curate_corpus, release
 
     docs = dedup.with_injected_dups(
         spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
     )
-    accs = _counting_rows(spark, monkeypatch, "_repetition_row", "_minhash_row")
+    accs = _counting_rows(
+        spark, monkeypatch, "_repetition_minhash_row", "_repetition_row", "_minhash_row"
+    )
     m = curate_corpus(docs)
     m.write.parquet(str(tmp_path / "manifest"))
     release(m)
-    rep, mh = accs["_repetition_row"].value, accs["_minhash_row"].value
+    counts = {n: a.value for n, a in accs.items()}
     monkeypatch.undo()
-    n_docs = docs.count()
-    n_survivors = textstats.corpus_filter(docs).filter("keep").count()
-    assert 0 < n_survivors < n_docs
-    assert (rep, mh) == (n_docs, n_survivors)
+    assert counts == {
+        "_repetition_minhash_row": docs.count(), "_repetition_row": 0, "_minhash_row": 0
+    }
+
+
+def test_curation_kernel_runs_one_task_per_shuffle_partition(spark, tmp_path, monkeypatch):
+    """A corpus read from ONE file, plus its injected copies, has two
+    input partitions; the curation's kernel stage still runs in
+    spark.sql.shuffle.partitions tasks, and it is the only stage that
+    evaluates the kernel."""
+    from pyspark import TaskContext
+
+    from cvocr_spark.operators import dedup, doctext
+    from cvocr_spark.plans.curate import curate_corpus, release
+
+    class TaskCounts(AccumulatorParam):  # local: the workers cannot import this module
+        def zero(self, value):
+            return {}
+
+        def addInPlace(self, a, b):
+            for k, n in b.items():
+                a[k] = a.get(k, 0) + n
+            return a
+
+    one = str(tmp_path / "one")
+    spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text").coalesce(
+        1
+    ).write.parquet(one)
+    docs = dedup.with_injected_dups(spark.read.parquet(one))
+    assert docs.rdd.getNumPartitions() == 2
+    acc = spark.sparkContext.accumulator({}, TaskCounts())
+    fn = doctext._repetition_minhash_row
+
+    def row(text, **kw):
+        tc = TaskContext.get()
+        acc.add({(tc.stageId(), tc.partitionId()): 1})
+        return fn(text, **kw)
+
+    monkeypatch.setattr(doctext, "_repetition_minhash_row", row)
+    m = curate_corpus(docs)
+    m.write.parquet(str(tmp_path / "manifest"))
+    release(m)
+    monkeypatch.undo()
+    n_tasks = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    stages = {stage for stage, _ in acc.value}
+    assert len(stages) == 1, acc.value
+    info = spark.sparkContext.statusTracker().getStageInfo(stages.pop())
+    assert info.numTasks == n_tasks, info
+    assert len(acc.value) == n_tasks and sum(acc.value.values()) == docs.count(), acc.value
